@@ -9078,15 +9078,15 @@ WHERE rn <= 20
 DRIVER_WINDOW = [
     # (a) r14 plan changes (value-identical rewrites) — changed-plans-
     # first per the r7 rotation policy
-    "kendall_tau_grouped", "centroid_drift_recall",
+    "kendall_tau_grouped", "centroid_drift_recall", "audio_headers",
     # (b) the 10 oldest-verified rows (last hash-checked in the r9
     # window)
     "regional_volume", "segment_breakdown", "shipping_priority",
     "source_overlap", "spearman_corr", "spearman_matrix",
     "substudy_filter", "token_budget_mix", "top_segments", "trigram_lm",
-    # (c) 38 oldest fills (r10-era), name order; the 10 remaining
-    # r10-era rows (quality_percentile .. winnow_overlap_pairs) queue
-    # for the next rotation
+    # (c) 37 oldest fills (r10-era), name order; the 11 remaining
+    # r10-era rows (prefix_jaccard_pairs, quality_percentile ..
+    # winnow_overlap_pairs) queue for the next rotation
     "ann_recall_report", "asof_latest_order", "attribute_spans",
     "boilerplate_strip", "c4_rules", "chunk_documents",
     "corpus_curation", "corpus_curation_v3", "decontam_fraction",
@@ -9099,7 +9099,7 @@ DRIVER_WINDOW = [
     "ks_acctbal_segments", "lang_id", "lm_surprisal",
     "media_features", "media_headers", "memorization_risk",
     "ngram_jaccard", "packing_efficiency", "pii_scrub",
-    "pmi_collocations", "prefix_jaccard_pairs",
+    "pmi_collocations",
 ]
 
 
@@ -9108,8 +9108,8 @@ def internal_plan_frames() -> dict[str, Callable[[SparkSession, str],
     """Lazy INTERNAL DataFrames whose plans the golden-plan pins freeze
     when the contract query itself executes eagerly (r8 advisory: the
     spearman queries run ``correlation_matrix``, which calls ``.first()``
-    + ``createDataFrame``, so their own executed plan is just a Scan
-    ExistingRDD — a vacuous pin).  Each entry returns the pre-execution
+    + ``local_frame``, so their own executed plan is just a
+    LocalTableScan — a vacuous pin).  Each entry returns the pre-execution
     rank/aggregate frame (``stats.correlation_aggregate``) whose plan
     contains the distributed midrank pipeline the pin exists to protect
     (e.g. a data-sized global window reappearing)."""

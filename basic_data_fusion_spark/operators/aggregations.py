@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
+
 
 def count_distinct_keys(df: DataFrame, key: str, approx: bool = False,
                         rsd: float = 0.05) -> DataFrame:
@@ -111,9 +113,10 @@ def numeric_summary(df: DataFrame, columns: list[str]) -> DataFrame:
                      (100.0 * (total_n - n)) / total_n if total_n else 0.0,
                      row[f"mean__{c}"], row[f"median__{c}"], row[f"std__{c}"],
                      row[f"min__{c}"], row[f"max__{c}"]))
-    return spark.createDataFrame(
-        data, "column string, n_non_null long, n_missing long, pct_missing double, "
-              "mean double, median double, std double, min double, max double")
+    return local_frame(
+        spark, data,
+        "column string, n_non_null long, n_missing long, pct_missing double, "
+        "mean double, median double, std double, min double, max double")
 
 
 def exact_quantiles(df: DataFrame, columns: list[str],
@@ -260,7 +263,7 @@ def categorical_summary(df: DataFrame, columns: list[str], top_k: int = 5) -> Da
                .alias("__tk")))
     # literal column list keeps all-NULL columns in the output (they have
     # no counts rows), mirroring the previous materialized behavior
-    cols_df = spark.createDataFrame([(c,) for c in columns], "column string")
+    cols_df = local_frame(spark, [(c,) for c in columns], "column string")
     return (cols_df.join(totals, "column", "left").join(tk, "column", "left")
             .select(
                 "column",
@@ -307,9 +310,9 @@ def filter_impact_report(base_df: DataFrame, key: str,
         cum_pct = (100.0 * (baseline - remaining)) / baseline if baseline else 0.0
         rows.append((label, remaining, removed, pct, cum_pct))
         prev = remaining
-    return spark.createDataFrame(
-        rows, "step string, n_remaining long, n_removed long, "
-              "pct_removed double, cum_pct_removed double")
+    return local_frame(
+        spark, rows, "step string, n_remaining long, n_removed long, "
+                     "pct_removed double, cum_pct_removed double")
 
 
 def filter_impact_individual(base_df: DataFrame, key: str,
@@ -333,8 +336,9 @@ def filter_impact_individual(base_df: DataFrame, key: str,
         removed = baseline - remaining
         pct = (100.0 * removed) / baseline if baseline else 0.0
         rows.append((label, remaining, removed, pct))
-    return spark.createDataFrame(
-        rows, "step string, n_remaining long, n_removed long, pct_removed double")
+    return local_frame(
+        spark, rows,
+        "step string, n_remaining long, n_removed long, pct_removed double")
 
 
 def filtering_report(base_df: DataFrame, key: str,

@@ -12,11 +12,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..catalog import is_numeric_dtype
+from ..session import local_frame
 from .stats import column_statistics, correlation_matrix, uniform_sample
 
 # Missing-percentage severity tiers (reference: statistics.py:283-299).
 SEVERITY_HIGH = 50.0
 SEVERITY_MED = 20.0
+
+_MISSING_SCHEMA = "column string, n_missing long, pct_missing double, severity string"
+_MIXED_SCHEMA = "column string, n_values long, n_numeric long, mixed boolean"
 
 
 def missing_report(df: DataFrame) -> DataFrame:
@@ -24,7 +28,7 @@ def missing_report(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     total = df.count()
     if total == 0:
-        return spark.createDataFrame([], "column string, n_missing long, pct_missing double, severity string")
+        return local_frame(spark, [], _MISSING_SCHEMA)
     row = df.agg(*[F.count(F.when(F.col(c).isNull(), 1)).alias(c) for c in df.columns]).first()
     data = []
     for c in df.columns:
@@ -32,7 +36,7 @@ def missing_report(df: DataFrame) -> DataFrame:
         pct = (100.0 * miss) / total
         sev = "high" if pct > SEVERITY_HIGH else ("medium" if pct > SEVERITY_MED else "low")
         data.append((c, miss, pct, sev))
-    return spark.createDataFrame(data, "column string, n_missing long, pct_missing double, severity string")
+    return local_frame(spark, data, _MISSING_SCHEMA)
 
 
 def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
@@ -58,7 +62,7 @@ def mixed_type_columns(df: DataFrame, string_cols: list[str] | None = None) -> D
     spark = df.sparkSession
     cols = string_cols or [c for c, t in df.dtypes if t == "string"]
     if not cols:
-        return spark.createDataFrame([], "column string, n_values long, n_numeric long, mixed boolean")
+        return local_frame(spark, [], _MIXED_SCHEMA)
     aggs = []
     for c in cols:
         aggs.append(F.count(F.col(c)).alias(f"n__{c}"))
@@ -70,7 +74,7 @@ def mixed_type_columns(df: DataFrame, string_cols: list[str] | None = None) -> D
     for c in cols:
         n, num = row[f"n__{c}"], row[f"num__{c}"]
         data.append((c, n, num, bool(0 < num < n)))
-    return spark.createDataFrame(data, "column string, n_values long, n_numeric long, mixed boolean")
+    return local_frame(spark, data, _MIXED_SCHEMA)
 
 
 def quality_audit(df: DataFrame, key: str | None = None) -> dict:
@@ -143,9 +147,10 @@ def profiling_sections(df: DataFrame, numeric_cols: list[str] | None = None,
         data = [(c, row[f"n__{c}"], row["__total"] - row[f"n__{c}"],
                  row[f"mean__{c}"], row[f"median__{c}"], row[f"std__{c}"],
                  row[f"min__{c}"], row[f"max__{c}"]) for c in numeric]
-        stats_df = spark.createDataFrame(
-            data, "column string, n_non_null long, n_missing long, mean double, "
-                  "median double, std double, min double, max double")
+        stats_df = local_frame(
+            spark, data,
+            "column string, n_non_null long, n_missing long, mean double, "
+            "median double, std double, min double, max double")
     else:
         stats_df = numeric_summary(df, numeric).drop("pct_missing")
     sections: dict[str, DataFrame] = {

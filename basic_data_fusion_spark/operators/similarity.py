@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..caching import cache_pinned
 from ..functions.scalars import half_up_long
+from ..session import local_frame
 from ..sources.partitioning import spread_narrow
 
 
@@ -1135,7 +1136,7 @@ def label_cohesion(df: DataFrame, label_col: str = "label",
                   / F.first("n").cast("double")).alias("mean_cosine")))
 
 
-def ann_recall(exact: DataFrame, arms: dict[str, DataFrame],
+def ann_recall(exact: DataFrame, arms: dict[str, DataFrame] | DataFrame,
                k: int) -> DataFrame:
     """Recall@k report for approximate-nearest-neighbor tiers, computed
     in-engine: each arm's (query_id, neighbor_id) result set scores
@@ -1157,10 +1158,14 @@ def ann_recall(exact: DataFrame, arms: dict[str, DataFrame],
     a PERFECT arm below 1.0 — exactly the regime (tiny eval slices,
     filtered corpora) where a recall gate matters most.
 
+    ``arms`` is either a ``{name: (query_id, neighbor_id) frame}`` dict
+    or ONE pre-stacked frame with columns ``(arm, query_id,
+    neighbor_id)`` — one row per (arm, query, returned neighbor), for
+    callers that compute every arm in one plan.  No arms (an empty
+    dict or an empty stacked frame) yields an empty report.
+
     Returns (arm, query_id, n_returned, n_hits, recall_at_k).
     """
-    if isinstance(arms, dict) and not arms:
-        raise ValueError("ann_recall needs at least one arm to score")
     # |queries|·k rows, consumed by the hit join AND the per-query
     # count — without a pin the exact brute-force scan upstream runs
     # once per consumer (r13 opt, guide §2 "do the work once");
@@ -1175,6 +1180,10 @@ def ann_recall(exact: DataFrame, arms: dict[str, DataFrame],
         # that compute every arm in ONE plan (centroid_drift_report's
         # stacked probe, r14) skip the per-arm union
         tagged = arms.select("arm", "query_id", "neighbor_id")
+    elif not arms:
+        # the empty stacked frame, typed like the exact tier's ids
+        tagged = exact.select(F.lit(None).cast("string").alias("arm"),
+                              "query_id", "neighbor_id").where(F.lit(False))
     else:
         tagged = None
         for name in sorted(arms):
@@ -1451,9 +1460,12 @@ def centroid_drift_report(corpus: DataFrame, queries: DataFrame,
     # per additional centroid set.  The arms differ only in which cell
     # column / affinity array they read, so every per-arm relation
     # stacks under an arm INDEX: one posexplode fans the corpus to
-    # (arm, cell) rows map-side, one window picks every arm's probe
-    # cells, one join + one rank window scores all arms, one aggregate
-    # counts every arm's candidate volume.  Per-arm expressions,
+    # (arm, cell) rows map-side, one window plan picks every arm's
+    # probe cells, one join + one rank window scores all arms, one
+    # aggregate counts every arm's candidate volume.  The probe-cell
+    # relation (``q_cells``) is query-set-sized and unpinned: its window
+    # runs once for the scoring broadcast and once for the volume
+    # aggregate, which costs less than a persist.  Per-arm expressions,
     # orderings and tie-breaks are identical (the window partitions add
     # the arm index), so per-arm rows — and the SQL oracle — are
     # unchanged.
@@ -1502,8 +1514,8 @@ def centroid_drift_report(corpus: DataFrame, queries: DataFrame,
            .join(F.broadcast(sizes), ["__ai", "cell"])
            .groupBy("__ai")
            .agg(F.sum("__csz").cast("long").alias("__nct")))
-    arm_idx = corpus.sparkSession.createDataFrame(
-        [(i, n) for i, n in enumerate(names)], "__ai int, arm string")
+    arm_idx = local_frame(corpus.sparkSession,
+                          list(enumerate(names)), "__ai int, arm string")
     cands = (arm_idx.join(vol, "__ai", "left")
              .select("arm",
                      F.coalesce("__nct", F.lit(0).cast("long"))
@@ -1516,8 +1528,8 @@ def centroid_drift_report(corpus: DataFrame, queries: DataFrame,
     # collapse regime this gate exists to catch, inflating
     # micro_recall and letting ``n_queries`` differ across arms.
     # The grid is |queries|×|arms| id rows — broadcast-tiny.
-    arm_names = corpus.sparkSession.createDataFrame(
-        [(n,) for n in sorted(arms)], "arm string")
+    arm_names = local_frame(corpus.sparkSession,
+                            [(n,) for n in names], "arm string")
     grid = (queries.select(query_id_col).distinct()
             .crossJoin(F.broadcast(arm_names)))
     per = (grid.join(per.select("arm", query_id_col, "n_hits"),

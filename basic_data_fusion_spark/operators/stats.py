@@ -26,6 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 try:  # scipy is optional: p-values/normality/KDE only
     from scipy import stats as _scipy_stats
 except Exception:  # pragma: no cover
@@ -93,8 +95,8 @@ def correlation_aggregate(df: DataFrame, columns: list[str],
     built lazily — rank transforms, join-backs, and the sufficient-
     statistics aggregation are all in THIS frame's plan.  Exposed
     separately because ``correlation_matrix`` executes it eagerly
-    (``.first()`` + ``createDataFrame``), so pinning the matrix's plan
-    pins only a Scan ExistingRDD; structural regressions in the
+    (``.first()`` + ``local_frame``), so pinning the matrix's plan
+    pins only a LocalTableScan; structural regressions in the
     distributed midrank pipeline (e.g. a data-sized global window
     reappearing) are only visible in THIS plan — the golden-plan
     fixtures pin it directly."""
@@ -185,7 +187,7 @@ def correlation_matrix(df: DataFrame, columns: list[str], method: str = "pearson
             if i < j:
                 key = f"{prefix}{a}||{prefix}{b}"
                 data.append((a, b, float(row[key]) if row[key] is not None else None))
-    return spark.createDataFrame(data, "col_a string, col_b string, corr double")
+    return local_frame(spark, data, "col_a string, col_b string, corr double")
 
 
 def high_correlation_pairs(corr_df: DataFrame, threshold: float = 0.7) -> DataFrame:
@@ -739,8 +741,8 @@ def histogram(df: DataFrame, column: str, bins: int = 10,
         lo = lo if lo is not None else r["lo"]
         hi = hi if hi is not None else r["hi"]
     if lo is None or hi is None:  # empty / all-null input: empty histogram
-        return df.sparkSession.createDataFrame(
-            [], "bin int, bin_start double, bin_end double, n long")
+        return local_frame(df.sparkSession, [],
+                           "bin int, bin_start double, bin_end double, n long")
     width = (hi - lo) / bins if hi > lo else 1.0
     bin_expr = F.least(F.floor((c - F.lit(lo)) / F.lit(width)).cast("int"),
                        F.lit(bins - 1))

@@ -9,6 +9,13 @@ Tuning rationale (100 TB design notes):
   splitting replace hand-tuned ``spark.sql.shuffle.partitions`` at scale.
 - Arrow enabled: every driver-side handoff (bounded previews, scipy
   inputs) crosses via Arrow batches, never row-pickling.
+- Driver-built rows (report tables, CC labels, literal grids) enter
+  Spark ONLY through :func:`local_frame`.  ``createDataFrame(list)``
+  builds a pickled-RDD ``LogicalRDD`` (``Scan ExistingRDD``), and every
+  job that reads it pays a Python-RDD scan — 250-700 ms even for two
+  rows.  An Arrow table becomes a JVM-only ``LocalRelation``
+  (``LocalTableScan``): no Python worker, and real size statistics, so
+  downstream joins can broadcast it.
 - Session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
 """
@@ -17,7 +24,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
@@ -62,3 +70,25 @@ def get_spark(app_name: str = "basic_data_fusion_spark", master: str | None = No
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """Driver rows → a ``LocalRelation`` DataFrame (see module docstring).
+
+    ``schema`` is a ``StructType`` or a DDL string.  Columns are built
+    one Arrow array at a time against the schema's Arrow types, so
+    ``None`` stays null and NaN/±inf stay doubles — values and schema
+    are identical to ``spark.createDataFrame(rows, schema)``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import local_frame
+
 
 def _derived_run_id(checkpoint: str) -> str:
     """Run id derived from the checkpoint path — stable across retries
@@ -1013,7 +1015,7 @@ def cluster_label_sink(df: DataFrame, labels_path: str, index_path: str,
         thr = F.lit(float(threshold))
         pair_schema = StructType([StructField("id_a", id_type),
                                   StructField("id_b", id_type)])
-        pairs = spark.createDataFrame([], pair_schema)
+        pairs = local_frame(spark, [], pair_schema)
         if _index_exists(spark, band_dir):
             idx_b = not_this(_read_store(spark, band_dir)).select(
                 "band", "bucket", F.col(id_col).alias("__ex_id"))
@@ -1067,9 +1069,9 @@ def cluster_label_sink(df: DataFrame, labels_path: str, index_path: str,
         else:
             if epoch_cell[0] is None:
                 epoch_cell[0] = 1
-            standing = spark.createDataFrame(
-                [], StructType([StructField(id_col, id_type),
-                                StructField("cluster_id", id_type)]))
+            standing = local_frame(
+                spark, [], StructType([StructField(id_col, id_type),
+                                       StructField("cluster_id", id_type)]))
         updated = incremental_clusters(
             standing, pairs, batch_df.select(id_col), id_col=id_col)
         old = standing.select(F.col(id_col),

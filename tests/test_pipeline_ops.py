@@ -936,6 +936,57 @@ def test_dedup_clusters_labels_and_singletons(spark, small_docs):
     assert out[5] == (5, 1) and out[6] == (6, 1)   # singletons label themselves
 
 
+def _leaf_is_local_relation(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return plan.startswith("LocalRelation")
+
+
+def test_connected_components_fast_path_cap_boundary(spark):
+    """The single bounded collect decides the path: a graph with
+    exactly ``local_edge_cap`` edges takes the driver union-find (its
+    labels are a LocalRelation), one more edge than the cap runs the
+    distributed rounds — with identical labels either way."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (5, 5)],
+        "id_a long, id_b long")   # 5 distinct oriented non-loop edges
+    fast = dedup.connected_components(edges, local_edge_cap=5)
+    dist = dedup.connected_components(edges, local_edge_cap=4)
+    assert _leaf_is_local_relation(fast)
+    assert not _leaf_is_local_relation(dist)
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    assert {r["node"]: r["component"] for r in fast.collect()} == want
+    assert {r["node"]: r["component"] for r in dist.collect()} == want
+
+
+def test_connected_components_and_dedup_clusters_near_edge_cap(spark):
+    """The fast path at its largest size: 199,998 edges (just under the
+    default 200k cap) in 22,222 ten-node chains, plus ten documents
+    outside every pair.  The labels ride as one LocalRelation; every
+    node must land on its chain's min member and ``dedup_clusters``
+    must size every cluster and keep the singletons."""
+    n_nodes = 222_220
+    edges = (spark.range(n_nodes).where(F.col("id") % 10 != 9)
+             .select(F.col("id").alias("id_a"),
+                     (F.col("id") + 1).alias("id_b")))
+    labels = dedup.connected_components(edges)
+    assert _leaf_is_local_relation(labels)
+    bad = labels.where(F.col("component")
+                       != F.col("node") - F.col("node") % 10)
+    assert labels.count() == n_nodes and bad.count() == 0
+
+    docs = spark.range(n_nodes + 10).withColumnRenamed("id", "doc_id")
+    out = dedup.dedup_clusters(docs, edges)
+    sizes = {r["cluster_size"]: r["n"] for r in
+             out.groupBy("cluster_size").agg(F.count(F.lit(1)).alias("n"))
+             .collect()}
+    assert sizes == {10: n_nodes, 1: 10}
+    wrong = out.where(F.col("cluster_id")
+                      != F.when(F.col("doc_id") < n_nodes,
+                                F.col("doc_id") - F.col("doc_id") % 10)
+                      .otherwise(F.col("doc_id")))
+    assert wrong.count() == 0
+
+
 def test_repetition_features(spark):
     docs = spark.createDataFrame(
         [(1, "a a a b"), (2, "x y x y"), (3, ""), (4, "solo")],
@@ -2497,13 +2548,21 @@ def test_cache_pinned_lifecycle(spark):
 
 
 def test_ann_recall_guards(spark):
-    """Empty arms dict raises (was AttributeError); a perfect arm on a
-    corpus smaller than k scores 1.0 — the denominator is
-    min(k, per-query exact count), not the literal k."""
+    """No arms (an empty dict or an empty stacked frame) yields the
+    same empty report; a perfect arm on a corpus smaller than k scores
+    1.0 — the denominator is min(k, per-query exact count), not the
+    literal k."""
     exact = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 10)], "query_id long, neighbor_id long")
-    with pytest.raises(ValueError, match="at least one arm"):
-        similarity.ann_recall(exact, {}, k=5)
+    from_dict = similarity.ann_recall(exact, {}, k=5)
+    stacked = spark.createDataFrame(
+        [], "arm string, query_id long, neighbor_id long")
+    from_frame = similarity.ann_recall(exact, stacked, k=5)
+    assert from_dict.schema.simpleString() == \
+        from_frame.schema.simpleString()
+    assert from_dict.columns == ["arm", "query_id", "n_returned",
+                                 "n_hits", "recall_at_k"]
+    assert from_dict.collect() == [] and from_frame.collect() == []
     got = {(r["arm"], r["query_id"]): r for r in
            similarity.ann_recall(exact, {"perfect": exact},
                                  k=5).collect()}

@@ -105,7 +105,7 @@ PINNED = [
 ]
 
 # Internal pre-execution frames for contracts that execute eagerly
-# (their own plan is a vacuous Scan ExistingRDD) — resolved through
+# (their own plan is a vacuous LocalTableScan) — resolved through
 # __spark_entry__.internal_plan_frames()
 PINNED_INTERNAL = [
     "spearman_corr__rank_aggregate",
@@ -138,6 +138,13 @@ def normalize_plan(plan: str) -> str:
         line = re.sub(r"StorageLevel\([^)]*\)", "StorageLevel(X)", line)
         line = re.sub(r"Statistics\([^)]*\)", "Statistics(X)", line)
         line = re.sub(r"\(\d+ paths?\)", "(N paths)", line)
+        # repartition(defaultParallelism) and spark.range() size by the
+        # runtime core count — session config, not plan shape.  The
+        # operator and its scheme stay verbatim, and hashpartitioning
+        # keeps its (conftest-pinned) count.
+        line = re.sub(r"RoundRobinPartitioning\(\d+\)",
+                      "RoundRobinPartitioning(N)", line)
+        line = re.sub(r"(Range \(.*splits=)\d+", r"\1N", line)
         # DataFilters renders width-truncated ("...") so its cut point
         # shifts with pre-normalization id lengths; it duplicates the
         # Filter node above the scan — PushedFilters (the pushdown

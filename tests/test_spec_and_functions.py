@@ -210,3 +210,69 @@ def test_half_up_long_matches_round(spark):
     con.executemany("INSERT INTO __hul VALUES (?)", [(v,) for v in vals])
     do, dn = con.execute(q.replace("__hul", "main.__hul")).fetchone()
     assert do == dn == sp.n, (do, dn, sp.n)
+
+
+# every column type a driver-built frame carries (report tables use
+# string/long/double/int/boolean; CC labels take the id's integral type)
+_LOCAL_FRAME_DDL = ("s string, b boolean, i int, l long, d double, "
+                    "y byte, h short")
+
+
+@pytest.mark.parametrize("rows", [
+    [("a", True, 1, 2 ** 40, float("nan"), 1, 2),
+     (None, None, None, None, None, None, None),
+     ("c", False, -3, -5, float("inf"), -1, -2),
+     ("", True, 0, 0, float("-inf"), 0, 0),
+     ("e", False, 2 ** 31 - 1, -2 ** 63, -0.0, 127, -32768)],
+    [],
+], ids=["values", "empty"])
+def test_local_frame_matches_create_dataframe(spark, rows):
+    """``local_frame`` is value- and schema-identical to
+    ``createDataFrame(list)`` (None stays null, NaN/±inf stay doubles),
+    for a DDL string and a StructType alike, and plans as a JVM-only
+    LocalRelation instead of a pickled-RDD scan."""
+    import math
+
+    from pyspark.sql.types import StructType
+
+    from basic_data_fusion_spark.session import local_frame
+
+    def canon(r):
+        return tuple("NaN" if isinstance(x, float) and math.isnan(x)
+                     else (x, math.copysign(1.0, x))
+                     if isinstance(x, float) else x for x in r)
+
+    want = spark.createDataFrame(rows, _LOCAL_FRAME_DDL)
+    for schema in (_LOCAL_FRAME_DDL, StructType.fromDDL(_LOCAL_FRAME_DDL)):
+        got = local_frame(spark, rows, schema)
+        assert got.schema == want.schema
+        assert [canon(r) for r in got.collect()] == \
+               [canon(r) for r in want.collect()]
+        leaf = got._jdf.queryExecution().optimizedPlan().toString()
+        assert leaf.startswith("LocalRelation"), leaf
+
+
+def test_no_create_dataframe_outside_local_frame():
+    """Driver rows enter Spark only through ``session.local_frame``:
+    ``createDataFrame(list)`` is a pickled-RDD scan that every
+    consuming job pays for, so no other library call site may return."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / \
+        "basic_data_fusion_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        allowed = set()
+        if path.name == "session.py" and path.parent == pkg:
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_frame":
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "createDataFrame"
+                    and id(node) not in allowed):
+                offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert offenders == []
