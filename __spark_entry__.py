@@ -1038,10 +1038,10 @@ def q_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigram Stupid Backoff scoring (two backoff levels — the depth
     CCNet's 5-gram KenLM operates at): counts from the md5-nibble train
     half; 8-dp fixed-point instance scores → bit-deterministic oracle."""
-    from basic_data_fusion_spark.operators.text import stupid_backoff_trigram_lm
+    from basic_data_fusion_spark.operators.text import stupid_backoff_lm
 
     docs = _catalog(spark, sf_dir).load("documents")
-    return stupid_backoff_trigram_lm(docs)
+    return stupid_backoff_lm(docs, order=3)
 
 
 _TRIGRAM_LM_ORACLE = r"""

@@ -139,14 +139,6 @@ def fixed_point_sum(col: Column, scale: int = 1_000_000) -> Column:
     return F.sum(half_up_long(col * F.lit(float(scale)))) / F.lit(float(scale))
 
 
-def numeric_coerce(col: Column) -> Column:
-    """``pd.to_numeric(errors='coerce')`` semantics: non-parsable → NULL
-    (reference: metadata.py:160, statistics.py:141). ``try_cast`` is
-    required — Spark 4 runs ANSI mode by default, where a plain cast of a
-    malformed string THROWS instead of yielding NULL."""
-    return col.try_cast("double")
-
-
 def stratified_keep(stratum: Column, key: Column, rates: dict[str, float],
                     default_rate: float = 1.0) -> Column:
     """Boolean keep-flag for deterministic per-stratum downsampling —

@@ -39,7 +39,7 @@ def _feature_instances(df: DataFrame, text_col: str, id_col: str | None,
                        flag: Column | None = None) -> DataFrame:
     """One row per hashed unigram/bigram INSTANCE. Tokenization matches
     operators/text.tokens; bigrams via the staged-projection idiom
-    (see _repetition_hof) so the document is tokenized once.
+    (see text.repetition_features) so the document is tokenized once.
 
     A narrow source spreads before the tokenize+md5-bucket explosion —
     the CPU-heavy stage of every DSIR pass — via the same conditional

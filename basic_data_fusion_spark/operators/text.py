@@ -9,6 +9,9 @@ the hot path). Designed for the ``documents`` table schema
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -45,18 +48,12 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(pieces)
 
 
-def stopword_hits(col: Column, stopwords: list[str]) -> Column:
-    """Number of tokens that are in ``stopwords`` (with repetition)."""
-    sw = F.array(*[F.lit(w) for w in stopwords])
-    return F.size(F.filter(tokens(col), lambda t: F.array_contains(sw, t)))
-
-
 def _lang_score_array(col: Column, langs: list[str],
                       profiles: dict[str, list[str]]) -> Column:
     """Per-language stopword-hit counts in ONE pass over the token array
-    (len(langs)-wide accumulator). The per-profile ``stopword_hits``
-    formulation re-traverses tokens once per language — at corpus scale
-    that multiplies the hot loop by the profile count."""
+    (len(langs)-wide accumulator). A per-profile filter over the tokens
+    re-traverses them once per language — at corpus scale that
+    multiplies the hot loop by the profile count."""
     stop_arrays = [F.array(*[F.lit(w) for w in profiles[lang]]) for lang in langs]
     zero = F.array_repeat(F.lit(0), len(langs))
     return F.aggregate(
@@ -65,16 +62,6 @@ def _lang_score_array(col: Column, langs: list[str],
             acc,
             F.array(*[F.array_contains(sw, t).cast("int") for sw in stop_arrays]),
             lambda a, hit: a + hit))
-
-
-def language_scores(col: Column, profiles: dict[str, list[str]] | None = None) -> Column:
-    """Map of lang → stopword-hit count."""
-    profiles = profiles or LANG_PROFILES
-    langs = sorted(profiles)
-    return F.map_from_arrays(
-        F.array(*[F.lit(lang) for lang in langs]),
-        _lang_score_array(col, langs, profiles),
-    )
 
 
 def detect_language(col: Column, profiles: dict[str, list[str]] | None = None,
@@ -135,16 +122,32 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _repetition_hof(base: DataFrame, id_col: str) -> DataFrame:
-    """HOF tier: all-JVM, no shuffle, no explode. O(distinct_words ×
-    n_tokens) per document — the right trade for web-document-sized
-    texts, where distinct_words is small and avoiding three shuffles
-    dominates. The token/bigram arrays are materialized through staged
-    projections: a nested higher-order function re-evaluates its argument
-    subtree once per OUTER array element, so feeding ``split(...)``
-    directly into ``transform(distinct, w -> filter(toks, ...))``
-    re-tokenizes the document u times per row (~16× slower end-to-end
-    measured at sf0.1)."""
+def repetition_features(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id") -> DataFrame:
+    """Gopher-style repetition signals per document (Rae et al. 2021 §A1.1
+    use these to drop boilerplate/spam): type-token ratio, most-frequent
+    word/bigram mass, longest same-word run. The reference has no
+    repetition analysis; this extends its quality surface
+    (analysis/statistics.py value-counts idiom) to corpus curation.
+
+    All-JVM higher-order functions over each token array: no shuffle, no
+    explode, O(distinct_words × n_tokens) per document — the right trade
+    for web-document-sized texts, where distinct_words is small. Ratios
+    are integer-count divisions; NULL text scores as the empty doc.
+
+    The token/bigram arrays are materialized through staged projections:
+    a nested higher-order function re-evaluates its argument subtree once
+    per OUTER array element, so feeding ``split(...)`` directly into
+    ``transform(distinct, w -> filter(toks, ...))`` re-tokenizes the
+    document u times per row (~16× slower end-to-end measured at sf0.1).
+    Input is repartitioned — the pass is CPU-bound and a single-file
+    parquet source would otherwise pin it to one core.
+    """
+    txt = F.coalesce(F.col(text_col), F.lit(""))
+    base = (spread_narrow(df)
+            .select(F.col(id_col),
+                    tokens(txt).alias("toks"),
+                    token_count(txt).cast("long").alias("n_tokens")))
     t, n = F.col("toks"), F.col("n_tokens")
     staged = base.select(
         F.col(id_col), "toks", "n_tokens",
@@ -181,92 +184,6 @@ def _repetition_hof(base: DataFrame, id_col: str) -> DataFrame:
                     / n_bigrams).alias("top_bigram_frac"),
         F.when(n == 0, F.lit(0)).otherwise(max_run).cast("long").alias("max_run"),
     )
-
-
-def _repetition_explode(base: DataFrame, id_col: str) -> DataFrame:
-    """Explode tier: positional explode → two-level groupBy (word counts,
-    lead() bigrams, gaps-and-islands runs). O(n_tokens) work per document
-    spread across the cluster — three extra shuffles, but no per-row
-    O(u×n) loop, so book-length inputs (where distinct_words ≈ n_tokens
-    makes the HOF tier quadratic) stay linear. Bit-identical output to
-    the HOF tier (same integer-count divisions)."""
-    inst = (base.filter(F.col("n_tokens") > 0)
-            .select(F.col(id_col), F.posexplode("toks").alias("pos", "word")))
-    wc = inst.groupBy(id_col, "word").agg(F.count(F.lit(1)).alias("c"))
-    agg = wc.groupBy(id_col).agg(F.max("c").alias("__top_word"),
-                                 F.count(F.lit(1)).alias("__n_distinct"))
-    w = Window.partitionBy(id_col).orderBy("pos")
-    bg = (inst.withColumn("__nxt", F.lead("word").over(w))
-          .filter(F.col("__nxt").isNotNull())
-          .select(id_col, F.concat_ws(" ", "word", "__nxt").alias("bigram")))
-    bagg = (bg.groupBy(id_col, "bigram").agg(F.count(F.lit(1)).alias("c"))
-            .groupBy(id_col).agg(F.max("c").alias("__top_bigram"),
-                                 F.sum("c").alias("__n_bigrams")))
-    rw = Window.partitionBy(id_col, "word").orderBy("pos")
-    runs = (inst.withColumn("__grp", F.col("pos") - F.row_number().over(rw))
-            .groupBy(id_col, "word", "__grp").agg(F.count(F.lit(1)).alias("run_len"))
-            .groupBy(id_col).agg(F.max("run_len").alias("__max_run")))
-    n = F.col("n_tokens")
-    return (base.select(id_col, "n_tokens")
-            .join(agg, id_col, "left").join(bagg, id_col, "left")
-            .join(runs, id_col, "left")
-            .select(
-                F.col(id_col), n.alias("n_tokens"),
-                F.when(n == 0, F.lit(0.0))
-                 .otherwise(F.col("__n_distinct").cast("double") / n)
-                 .alias("distinct_ratio"),
-                F.when(n == 0, F.lit(0.0))
-                 .otherwise(F.col("__top_word").cast("double") / n)
-                 .alias("top_word_frac"),
-                F.when(F.col("__n_bigrams").isNull(), F.lit(0.0))
-                 .otherwise(F.col("__top_bigram").cast("double") / F.col("__n_bigrams"))
-                 .alias("top_bigram_frac"),
-                F.coalesce(F.col("__max_run"), F.lit(0)).cast("long").alias("max_run")))
-
-
-def repetition_features(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        long_doc_strategy: str = "hof",
-                        long_doc_tokens: int = 20_000) -> DataFrame:
-    """Gopher-style repetition signals per document (Rae et al. 2021 §A1.1
-    use these to drop boilerplate/spam): type-token ratio, most-frequent
-    word/bigram mass, longest same-word run. The reference has no
-    repetition analysis; this extends its quality surface
-    (analysis/statistics.py value-counts idiom) to corpus curation.
-
-    ``long_doc_strategy`` selects the execution tier (both produce
-    bit-identical output — ratios are integer-count divisions):
-
-    - ``"hof"`` (default): all-JVM higher-order functions, zero shuffles,
-      O(distinct_words × n_tokens) per doc — fastest for web documents.
-    - ``"explode"``: positional explode + two-level groupBy, O(n_tokens)
-      spread across the cluster — linear on book-length inputs where the
-      HOF tier degrades quadratically.
-    - ``"auto"``: per-document dispatch on ``long_doc_tokens`` — short
-      docs take the HOF tier, long docs the explode tier, results union.
-
-    Input is repartitioned — the pass is CPU-bound and a single-file
-    parquet source would otherwise pin it to one core.
-    """
-    if long_doc_strategy not in ("hof", "explode", "auto"):
-        raise ValueError(f"unknown long_doc_strategy: {long_doc_strategy!r}")
-    spark = df.sparkSession
-    # NULL text normalizes to the empty doc: without the coalesce,
-    # size(NULL)=NULL fails BOTH auto-tier predicates (silently dropping
-    # the row) and the hof/explode tiers disagree (NULL vs 0 max_run) —
-    # breaking the bit-identical guarantee.
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    base = (spread_narrow(df)
-            .select(F.col(id_col),
-                    tokens(txt).alias("toks"),
-                    token_count(txt).cast("long").alias("n_tokens")))
-    if long_doc_strategy == "hof":
-        return _repetition_hof(base, id_col)
-    if long_doc_strategy == "explode":
-        return _repetition_explode(base, id_col)
-    return (_repetition_hof(base.filter(F.col("n_tokens") <= long_doc_tokens), id_col)
-            .unionByName(_repetition_explode(
-                base.filter(F.col("n_tokens") > long_doc_tokens), id_col)))
 
 
 def token_rarity(df: DataFrame, text_col: str = "text",
@@ -601,15 +518,6 @@ def pii_counts(col: Column, patterns: dict[str, str] | None = None) -> list[Colu
             for tag in sorted(patterns)]
 
 
-def text_analysis(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One-stop enrichment: language, quality, token counts, fingerprint."""
-    out = quality_score(df, text_col)
-    return (out
-            .withColumn("detected_lang", detect_language(F.col(text_col)))
-            .withColumn("bpe_tokens", bpe_ish_token_count(F.col(text_col)))
-            .withColumn("fingerprint", fingerprint(F.col(text_col))))
-
-
 def strip_high_df_tokens(df: DataFrame, text_col: str = "text",
                          id_col: str = "doc_id",
                          max_df_frac: float = 0.5) -> DataFrame:
@@ -783,14 +691,20 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
 
 def stupid_backoff_lm(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", alpha: float = 0.4,
-                      train_nibbles: int = 8) -> DataFrame:
-    """Bigram Stupid Backoff LM scoring (Brants et al. 2007, "Large
+                      train_nibbles: int = 8, order: int = 2) -> DataFrame:
+    """Order-n Stupid Backoff LM scoring (Brants et al. 2007, "Large
     Language Models in Machine Translation" §4): per-document mean
-    −ln S(w_i | w_{i-1}) where::
+    −ln S(w_n | w_1 … w_{n-1}) over every n-gram (n = ``order``), where
+    level j = 0 … n−1 backs off to the (n−j)-gram ending at w_n::
 
-        S(w2 | w1) = c2(w1,w2) / c1(w1)          if the bigram was seen
-                   = α · c1(w2) / N              else if w2 was seen
-                   = α² / N                      else (OOV floor)
+        S = α^j · c(w_{j+1} … w_n) / c(w_{j+1} … w_{n-1})
+                      at the first level j < n−1 whose (n−j)-gram was seen
+          = α^{n-1} · c(w_n) / N      else if w_n was seen
+          = α^n / N                   else (OOV floor)
+
+    ``order=2`` is the bigram model (one backoff level), ``order=3`` the
+    trigram model (two levels — the depth CCNet's 5-gram KenLM operates
+    at); ``order < 2`` raises ``ValueError``.
 
     This is the distributed statistical-LM perplexity filter of CCNet
     (Wenzek et al. 2019) with the corpus's own held-out half standing in
@@ -804,76 +718,91 @@ def stupid_backoff_lm(df: DataFrame, text_col: str = "text",
     Bit-determinism across engines: each instance's −ln S is quantized to
     an 8-dp INTEGER before any cross-row reduction (same idiom as
     ``lm_surprisal``); Stupid Backoff needs no normalization, so every
-    score is a ratio of exact integer counts.
+    score is a ratio of exact integer counts, and α^j is the left-nested
+    product α·α·…·α the oracles spell out.
 
-    Plan: one tokenize pass feeds both the bigram instance table (all
-    docs) and the train-half count tables; instances LEFT JOIN the bigram
-    and unigram count tables (AQE picks broadcast when the measured vocab
-    is small — a web-scale bigram table is unbounded, so no explicit
-    hint), then ONE per-doc aggregation. Docs with <2 tokens score NULL
-    with ``n_bigrams`` 0.
+    Plan: one tokenize pass over the train half emits every POSITION as
+    (w1, w2 … wn) with NULL padding past the end of the doc and
+    aggregates once into a pinned count table (n-gram-vocab-sized); each
+    k-gram table is that table filtered on ``w_k IS NOT NULL`` and summed
+    — exact BIGINT sums, the same counts a separate explosion per k would
+    give from one tokenize pass instead of n.  The all-docs n-gram
+    instance table LEFT-JOINs each level's numerator and context count
+    (strategy left to AQE — n-gram vocabulary is unbounded at web scale),
+    the 1-row total rides a broadcast, then ONE per-doc aggregation.
+    Returns (id, ``n_bigrams`` / ``n_trigrams`` / ``n_<order>grams``,
+    ``mean_neg_log_score``); docs with fewer than ``order`` tokens score
+    NULL with count 0.
     """
-    spark = df.sparkSession
+    n = int(order)
+    if n < 2:
+        raise ValueError(f"order must be >= 2, got {order!r}")
+    count_col = {2: "n_bigrams", 3: "n_trigrams"}.get(n, f"n_{n}grams")
+    w = [f"w{i}" for i in range(1, n + 1)]
     toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
     base = (spread_narrow(df)
             .select(F.col(id_col), toks.alias("toks")))
-    pair_expr = F.when(
-        F.size("toks") >= 2,
-        F.expr("transform(sequence(0, size(toks)-2),"
-               " i -> struct(toks[i] AS w1, toks[i+1] AS w2))"))
-    inst = (base.select(id_col, F.explode(pair_expr).alias("p"))
-            .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")))
+    inst_expr = F.when(
+        F.size("toks") >= n,
+        F.expr(f"transform(sequence(0, size(toks)-{n}), i -> struct("
+               + ", ".join(f"toks[i+{k}] AS {w[k]}" for k in range(n)) + "))"))
+    inst = (base.select(id_col, F.explode(inst_expr).alias("p"))
+            .select(id_col, *[F.col(f"p.{c}").alias(c) for c in w]))
     nib = F.conv(F.md5(F.col(id_col).cast("string")).substr(1, 1), 16, 10).cast("int")
     train = base.filter(nib < F.lit(int(train_nibbles)))
-    # ONE tokenize pass over the train half (r13 opt, guide §2 "do the
-    # work once"): emit every POSITION as (w1, w2-or-NULL-at-the-end)
-    # and aggregate once.  c2 is the non-NULL-w2 rows directly (every
-    # adjacent pair is a position with w2 set); c1 rolls up by w1
-    # (every token occupies exactly one position); N is the grand
-    # total — all exact BIGINT sums of the same counts the three
-    # separate explosions produced, so every downstream score is
-    # bit-identical.  Unfused, uni/tot/big each re-ran the tokenize
-    # pipeline (and uni twice more via its two join aliases).  The
-    # pinned table is bigram-vocab-sized — the same size class the
-    # plan already shuffles for the c2 aggregate.
     pad_expr = F.when(
         F.size("toks") >= 1,
-        F.expr("transform(sequence(0, size(toks)-1),"
-               " i -> struct(toks[i] AS w1,"
-               " CASE WHEN i < size(toks)-1 THEN toks[i+1] END AS w2))"))
+        F.expr("transform(sequence(0, size(toks)-1), i -> struct(toks[i] AS w1"
+               + "".join(f", CASE WHEN i < size(toks)-{k} THEN toks[i+{k}] END"
+                         f" AS {w[k]}" for k in range(1, n)) + "))"))
     tcounts = cache_pinned(
         train.select(F.explode(pad_expr).alias("p"))
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .groupBy(*[F.col(f"p.{c}").alias(c) for c in w])
         .agg(F.count(F.lit(1)).alias("__c")))
-    uni = tcounts.groupBy("w1").agg(F.sum("__c").alias("c1"))
     tot = tcounts.agg(F.sum("__c").alias("n"))
-    big = (tcounts.where(F.col("w2").isNotNull())
-           .select("w1", "w2", F.col("__c").alias("c2")))
-    u1 = uni.select(F.col("w1"), F.col("c1").alias("c1_w1"))
-    u2 = uni.select(F.col("w1").alias("w2"), F.col("c1").alias("c1_w2"))
-    # every division is CASE-guarded so an empty train half (n = 0) yields
-    # NULL scores instead of an ANSI DIVIDE_BY_ZERO; path 1's denominator
-    # c1_w1 >= 1 whenever the bigram was seen
-    s = (F.when(F.col("c2").isNotNull(),
-                F.col("c2").cast("double") / F.col("c1_w1"))
-         .when(F.col("c1_w2").isNotNull() & (F.col("n") > 0),
-               F.lit(alpha) * F.col("c1_w2").cast("double") / F.col("n"))
-         .when(F.col("n") > 0, F.lit(alpha) * F.lit(alpha) / F.col("n")))
+
+    def kgram(k: int, first: int, name: str) -> DataFrame:
+        """Train k-gram counts ``name``, keyed by the instance columns
+        w_{first+1} … w_{first+k}."""
+        seen = tcounts.where(F.col(w[k - 1]).isNotNull())
+        if k < n:  # at k = n the count table is already keyed by the n-gram
+            seen = seen.groupBy(*w[:k]).agg(F.sum("__c").alias("__c"))
+        return seen.select(*[F.col(w[i]).alias(w[first + i]) for i in range(k)],
+                           F.col("__c").alias(name))
+
+    def alpha_pow(j: int) -> Column:
+        """α^j as the left-nested literal product α·α·… the oracles spell
+        out — a folded ``alpha**j`` can differ in the last ulp."""
+        return functools.reduce(operator.mul, [F.lit(alpha)] * j)
+
+    scored, s = inst, None
+    for j in range(n):  # backoff level j: the (n-j)-gram ending at w_n
+        k = n - j
+        num = F.col(f"__num{j}")
+        scored = scored.join(kgram(k, j, f"__num{j}"), w[j:], "left")
+        s_j = num.cast("double") if j == 0 else alpha_pow(j) * num.cast("double")
+        if k > 1:
+            # the context of a seen k-gram was seen, so __den{j} >= 1
+            scored = scored.join(kgram(k - 1, j, f"__den{j}"), w[j:n - 1], "left")
+            s_j, seen = s_j / F.col(f"__den{j}"), num.isNotNull()
+        else:
+            # the unigram and OOV levels divide by N: guarded so an empty
+            # train half yields NULL scores instead of an ANSI DIVIDE_BY_ZERO
+            s_j, seen = s_j / F.col("n"), num.isNotNull() & (F.col("n") > 0)
+        s = F.when(seen, s_j) if s is None else s.when(seen, s_j)
+    s = s.when(F.col("n") > 0, alpha_pow(n) / F.col("n"))
     s_int = half_up_long(-F.log(s) * F.lit(1e8))
-    scored = (inst
-              .join(big, ["w1", "w2"], "left")
-              .join(u1, "w1", "left")
-              .join(u2, "w2", "left")
+    scored = (scored
               .crossJoin(F.broadcast(tot))
               .groupBy(id_col)
-              .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+              .agg(F.count(F.lit(1)).cast("long").alias(count_col),
                    F.sum(s_int).alias("__ss")))
     out = scored.select(
-        F.col(id_col), "n_bigrams",
-        ((F.col("__ss").cast("double") / F.lit(1e8)) / F.col("n_bigrams"))
+        F.col(id_col), count_col,
+        ((F.col("__ss").cast("double") / F.lit(1e8)) / F.col(count_col))
         .alias("mean_neg_log_score"))
     empties = (df.select(id_col).join(out.select(id_col), id_col, "left_anti")
-               .select(F.col(id_col), F.lit(0).cast("long").alias("n_bigrams"),
+               .select(F.col(id_col), F.lit(0).cast("long").alias(count_col),
                        F.lit(None).cast("double").alias("mean_neg_log_score")))
     return out.union(empties)
 
@@ -973,105 +902,6 @@ def bm25_topk(df: DataFrame, query_terms: list[str],
             .limit(int(k))
             .select(F.col(id_col), "n_terms_matched",
                     (F.col("__s").cast("double") / F.lit(1e8)).alias("bm25_score")))
-
-
-def stupid_backoff_trigram_lm(df: DataFrame, text_col: str = "text",
-                              id_col: str = "doc_id", alpha: float = 0.4,
-                              train_nibbles: int = 8) -> DataFrame:
-    """Trigram Stupid Backoff scoring — the depth CCNet's external 5-gram
-    KenLM actually operates at, two backoff levels instead of one::
-
-        S(w3 | w1 w2) = c3(w1,w2,w3) / c2(w1,w2)       trigram seen
-                      = α · c2(w2,w3) / c1(w2)         else, bigram seen
-                      = α² · c1(w3) / N                else, unigram seen
-                      = α³ / N                         else (OOV floor)
-
-    Same engine-portable construction as ``stupid_backoff_lm``: counts
-    from the md5-nibble train half, instance scores quantized to 8-dp
-    integers before the per-doc sum. Returns (id, n_trigrams,
-    mean_neg_log_score); docs with <3 tokens score NULL. Plan shape: the
-    n-gram count tables are ONE groupBy each over the train half; the
-    all-docs trigram instance table LEFT-JOINs four count relations
-    (strategy to AQE — trigram vocabulary is unbounded at web scale) and
-    aggregates once per doc.
-    """
-    spark = df.sparkSession
-    toks = F.filter(tokens(F.col(text_col)), lambda x: x != "")
-    base = (spread_narrow(df)
-            .select(F.col(id_col), toks.alias("toks")))
-    tri_expr = F.when(
-        F.size("toks") >= 3,
-        F.expr("transform(sequence(0, size(toks)-3),"
-               " i -> struct(toks[i] AS w1, toks[i+1] AS w2, toks[i+2] AS w3))"))
-    inst = (base.select(id_col, F.explode(tri_expr).alias("p"))
-            .select(id_col, "p.w1", "p.w2", "p.w3"))
-    nib = F.conv(F.md5(F.col(id_col).cast("string")).substr(1, 1), 16, 10).cast("int")
-    train = base.filter(nib < F.lit(int(train_nibbles)))
-    # ONE tokenize pass over the train half (r13 opt, guide §2; same
-    # construction as stupid_backoff_lm): every POSITION emits
-    # (w1, w2-or-NULL, w3-or-NULL) — NULLs pad the last two positions —
-    # and aggregates once.  c3 is the non-NULL-w3 rows directly; c2
-    # rolls up the non-NULL-w2 rows by (w1, w2); c1 rolls up by w1; N
-    # is the grand total.  All exact BIGINT sums of the same counts
-    # the four separate explosions produced → scores bit-identical.
-    # Unfused, uni (×2 aliases), tot, big (×2 aliases) and tri each
-    # re-ran the tokenize pipeline.  The pinned table is
-    # trigram-vocab-sized — the size class the c3 aggregate already
-    # shuffled.
-    pad_expr = F.when(
-        F.size("toks") >= 1,
-        F.expr("transform(sequence(0, size(toks)-1),"
-               " i -> struct(toks[i] AS w1,"
-               " CASE WHEN i < size(toks)-1 THEN toks[i+1] END AS w2,"
-               " CASE WHEN i < size(toks)-2 THEN toks[i+2] END AS w3))"))
-    tcounts = cache_pinned(
-        train.select(F.explode(pad_expr).alias("p"))
-        .groupBy(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"),
-                 F.col("p.w3").alias("w3"))
-        .agg(F.count(F.lit(1)).alias("__c")))
-    uni = (tcounts.groupBy("w1").agg(F.sum("__c").alias("c1"))
-           .select(F.col("w1").alias("w"), "c1"))
-    tot = tcounts.agg(F.sum("__c").alias("n"))
-    big = (tcounts.where(F.col("w2").isNotNull())
-           .groupBy("w1", "w2").agg(F.sum("__c").alias("c2")))
-    tri = (tcounts.where(F.col("w3").isNotNull())
-           .select("w1", "w2", "w3", F.col("__c").alias("c3")))
-    b12 = big.select(F.col("w1").alias("b1"), F.col("w2").alias("b2"),
-                     F.col("c2").alias("c2_12"))
-    b23 = big.select(F.col("w1").alias("b2_"), F.col("w2").alias("b3_"),
-                     F.col("c2").alias("c2_23"))
-    u2 = uni.select(F.col("w").alias("u2w"), F.col("c1").alias("c1_w2"))
-    u3 = uni.select(F.col("w").alias("u3w"), F.col("c1").alias("c1_w3"))
-    s = (F.when(F.col("c3").isNotNull(),
-                F.col("c3").cast("double") / F.col("c2_12"))
-         .when(F.col("c2_23").isNotNull(),
-               F.lit(alpha) * F.col("c2_23").cast("double") / F.col("c1_w2"))
-         .when(F.col("c1_w3").isNotNull() & (F.col("n") > 0),
-               F.lit(alpha) * F.lit(alpha) * F.col("c1_w3").cast("double")
-               / F.col("n"))
-         .when(F.col("n") > 0,
-               F.lit(alpha) * F.lit(alpha) * F.lit(alpha) / F.col("n")))
-    s_int = half_up_long(-F.log(s) * F.lit(1e8))
-    scored = (inst
-              .join(tri, ["w1", "w2", "w3"], "left")
-              .join(b12, (F.col("w1") == F.col("b1"))
-                    & (F.col("w2") == F.col("b2")), "left")
-              .join(b23, (F.col("w2") == F.col("b2_"))
-                    & (F.col("w3") == F.col("b3_")), "left")
-              .join(u2, F.col("w2") == F.col("u2w"), "left")
-              .join(u3, F.col("w3") == F.col("u3w"), "left")
-              .crossJoin(F.broadcast(tot))
-              .groupBy(id_col)
-              .agg(F.count(F.lit(1)).cast("long").alias("n_trigrams"),
-                   F.sum(s_int).alias("__ss")))
-    out = scored.select(
-        F.col(id_col), "n_trigrams",
-        ((F.col("__ss").cast("double") / F.lit(1e8)) / F.col("n_trigrams"))
-        .alias("mean_neg_log_score"))
-    empties = (df.select(id_col).join(out.select(id_col), id_col, "left_anti")
-               .select(F.col(id_col), F.lit(0).cast("long").alias("n_trigrams"),
-                       F.lit(None).cast("double").alias("mean_neg_log_score")))
-    return out.union(empties)
 
 
 def winnow_fingerprints(df: DataFrame, text_col: str = "text",
@@ -1344,7 +1174,7 @@ def gopher_rules(df: DataFrame, text_col: str = "text",
     expensive trees — referencing them as COLUMNS means they evaluate
     once per row, where deriving every flag from the raw expressions
     re-evaluated the fold ~6x per row), then ratios/flags.  Same
-    staging rationale as _repetition_hof above, one level further.
+    staging rationale as repetition_features above, one level further.
     """
     c = F.coalesce(F.col(text_col), F.lit(""))
     arrays = df.select(

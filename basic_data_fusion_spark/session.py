@@ -38,6 +38,8 @@ _DEFAULTS = {
     "spark.sql.shuffle.partitions": str(os.cpu_count() or 8),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
+    # No carriage-return progress bars in logs and measured output.
+    "spark.ui.showConsoleProgress": "false",
     # Pivot width guard (enwiden can produce many session columns).
     "spark.sql.pivotMaxValues": "100000",
     # Read parquet TIMESTAMP(NANOS) as long; Catalog converts to a

@@ -43,9 +43,10 @@ PICK_NOTES = {
     "bm25_search": "Per-term df table and 1-row corpus stats broadcast; "
                    "top-k is TakeOrderedAndProject (partial per-partition "
                    "top-k), never a global sort.",
-    "stupid_backoff_lm": "Bigram/unigram count tables join back to the "
-                         "instance table (AQE picks the strategy); one "
-                         "per-doc aggregation; no Python evaluator.",
+    "stupid_backoff_lm": "Bigram/unigram count tables roll up from one "
+                         "pinned position-count table and join back to "
+                         "the instance table (AQE picks the strategy); "
+                         "one per-doc aggregation; no Python evaluator.",
     "pq_topk": "Codebooks constant-folded to one Literal; encode is a "
                "per-row projection (only the round-robin spread "
                "exchange); queries + distance tables broadcast into the "
@@ -261,15 +262,12 @@ MAX_LINES = 40
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from basic_data_fusion_spark.session import get_spark
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    # 8 shuffle partitions, as the test suite pins them
+    spark = get_spark("bdf-spark-dump-plans",
+                      extra_conf={"spark.sql.shuffle.partitions": "8"})
 
     out = ["# PLANS — executed-plan evidence for SCALE.md claims",
            "",

@@ -25,20 +25,12 @@ def main() -> None:
         os.path.abspath(__file__))), "plans", f"r{rnd}")
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from basic_data_fusion_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("bdf-spark-dump-plans")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # 32 shuffle partitions, as bench.py runs the queries whose plans
+    # this dumps
+    spark = get_spark("bdf-spark-dump-plans",
+                      extra_conf={"spark.sql.shuffle.partitions": "32"})
 
     import __spark_entry__ as entry
     from basic_data_fusion_spark.caching import release_cached

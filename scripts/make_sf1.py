@@ -29,8 +29,11 @@ import os
 import shutil
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from basic_data_fusion_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
 OUT = os.environ.get("OUT", "/root/repo/.scaledata/sf1")
@@ -59,15 +62,11 @@ TAG_TEXT = {"documents": "text"}
 
 
 def main() -> None:
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.session.timeZone", "UTC")
-             # COPIES=30/100 tiers (r11 verdict #6) OOM the default 1g
-             # heap on the lineitem union — the single local JVM holds
-             # all 32 executor threads' write buffers at once
-             .config("spark.driver.memory", "48g")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    # COPIES=30/100 tiers (r11 verdict #6) OOM a small heap on the
+    # lineitem union — the single local JVM holds every executor
+    # thread's write buffers at once
+    spark = get_spark("bdf-spark-make-sf1",
+                      extra_conf={"spark.driver.memory": "48g"})
     os.makedirs(OUT, exist_ok=True)
 
     for t in FIXED:

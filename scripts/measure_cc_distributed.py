@@ -27,23 +27,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     runs = max(1, int(os.environ.get("SPARK_GRAFT_RUNS", "3")))
 
-    from pyspark.sql import SparkSession
+    from basic_data_fusion_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bdf-spark-cc-ladder")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # 32 shuffle partitions, as bench.py measures the same pair relation
+    spark = get_spark("bdf-spark-cc-ladder",
+                      extra_conf={"spark.sql.shuffle.partitions": "32"})
 
     from basic_data_fusion_spark.caching import release_cached
     from basic_data_fusion_spark.catalog import Catalog

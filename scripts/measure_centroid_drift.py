@@ -19,7 +19,7 @@ rebuild write).
 
 Run from the repo root:  python scripts/measure_centroid_drift.py
 Optional env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32).
+SPARK_GRAFT_CPUS (default: all cores).
 """
 import glob
 import json
@@ -31,21 +31,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from basic_data_fusion_spark.session import get_spark
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", str(cpus))
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("bdf-spark-centroid-drift",
+                      extra_conf={"spark.driver.memory": "16g"})
 
     from basic_data_fusion_spark.operators.similarity import (
         centroid_drift_report,

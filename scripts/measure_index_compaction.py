@@ -20,14 +20,17 @@ Run on a quiet box; prints one table row per (dirs, probe_s) pair.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from basic_data_fusion_spark.session import get_spark
 
 BASE = "/tmp/idx_compaction_bench"
 ROWS_PER_BATCH = 800
@@ -53,10 +56,7 @@ def probe_seconds(spark: SparkSession, store: str, best_of: int = 3) -> float:
 def main() -> None:
     from basic_data_fusion_spark.streaming.sinks import compact_index_store
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("bdf-spark-index-compaction")
     print("| history (dirs) | fragmented probe s | compacted probe s |")
     print("|---|---|---|")
     for n_batches in HISTORIES:

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Time named contract queries across a LADDER of scale tiers
 (default sf0.1 → sf1 → sf3 → sf10) and print per-step ratios with
-output mass — the r11 verdict #6 extension of measure_sf_ratio.py one
-decade up: a 10× step can hide a superlinear term that 100× exposes.
+output mass — a 10× step can hide a superlinear term that 100× exposes.
+For a single sf0.1 → sf1 ratio set TIERS to those two tiers.
 
 Usage: python scripts/measure_sf_decade.py q1 q2 ...
 Env:   TIERS="sf0.1=/root/testdata/sf0.1,sf1=/root/repo/.scaledata/sf1,..."
@@ -25,8 +25,6 @@ import sys
 import threading
 import time
 
-from pyspark.sql import SparkSession
-
 DEFAULT_TIERS = ("sf0.1=/root/testdata/sf0.1,"
                  "sf1=/root/repo/.scaledata/sf1,"
                  "sf3=/root/repo/.scaledata/sf3,"
@@ -44,21 +42,16 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    from basic_data_fusion_spark.caching import release_cached
+    from basic_data_fusion_spark.session import get_spark
 
     qs = entry.queries()
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "48g")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-    try:
-        from basic_data_fusion_spark.caching import release_cached
-    except Exception:
-        release_cached = lambda: None
+    # sf3/sf10 tiers persist corpus-sized relations: a 48g heap
+    spark = get_spark("bdf-spark-sf-decade",
+                      extra_conf={"spark.driver.memory": "48g"})
 
     def run_once(fn, sf_dir):
         """One measured run under the soft deadline; returns

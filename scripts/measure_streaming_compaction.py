@@ -12,13 +12,16 @@ trigger.  Run on a quiet box.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from basic_data_fusion_spark.session import get_spark
 
 BASE = "/tmp/stream_compaction_ab"
 N_BATCHES = 48
@@ -69,12 +72,8 @@ def run(spark: SparkSession, sub: str, compact_every: int | None):
 
 
 def main() -> None:
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("bdf-spark-streaming-compaction",
+                      extra_conf={"spark.driver.memory": "16g"})
     out = {}
     for sub, every in (("off", None), ("on", 8)):
         times, n_surv, dirs = run(spark, sub, every)

@@ -19,10 +19,11 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from basic_data_fusion_spark.session import get_spark
 
 BASE = "/tmp/stream_gate_measure"
 N_BATCHES = 24
@@ -67,12 +68,7 @@ def main():
         streaming_fuzzy_decontaminate,
     )
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "8g")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("bdf-spark-streaming-gate")
 
     fuzzy = run(spark, "fuzzy",
                 lambda s, h: streaming_fuzzy_decontaminate(

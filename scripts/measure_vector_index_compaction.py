@@ -23,10 +23,12 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from basic_data_fusion_spark.session import get_spark
 
 BASE = "/tmp/vector_index_ab"
 N_BATCHES = 24
@@ -102,12 +104,8 @@ def main() -> None:
         suggest_compact_every,
     )
 
-    spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "16g")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("bdf-spark-vector-index-compaction",
+                      extra_conf={"spark.driver.memory": "16g"})
     vecs = spark.read.parquet(VECS).select("vec_id", "embedding")
     cents = train_centroids(vecs, k=16, seed=42)
     queries = (vecs.filter(F.col("vec_id") < 8)

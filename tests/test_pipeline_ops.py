@@ -1007,10 +1007,34 @@ def test_repetition_features(spark):
     assert r4["top_bigram_frac"] == 0.0 and r4["max_run"] == 1
 
 
-def test_repetition_strategies_identical(spark):
-    """The explode tier and the auto dispatch must be bit-identical to the
-    HOF tier — including on a long document that crosses the auto
-    threshold and on empty/whitespace docs."""
+def _repetition_reference(text_value):
+    """Pure-Python repetition_features: Spark's trim strips spaces only,
+    and its split regex \\s is the ASCII whitespace class."""
+    import re
+
+    t = (text_value or "").strip(" ").lower()
+    toks = re.split(r"[ \t\n\x0b\f\r]+", t)
+    n = 0 if t == "" else len(toks)
+    if n == 0:
+        return {"n_tokens": 0, "distinct_ratio": 0.0, "top_word_frac": 0.0,
+                "top_bigram_frac": 0.0, "max_run": 0}
+    bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+    run = best = 0
+    for i, w in enumerate(toks):
+        run = run + 1 if i and w == toks[i - 1] else 1
+        best = max(best, run)
+    return {"n_tokens": n,
+            "distinct_ratio": len(set(toks)) / n,
+            "top_word_frac": max(toks.count(w) for w in set(toks)) / n,
+            "top_bigram_frac": (max(bigrams.count(g) for g in set(bigrams))
+                                / len(bigrams)) if bigrams else 0.0,
+            "max_run": best}
+
+
+def test_repetition_features_match_reference(spark):
+    """repetition_features equals a pure-Python reference exactly — on a
+    300-token document, whitespace-only and NULL text (scored as the
+    empty doc, never dropped) and 50 real documents."""
     long_doc = " ".join(["tok%d" % (i % 37) for i in range(300)])
     docs = spark.createDataFrame(
         [(1, "a a a b"), (2, "x y x y"), (3, ""), (4, "solo"),
@@ -1019,18 +1043,10 @@ def test_repetition_strategies_identical(spark):
         spark.read.parquet(f"{SF0001}/documents.parquet")
         .select("doc_id", "text").orderBy("doc_id").limit(50)
         .withColumn("doc_id", F.col("doc_id") + 1000))
-    assert 8 in {r["doc_id"] for r in text.repetition_features(docs).collect()}, \
-        "NULL-text doc must not be dropped"
-    hof = {r["doc_id"]: r.asDict()
-           for r in text.repetition_features(docs).collect()}
-    for strategy in ("explode", "auto"):
-        got = {r["doc_id"]: r.asDict()
-               for r in text.repetition_features(
-                   docs, long_doc_strategy=strategy,
-                   long_doc_tokens=100).collect()}
-        assert got == hof, f"strategy={strategy} diverges from hof"
-    with pytest.raises(ValueError):
-        text.repetition_features(docs, long_doc_strategy="nope")
+    want = {r["doc_id"]: {"doc_id": r["doc_id"], **_repetition_reference(r["text"])}
+            for r in docs.collect()}
+    got = {r["doc_id"]: r.asDict() for r in text.repetition_features(docs).collect()}
+    assert len(want) == 58 and got == want
 
 
 def test_trained_centroids_ivf_recall(spark):
@@ -1195,69 +1211,92 @@ def test_strip_high_df_tokens_all_banned(spark):
         assert out[i]["clean_text"] == "" and out[i]["n_removed"] == 1
 
 
-def test_stupid_backoff_paths_match_reference(spark):
-    """All three Stupid Backoff paths (seen bigram / unigram backoff / OOV
-    floor) fire on a planted corpus and match a pure-Python reference."""
+def _backoff_count_col(order):
+    return {2: "n_bigrams", 3: "n_trigrams"}.get(order, f"n_{order}grams")
+
+
+@pytest.mark.parametrize("order", [2, 3, 4])
+def test_stupid_backoff_paths_match_reference(spark, order):
+    """Every order-n Stupid Backoff level (seen n-gram, each shorter
+    context, unigram) and the OOV floor fire on a planted corpus and
+    match a generic pure-Python n-gram reference."""
     import hashlib
     import math
-
-    from pyspark.sql import functions as F
 
     from basic_data_fusion_spark.operators.text import stupid_backoff_lm
 
     # ids 0..15 → first md5 nibble decides train membership, same rule as
-    # the operator; craft texts so the scored half has unseen bigrams/words
-    rows = [(i, "a b c a b") if int(hashlib.md5(str(i).encode()).hexdigest()[0], 16) < 8
-            else (i, "a b zzz qqq") for i in range(16)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in stupid_backoff_lm(df).collect()}
-
+    # the operator; the held-out text walks off the train n-grams one
+    # level at a time and ends on unseen words
     train_ids = [i for i in range(16)
                  if int(hashlib.md5(str(i).encode()).hexdigest()[0], 16) < 8]
     assert train_ids and len(train_ids) < 16
-    # python reference over the same split
-    uni: dict[str, int] = {}
-    big: dict[tuple, int] = {}
-    n = 0
+    rows = [(i, "a b c d e a b c d e" if i in train_ids else
+             "a b c d e zzz b c d e qqq c d e rrr d e sss e ttt uuu")
+            for i in range(16)]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    out = {r["doc_id"]: r for r in stupid_backoff_lm(df, order=order).collect()}
+
+    counts: dict[tuple, int] = {}
     for i in train_ids:
-        toks = rows[i][1].split()
-        for t in toks:
-            uni[t] = uni.get(t, 0) + 1
-            n += 1
-        for a, b in zip(toks, toks[1:]):
-            big[(a, b)] = big.get((a, b), 0) + 1
+        t = rows[i][1].split()
+        for k in range(1, order + 1):
+            for g in zip(*[t[j:] for j in range(k)]):
+                counts[g] = counts.get(g, 0) + 1
+    n = sum(c for g, c in counts.items() if len(g) == 1)
 
-    def score(w1, w2):
-        if (w1, w2) in big:
-            return big[(w1, w2)] / uni[w1]
-        if w2 in uni:
-            return 0.4 * uni[w2] / n
-        return 0.4 * 0.4 / n
+    def alpha_pow(j):  # left-nested α·α·…, as the operator builds it
+        p = 1.0
+        for _ in range(j):
+            p *= 0.4
+        return p
 
-    for i, text in rows:
-        toks = text.split()
-        pairs = list(zip(toks, toks[1:]))
-        ss = sum(int(round(-math.log(score(a, b)) * 1e8)) for a, b in pairs)
-        expect = (ss / 1e8) / len(pairs)
-        assert out[i]["n_bigrams"] == len(pairs)
-        assert abs(out[i]["mean_neg_log_score"] - expect) < 1e-9, (i, text)
-    # the held-out text exercises backoff: ("b","zzz") OOV-floor path and
-    # ("zzz","qqq") floor, plus seen ("a","b")
+    def score(gram):
+        """(backoff level, S) — level ``order`` is the OOV floor."""
+        for j in range(order):
+            if gram[j:] in counts:
+                den = counts[gram[j:-1]] if j < order - 1 else n
+                return j, alpha_pow(j) * counts[gram[j:]] / den
+        return order, alpha_pow(order) / n
+
+    fired = set()
+    for i, text_value in rows:
+        t = text_value.split()
+        grams = list(zip(*[t[j:] for j in range(order)]))
+        levels, scores = zip(*[score(g) for g in grams])
+        fired |= set(levels)
+        ss = sum(int(round(-math.log(s) * 1e8)) for s in scores)
+        assert out[i][_backoff_count_col(order)] == len(grams)
+        assert abs(out[i]["mean_neg_log_score"] - (ss / 1e8) / len(grams)) < 1e-9, \
+            (i, text_value)
+    assert fired == set(range(order + 1)), fired
     held = [i for i in range(16) if i not in train_ids]
-    assert any(out[i]["mean_neg_log_score"] > out[j]["mean_neg_log_score"]
+    assert all(out[i]["mean_neg_log_score"] > out[j]["mean_neg_log_score"]
                for i in held for j in train_ids)
 
 
-def test_stupid_backoff_short_docs_null(spark):
+@pytest.mark.parametrize("order", [2, 3, 4])
+def test_stupid_backoff_short_docs_null(spark, order):
+    """Docs with fewer than ``order`` tokens score NULL with count 0."""
     from basic_data_fusion_spark.operators.text import stupid_backoff_lm
 
     df = spark.createDataFrame(
-        [(1, "solo"), (2, ""), (3, None), (4, "two tokens")],
-        ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in stupid_backoff_lm(df).collect()}
-    for i in (1, 2, 3):
-        assert out[i]["n_bigrams"] == 0 and out[i]["mean_neg_log_score"] is None
-    assert out[4]["n_bigrams"] == 1
+        [(1, "solo"), (2, ""), (3, None), (4, " ".join(["w"] * (order - 1))),
+         (5, " ".join(["w"] * order))],
+        "doc_id long, text string")
+    out = {r["doc_id"]: r for r in stupid_backoff_lm(df, order=order).collect()}
+    count_col = _backoff_count_col(order)
+    for i in (1, 2, 3, 4):
+        assert out[i][count_col] == 0 and out[i]["mean_neg_log_score"] is None
+    assert out[5][count_col] == 1
+
+
+def test_stupid_backoff_rejects_order_below_two(spark):
+    from basic_data_fusion_spark.operators.text import stupid_backoff_lm
+
+    df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError):
+        stupid_backoff_lm(df, order=1)
 
 
 def test_perplexity_buckets_balanced_and_ordered(spark):
@@ -1512,64 +1551,6 @@ def test_ivfpq_refine_improves_recall(spark):
     for qid, _ in ref:
         per_q[qid] = per_q.get(qid, 0) + 1
     assert all(v == 3 for v in per_q.values())
-
-
-def test_trigram_backoff_paths_match_reference(spark):
-    """All four trigram Stupid Backoff paths fire on a planted corpus and
-    match a pure-Python reference."""
-    import hashlib
-    import math
-
-    from basic_data_fusion_spark.operators.text import stupid_backoff_trigram_lm
-
-    rows = [(i, "a b c a b c d")
-            if int(hashlib.md5(str(i).encode()).hexdigest()[0], 16) < 8
-            else (i, "a b c zzz b c qqq rrr sss") for i in range(16)]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r["doc_id"]: r for r in stupid_backoff_trigram_lm(df).collect()}
-
-    train_ids = [i for i in range(16)
-                 if int(hashlib.md5(str(i).encode()).hexdigest()[0], 16) < 8]
-    uni, big, tri = {}, {}, {}
-    n = 0
-    for i in train_ids:
-        t = rows[i][1].split()
-        for w in t:
-            uni[w] = uni.get(w, 0) + 1
-            n += 1
-        for a, b in zip(t, t[1:]):
-            big[(a, b)] = big.get((a, b), 0) + 1
-        for a, b, c in zip(t, t[1:], t[2:]):
-            tri[(a, b, c)] = tri.get((a, b, c), 0) + 1
-
-    def score(a, b, c):
-        if (a, b, c) in tri:
-            return tri[(a, b, c)] / big[(a, b)]
-        if (b, c) in big:
-            return 0.4 * big[(b, c)] / uni[b]
-        if c in uni:
-            return 0.4 * 0.4 * uni[c] / n
-        return 0.4 ** 3 / n
-
-    hit_paths = set()
-    for i, text in rows:
-        t = text.split()
-        tris = list(zip(t, t[1:], t[2:]))
-        ss = 0
-        for a, b, c in tris:
-            if (a, b, c) in tri:
-                hit_paths.add("tri")
-            elif (b, c) in big:
-                hit_paths.add("big")
-            elif c in uni:
-                hit_paths.add("uni")
-            else:
-                hit_paths.add("floor")
-            ss += int(round(-math.log(score(a, b, c)) * 1e8))
-        expect = (ss / 1e8) / len(tris)
-        assert out[i]["n_trigrams"] == len(tris)
-        assert abs(out[i]["mean_neg_log_score"] - expect) < 1e-9, (i, text)
-    assert hit_paths == {"tri", "big", "uni", "floor"}, hit_paths
 
 
 def test_exactsubstr_preserves_case_of_survivors(spark):
