@@ -44,7 +44,7 @@ from pyspark.sql.types import (
 try:  # codec gate: real decode if available
     from PIL import Image  # noqa: F401
     HAS_PIL = True
-except Exception:
+except ImportError:
     HAS_PIL = False
 
 IMAGE_META_SCHEMA = StructType([

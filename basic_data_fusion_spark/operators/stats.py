@@ -30,7 +30,7 @@ from ..session import local_frame
 
 try:  # scipy is optional: p-values/normality/KDE only
     from scipy import stats as _scipy_stats
-except Exception:  # pragma: no cover
+except ImportError:  # pragma: no cover
     _scipy_stats = None
 
 

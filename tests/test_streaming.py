@@ -145,10 +145,7 @@ def test_stateful_running_stats_matches_batch(spark, tmp_path):
 
 def test_exactly_once_parquet_sink(spark, tmp_path):
     """foreachBatch sink: all micro-batches land exactly once; a replayed
-    batch function call (same batch_id) would overwrite, not duplicate.
-    Exercises the LEGACY bare ``batch_id=N`` layout (explicit
-    ``namespaced=False`` — since r12 the run-namespaced layout is the
-    default, covered by the accumulation test below)."""
+    batch function call (same batch_id) would overwrite, not duplicate."""
     from basic_data_fusion_spark.streaming.sinks import (
         exactly_once_parquet_sink,
         read_sink,
@@ -169,18 +166,18 @@ def test_exactly_once_parquet_sink(spark, tmp_path):
     stream = (spark.readStream.schema(batch.schema)
               .option("maxFilesPerTrigger", "1").parquet(str(d)))
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = exactly_once_parquet_sink(stream, out, ckpt, namespaced=False)
+    q = exactly_once_parquet_sink(stream, out, ckpt)
     q.awaitTermination()
 
     sunk = read_sink(spark, out)
-    assert "run_id" not in sunk.columns  # bare legacy layout
+    assert sunk.select("run_id").distinct().count() == 1
     assert sunk.select("batch_id").distinct().count() == 2
     assert sunk.count() == batch.count()
     assert sunk.agg(F.sum("event_id")).first()[0] == \
         batch.agg(F.sum("event_id")).first()[0]
 
     # restart over the same checkpoint: nothing new to process, no dupes
-    q2 = exactly_once_parquet_sink(stream, out, ckpt, namespaced=False)
+    q2 = exactly_once_parquet_sink(stream, out, ckpt)
     q2.awaitTermination()
     assert read_sink(spark, out).count() == batch.count()
 
@@ -973,11 +970,10 @@ def test_compact_cluster_labels_preserves_fold_and_epoch_order(spark, tmp_path):
     assert eps == {2, 3}
 
 
-def _write_delta(spark, store, run, b, rows, ep=None):
-    schema = "doc_id long, cluster_id long" + \
-        (", epoch long" if ep is not None else "")
-    data = [(d, c, ep) for d, c in rows] if ep is not None else rows
-    (spark.createDataFrame(data, schema).write.mode("overwrite")
+def _write_delta(spark, store, run, b, rows, ep):
+    (spark.createDataFrame([(d, c, ep) for d, c in rows],
+                           "doc_id long, cluster_id long, epoch long")
+     .write.mode("overwrite")
      .parquet(f"{store}/run_id={run}/batch_id={b}"))
 
 
@@ -1040,57 +1036,6 @@ def test_compact_cluster_labels_twice_keeps_snapshot_rows(spark, tmp_path):
     assert sorted(os.listdir(store)) == ["run_id=__compact__"]
 
 
-def test_cluster_labels_legacy_store_without_epoch(spark, tmp_path):
-    """Pre-r8 stores have no epoch column; reading, compacting, and
-    writing over one must not fail (r8 advisory: UNRESOLVED_COLUMN on
-    the first touch) — legacy rows read as epoch 0, the first
-    post-upgrade run claims epoch 1 and outranks them."""
-    from basic_data_fusion_spark.streaming.sinks import (
-        cluster_label_sink,
-        compact_cluster_labels,
-        read_cluster_labels,
-    )
-
-    store = str(tmp_path / "labels")
-    # legacy layout: run/batch dirs, NO epoch column in the data
-    _write_delta(spark, store, "old", 0, [(11, 11), (12, 12)])
-    _write_delta(spark, store, "old", 1, [(13, 12)])
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in read_cluster_labels(spark, store).collect()}
-    assert got == {11: 11, 12: 12, 13: 12}
-
-    # a post-upgrade writer run over the legacy store: doc 2 joins the
-    # {12,13} cluster and re-roots it; the new run's epoch-1 deltas must
-    # outrank the epoch-0 legacy rows
-    text_c = "one two three four five six seven eight nine ten"
-    d = tmp_path / "in"
-    _feed_files(spark, d, [[(2, text_c)], [(22, text_c)]])
-    # seed the minhash index with the legacy docs' signatures so the
-    # new batch can pair against them
-    _feed_files(spark, tmp_path / "seed", [[(12, text_c), (13, text_c)]])
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(str(tmp_path / "seed")))
-    # bootstrap run writes epoch>=1 rows for 12/13 into the store too;
-    # that's fine — it exercises the mixed legacy+epoch read path
-    q = cluster_label_sink(stream, store, str(tmp_path / "idx"),
-                           str(tmp_path / "ckpt_seed"), threshold=0.8)
-    q.awaitTermination()
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", "1").parquet(str(d)))
-    q = cluster_label_sink(stream, store, str(tmp_path / "idx"),
-                           str(tmp_path / "ckpt"), threshold=0.8)
-    q.awaitTermination()
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in read_cluster_labels(spark, store).collect()}
-    assert got == {11: 11, 12: 2, 13: 2, 2: 2, 22: 2}
-    # compacting the mixed store materializes the epoch column
-    compact_cluster_labels(spark, store)
-    after = {r["doc_id"]: r["cluster_id"]
-             for r in read_cluster_labels(spark, store).collect()}
-    assert after == got
-
-
 def test_cluster_label_sink_auto_compaction_parity(spark, tmp_path):
     """compact_every=2 folds the log mid-run after batches 2 and 4; the
     final label map must equal the uncompacted run's, later batches
@@ -1142,6 +1087,114 @@ def test_cluster_label_sink_auto_compaction_parity(spark, tmp_path):
         spark.read.parquet(str(tmp_path / "labels_plain"))
         .select("batch_id").distinct().collect()) or len(runs_auto) == 1
     assert len(runs_plain) == 1  # single run dir, 4 batch dirs inside
+
+
+def test_cluster_label_sink_custom_id_col_matches_doc_id_run(spark,
+                                                            tmp_path):
+    """The label store is keyed by ``doc_id`` whatever ``id_col`` the
+    stream uses: a ``rec_id`` run with mid-run compaction (the fold and
+    ``read_cluster_labels`` both key on ``doc_id``) gives the same label
+    map as the ``doc_id`` run."""
+    from basic_data_fusion_spark.streaming.sinks import (
+        cluster_label_sink,
+        read_cluster_labels,
+    )
+
+    base = [f"w{i}" for i in range(32)]
+    tail = [f"t{i}" for i in range(8)]
+    A, B = " ".join(base), " ".join(base + tail)
+    M = " ".join(base + tail[:4])
+    # the fold after batch 1 leaves a snapshot; batch 2's bridge merge
+    # reads its standing labels from it
+    batches = [[(1, A), (2, B)], [(11, A), (12, "a lone document")],
+               [(3, M)]]
+    _feed_files(spark, tmp_path / "in", batches)
+
+    def run(sub, id_col):
+        stream = (spark.readStream.schema("doc_id long, text string")
+                  .option("maxFilesPerTrigger", "1")
+                  .parquet(str(tmp_path / "in"))
+                  .withColumnRenamed("doc_id", id_col))
+        q = cluster_label_sink(stream, str(tmp_path / f"labels_{sub}"),
+                               str(tmp_path / f"idx_{sub}"),
+                               str(tmp_path / f"ckpt_{sub}"),
+                               id_col=id_col, threshold=0.8,
+                               compact_every=2)
+        q.awaitTermination()
+        return {r["doc_id"]: r["cluster_id"]
+                for r in read_cluster_labels(
+                    spark, str(tmp_path / f"labels_{sub}")).collect()}
+
+    want = run("doc", "doc_id")
+    assert want == {1: 1, 2: 1, 3: 1, 11: 1, 12: 12}
+    assert run("rec", "rec_id") == want
+
+
+def test_banded_pairs_match_python_reference(spark, tmp_path):
+    """The shared filter-then-verify probe against a pure-Python
+    reference over the collected signatures and band keys: pairs share
+    a (band, bucket) key and agree on >= threshold of the signature
+    positions; history pairs skip exactly the current (run, batch)
+    partition, and within-batch pairs point at the smaller id."""
+    from basic_data_fusion_spark.operators.dedup import (
+        minhash_band_keys,
+        minhash_signatures,
+    )
+    from basic_data_fusion_spark.streaming.sinks import _banded_pairs
+
+    base = [f"w{i}" for i in range(32)]
+    tail = [f"t{i}" for i in range(8)]
+    A = " ".join(base)                 # sim(A,B)=0.78, sim(A,M)=0.84,
+    B = " ".join(base + tail)          # sim(B,M)=0.91 (seed 42)
+    M = " ".join(base + tail[:4])
+    lone = "entirely different words about banded probes"
+
+    def signed(rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        sig = minhash_signatures(df, "text", "doc_id", 3, 64, 42)
+        return sig, minhash_band_keys(sig, "doc_id", "doc_id", 16, 64)
+
+    idx = str(tmp_path / "idx")
+    history = {("rH", 0): [(100, A), (101, lone), (102, B)],
+               ("rC", 2): [(300, A)],           # same run, older batch
+               ("rC", 3): [(200, M)]}           # the current partition
+    hist_sigs, hist_keys = [], []
+    for (run, b), rows in history.items():
+        sig, keys = signed(rows)
+        sig.write.parquet(f"{idx}/sigs/run_id={run}/batch_id={b}")
+        keys.write.parquet(f"{idx}/bands/run_id={run}/batch_id={b}")
+        if (run, b) != ("rC", 3):
+            hist_sigs += sig.collect()
+            hist_keys += keys.collect()
+
+    # near-dups of history (1, 8), an exact re-delivery of history id
+    # 101, in-batch siblings (5 ~ 1, 8 ~ 1) and a below-threshold
+    # candidate (8 vs B)
+    sig, keys = signed([(1, M), (101, lone), (5, B), (8, A),
+                        (9, "nothing like the rest of this batch")])
+    got = {(r["id_a"], r["id_b"]) for r in _banded_pairs(
+        sig, keys, "doc_id", idx, ("rC", 3), 64, 0.8).collect()}
+
+    def similar(x, y):
+        return sum(a == b for a, b in zip(x, y)) / 64 >= 0.8
+
+    bsig = {r["doc_id"]: r["signature"] for r in sig.collect()}
+    bkeys = [(r["doc_id"], r["band"], r["bucket"]) for r in keys.collect()]
+    want = {(a, h["doc_id"]) for a, band, bucket in bkeys
+            for h in hist_keys
+            if (h["band"], h["bucket"]) == (band, bucket)
+            and any(s["doc_id"] == h["doc_id"]
+                    and similar(bsig[a], s["signature"])
+                    for s in hist_sigs)}
+    want |= {(a, b) for a, band, bucket in bkeys
+             for b, band2, bucket2 in bkeys
+             if a > b and (band, bucket) == (band2, bucket2)
+             and similar(bsig[a], bsig[b])}
+    assert got == want
+    assert {(1, 100), (1, 102), (8, 100), (8, 300), (101, 101),
+            (5, 1), (8, 1)} <= got
+    assert (8, 5) not in got and (8, 102) not in got
+    assert not any(200 in p for p in got)
 
 
 def test_compact_minhash_index_between_runs_preserves_results(spark, tmp_path):
@@ -1557,56 +1610,6 @@ def test_read_sketch_store_exact_across_crash_leftover(spark, tmp_path):
     assert after == before
 
 
-def test_compact_sketch_store_migrates_legacy_layout(spark, tmp_path):
-    """A pre-r9 store (bare batch_id=N dirs, no provenance columns)
-    reads via read_sketch_store and migrates to the run-namespaced
-    layout on its first compaction, after which a new-format sink run
-    accumulates on top of it."""
-    import os
-
-    from basic_data_fusion_spark.operators.aggregations import (
-        quantile_rollup,
-    )
-    from basic_data_fusion_spark.streaming.sinks import (
-        compact_sketch_store,
-        quantile_sketch_sink,
-        read_sketch_store,
-    )
-
-    sk = str(tmp_path / "sk")
-    lo, hi, bins = 0.0, 100.0, 32
-    for b, rows in enumerate([[(5, 0, 2)], [(5, 1, 4)]]):
-        (spark.createDataFrame(rows, "partition long, bin int, n long")
-         .write.parquet(f"{sk}/batch_id={b}"))
-    legacy = {(r["partition"], r["bin"]): r["n"]
-              for r in read_sketch_store(spark, sk).collect()}
-    assert legacy == {(5, 0): 2, (5, 1): 4}
-    assert compact_sketch_store(spark, sk) == 2  # both legacy dirs
-    assert sorted(os.listdir(sk)) == ["run_id=__compact__"]
-    assert {(r["partition"], r["bin"]): r["n"]
-            for r in read_sketch_store(spark, sk).collect()} == legacy
-
-    # a new-format run appends on top of the migrated store
-    d = tmp_path / "in"
-    d.mkdir()
-    import glob
-    import shutil
-    (spark.createDataFrame([(5, 10.0)], "event_id long, value double")
-     .coalesce(1).write.parquet(str(d / "f0")))
-    shutil.copy(glob.glob(str(d / "f0" / "*.parquet"))[0],
-                d / "in0.parquet")
-    shutil.rmtree(d / "f0")
-    stream = (spark.readStream.schema("event_id long, value double")
-              .option("maxFilesPerTrigger", "1").parquet(str(d)))
-    q = quantile_sketch_sink(stream, sk, str(tmp_path / "ck"),
-                             part_col="event_id", value_col="value",
-                             lo=lo, hi=hi, bins=bins)
-    q.awaitTermination()
-    rolled = quantile_rollup(read_sketch_store(spark, sk),
-                             lo, hi, bins, [0.5]).collect()
-    assert rolled[0]["n_total"] == 7  # 6 legacy counts + 1 new value
-
-
 def test_compactor_injected_crash_states_fold_identically(spark, tmp_path):
     """Each intermediate directory state the staged compaction sequence
     can crash in — orphan _compact_staging, promoted-but-undeleted
@@ -1756,50 +1759,6 @@ def test_suggest_compact_every_bounds_store_dirs(spark, tmp_path):
     assert "run_id=__compact__" in runs and len(runs) == 2
     kept = [d for d in runs if d != "run_id=__compact__"][0]
     assert os.listdir(idx / kept) == ["batch_id=23"]
-
-
-def test_migrate_legacy_store_unblocks_namespaced_runs(spark, tmp_path):
-    """migrate_legacy_store (r9 advisory): a pre-r9 output/index store
-    (bare batch_id=N directories) becomes an unreadable mixed-depth
-    layout the moment a run-namespaced run writes beside it.  Migrating
-    both paths first keeps the store readable AND keeps legacy history
-    probed — a re-delivery of a legacy document is still dropped."""
-    import os
-
-    from basic_data_fusion_spark.operators.text import fingerprint
-    from basic_data_fusion_spark.streaming.sinks import (
-        index_backed_dedup_sink,
-        migrate_legacy_store,
-        read_sink,
-    )
-
-    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
-    # fabricate the pre-r9 layout: survivors + their hashes under bare
-    # batch_id=N (exactly what the r8-era sink wrote)
-    legacy = spark.createDataFrame(
-        [(1, "legacy doc one"), (2, "legacy doc two")],
-        "doc_id long, text string")
-    legacy.write.parquet(f"{out}/batch_id=0")
-    (legacy.select(fingerprint(F.col("text")).alias("__h")).distinct()
-     .write.parquet(f"{idx}/batch_id=0"))
-
-    assert migrate_legacy_store(spark, out) == 1
-    assert migrate_legacy_store(spark, idx) == 1
-    assert migrate_legacy_store(spark, idx) == 0   # idempotent re-run
-    assert os.listdir(out) == ["run_id=__legacy__"]
-
-    # a namespaced run over the migrated store: doc 3 duplicates legacy
-    # doc 1 (must be dropped by the index probe), doc 4 is new
-    _feed_files(spark, tmp_path / "in",
-                [[(3, "legacy doc one"), (4, "brand new doc")]])
-    stream = (spark.readStream.schema("doc_id long, text string")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(str(tmp_path / "in")))
-    q = index_backed_dedup_sink(stream, out, idx, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-
-    got = {r["doc_id"] for r in read_sink(spark, out).collect()}
-    assert got == {1, 2, 4}
 
 
 def test_labels_mid_run_compaction_reuses_epoch_on_restart(spark, tmp_path):
@@ -2109,15 +2068,13 @@ def test_retrain_vector_index_parity_and_drift_report(spark, tmp_path):
 
 
 def test_sink_refuses_mixed_layout_store(spark, tmp_path):
-    """Opposite-layout detection (r12 advisory): a namespaced (default)
-    sink pointed at a legacy bare ``batch_id=N`` store — or a
-    ``namespaced=False`` caller pointed at a run-namespaced store —
-    must refuse at START time with the migration pointer, instead of
-    writing the mixed-depth partition tree Spark cannot list."""
+    """A sink pointed at a store holding bare top-level ``batch_id=N``
+    directories must refuse at START time, before it writes the
+    mixed-depth partition tree Spark cannot list."""
+    import os
+
     from basic_data_fusion_spark.streaming.sinks import (
         exactly_once_parquet_sink,
-        migrate_legacy_store,
-        read_sink,
     )
 
     batch = spark.createDataFrame([(1, "a")], "doc_id long, text string")
@@ -2126,22 +2083,50 @@ def test_sink_refuses_mixed_layout_store(spark, tmp_path):
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", "1").parquet(str(d)))
 
-    legacy = str(tmp_path / "legacy")
-    batch.write.parquet(f"{legacy}/batch_id=0")
-    with pytest.raises(IOError, match="migrate_legacy_store"):
-        exactly_once_parquet_sink(stream, legacy, str(tmp_path / "c1"))
-
-    spaced = str(tmp_path / "spaced")
-    batch.write.parquet(f"{spaced}/run_id=rX/batch_id=0")
+    bare = str(tmp_path / "bare")
+    batch.write.parquet(f"{bare}/batch_id=0")
     with pytest.raises(IOError, match="mixed-depth"):
-        exactly_once_parquet_sink(stream, spaced, str(tmp_path / "c2"),
-                                  namespaced=False)
+        exactly_once_parquet_sink(stream, bare, str(tmp_path / "c1"))
+    assert os.listdir(bare) == ["batch_id=0"]
 
-    # migration unblocks the namespaced run on the legacy store
-    assert migrate_legacy_store(spark, legacy) == 1
-    q = exactly_once_parquet_sink(stream, legacy, str(tmp_path / "c1"))
-    q.awaitTermination()
-    assert read_sink(spark, legacy).count() == 2  # legacy row + new row
+
+def test_store_sinks_refuse_bare_stores(spark, tmp_path):
+    """Every store a sink writes, the banded index relations included,
+    is checked at start: a bare ``batch_id=N`` store in any of them is
+    refused before the stream runs a batch."""
+    import os
+
+    from basic_data_fusion_spark.streaming.sinks import (
+        cluster_label_sink,
+        index_backed_dedup_sink,
+        minhash_index_sink,
+        quantile_sketch_sink,
+        vector_index_sink,
+    )
+
+    _feed_files(spark, tmp_path / "in", [[(1, "a")]])
+    stream = (spark.readStream.schema("doc_id long, text string")
+              .option("maxFilesPerTrigger", "1")
+              .parquet(str(tmp_path / "in")))
+    bare, idx = str(tmp_path / "bare"), str(tmp_path / "idx")
+    fresh, ck = str(tmp_path / "fresh"), str(tmp_path / "ck")
+    spark.range(1).write.parquet(f"{bare}/batch_id=0")
+    spark.range(1).write.parquet(f"{idx}/sigs/batch_id=0")
+    starts = [
+        lambda: index_backed_dedup_sink(stream, fresh, bare, ck),
+        lambda: quantile_sketch_sink(stream, bare, ck, part_col="doc_id",
+                                     value_col="doc_id", lo=0.0, hi=1.0),
+        lambda: minhash_index_sink(stream, fresh, idx, ck),
+        lambda: cluster_label_sink(stream, bare, str(tmp_path / "i2"), ck),
+        lambda: cluster_label_sink(stream, fresh, idx, ck),
+        lambda: vector_index_sink(stream, bare, ck, [[1.0]]),
+    ]
+    for start in starts:
+        with pytest.raises(IOError, match="mixed-depth"):
+            start()
+    assert os.listdir(bare) == ["batch_id=0"]
+    assert sorted(os.listdir(idx)) == ["sigs"]
+    assert not os.path.exists(fresh) and not os.path.exists(ck)
 
 
 def test_centroid_drift_counts_empty_probe_queries(spark):
