@@ -1981,7 +1981,8 @@ def q_ivf_topk_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-point cosine for assignment, probe and scoring — the entire
     cell-probe search (including which cell every vector lands in)
     replays in SQL and value-hashes against the generated oracle. The
-    KMeans-trained tier (`ivf_topk`) stays rows-only."""
+    float tier (`q_ivf_topk`: the same `_ivf_centroids()`, float
+    cosine) stays rows-only."""
     from basic_data_fusion_spark.operators.similarity import ivf_topk
 
     emb = _catalog(spark, sf_dir).load("embeddings")
@@ -8702,14 +8703,14 @@ def q_bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold + join-back; corpus scanned once). Iterative argmax training
     is not SQL-expressible → rows-only driver tier; merge-exactness is
     pytest-verified against a direct implementation of the Sennrich
-    algorithm and differentially across all three trainer tiers."""
+    algorithm and differentially against the Spark trainer."""
     from basic_data_fusion_spark.operators.tokenizer import (
         bpe_encode,
         bpe_train_local,
     )
 
     docs = _catalog(spark, sf_dir).load("documents")
-    merges, _ = bpe_train_local(docs, n_merges=6)
+    merges = bpe_train_local(docs, n_merges=6)
     return (bpe_encode(docs, merges)
             .select("doc_id", "n_bpe_tokens"))
 

@@ -6,8 +6,6 @@ Replaces the reference's per-file pandas metadata layer
 
 - one directory scan registers every table (S1),
 - schemas come from the Parquet footer / one CSV inference pass (S2/S3),
-- numeric min/max ranges are ONE distributed aggregation per table (S4),
-  not a chunked driver loop,
 - distinct value lists are capped, ordered scans (S5/S6).
 
 Merge-structure detection (reference: data_handling/merge_strategy.py:24-115)
@@ -21,7 +19,7 @@ join key is the primary id. The composite id is derived lazily at load time
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,15 +31,19 @@ NUMERIC_TYPES = {"tinyint", "smallint", "int", "bigint", "float", "double", "dec
 
 
 def _timestamp_ns_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) (unsupported by Spark)."""
-    try:
+    """Columns stored as parquet TIMESTAMP(NANOS) (unsupported by Spark).
+    A directory of part files is read as a pyarrow dataset; a single
+    file reads its footer directly, because importing
+    ``pyarrow.dataset`` costs ~0.3 s per process."""
+    if os.path.isdir(path):
+        import pyarrow.dataset as ds
+
+        schema = ds.dataset(path, format="parquet").schema
+    else:
         import pyarrow.parquet as pq
 
         schema = pq.read_schema(path)
-        return [f.name for f in schema
-                if str(f.type).startswith("timestamp[ns")]
-    except Exception:
-        return []
+    return [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
 
 
 def is_numeric_dtype(dtype: str) -> bool:
@@ -87,8 +89,6 @@ class TableInfo:
     path: str
     columns: list[str]
     dtypes: dict[str, str]
-    row_count: int | None = None
-    numeric_ranges: dict[str, tuple[float, float]] = field(default_factory=dict)
     is_dimension: bool = False  # small table → broadcast-join candidate
 
     def numeric_columns(self) -> list[str]:
@@ -183,7 +183,7 @@ class Catalog:
         return df
 
     # ---------------- schema probe (S3) ----------------
-    def info(self, name: str, with_ranges: bool = False) -> TableInfo:
+    def info(self, name: str) -> TableInfo:
         ti = self._info_cache.get(name)
         if ti is None:
             df = self.load(name, derive_composite=False)
@@ -193,22 +193,7 @@ class Catalog:
                 dtypes=dict(df.dtypes),
             )
             self._info_cache[name] = ti
-        if with_ranges and not ti.numeric_ranges:
-            ti.numeric_ranges = self.numeric_ranges(name)
         return ti
-
-    # ---------------- numeric ranges (S4): one distributed pass ----------------
-    def numeric_ranges(self, name: str) -> dict[str, tuple[float, float]]:
-        df = self.load(name, derive_composite=False)
-        cols = [c for c, t in df.dtypes if is_numeric_dtype(t)]
-        if not cols:
-            return {}
-        aggs = []
-        for c in cols:
-            aggs.append(F.min(c).alias(f"__min_{c}"))
-            aggs.append(F.max(c).alias(f"__max_{c}"))
-        row = df.agg(*aggs).first()
-        return {c: (row[f"__min_{c}"], row[f"__max_{c}"]) for c in cols}
 
     # ---------------- distinct values (S5/S6) ----------------
     def distinct_values(self, table: str, column: str, cap: int | None = None) -> list:

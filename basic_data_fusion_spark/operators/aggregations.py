@@ -120,8 +120,7 @@ def numeric_summary(df: DataFrame, columns: list[str]) -> DataFrame:
 
 
 def exact_quantiles(df: DataFrame, columns: list[str],
-                    ps: list[float],
-                    n_partitions: int | None = None) -> DataFrame:
+                    ps: list[float]) -> DataFrame:
     """EXACT interpolated quantiles (``percentile_cont`` semantics) for
     several columns in ONE corpus pass with NO data-sized aggregation
     buffer — the 100 TB replacement for the ``percentile()`` aggregate,
@@ -148,11 +147,10 @@ def exact_quantiles(df: DataFrame, columns: list[str],
         for c in columns])).alias("s"))
         .select("s.__cid", "s.__v")
         .where(F.col("__v").isNotNull()))
-    return exact_quantiles_stacked(stacked, ps, n_partitions=n_partitions)
+    return exact_quantiles_stacked(stacked, ps)
 
 
-def exact_quantiles_stacked(stacked: DataFrame, ps: list[float],
-                            n_partitions: int | None = None) -> DataFrame:
+def exact_quantiles_stacked(stacked: DataFrame, ps: list[float]) -> DataFrame:
     """:func:`exact_quantiles` over a PRE-STACKED ``(__cid, __v)``
     relation (non-null doubles) — the fusion point (r12 verdict #3):
     callers that need quantiles over SEVERAL tables/relations union
@@ -166,11 +164,10 @@ def exact_quantiles_stacked(stacked: DataFrame, ps: list[float],
         raise ValueError("ps must be non-empty")
     counts = (stacked.groupBy("__cid", "__v")
               .agg(F.count(F.lit(1)).alias("__c")))
-    return exact_quantiles_counts(counts, ps, n_partitions=n_partitions)
+    return exact_quantiles_counts(counts, ps)
 
 
-def exact_quantiles_counts(counts: DataFrame, ps: list[float],
-                           n_partitions: int | None = None) -> DataFrame:
+def exact_quantiles_counts(counts: DataFrame, ps: list[float]) -> DataFrame:
     """:func:`exact_quantiles_stacked` over a PRE-AGGREGATED
     ``(__cid, __v, __c)`` per-distinct-value count relation — the entry
     point for callers that already materialize the counts (e.g. the A5
@@ -183,7 +180,7 @@ def exact_quantiles_counts(counts: DataFrame, ps: list[float],
     from .ordering import global_running_sum
 
     cum = global_running_sum(counts, ["__cid", "__v"], "__c",
-                             out_col="__cum", n_partitions=n_partitions)
+                             out_col="__cum")
     # tot reads the machine OUTPUT (whose range shuffle is checkpointed
     # inside global_running_sum), not the raw counts relation: for
     # callers that pass a lazy counts plan, a counts-side aggregate
@@ -345,16 +342,14 @@ def filtering_report(base_df: DataFrame, key: str,
                      steps: list[tuple[str, Column]],
                      age_col: str | None = None,
                      sex_col: str | None = None,
-                     session_col: str | None = None,
-                     cache: bool = True) -> dict:
+                     session_col: str | None = None) -> dict:
     """EP3's full composite (reference: analysis/filtering.py:96-322): the
     cumulative impact table PLUS a demographics breakdown at every step.
 
     The reference re-reads every CSV per step (N+1 full scans × 5
     queries); here the joined base relation is cached once and each step
     is a handful of aggregates over the cached plan."""
-    if cache:
-        base_df = base_df.cache()
+    base_df = base_df.cache()
     impact = filter_impact_report(base_df, key, steps)
     breakdowns: dict[str, dict] = {
         "baseline": demographics_breakdown(base_df, key, age_col, sex_col, session_col)}

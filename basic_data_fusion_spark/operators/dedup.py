@@ -201,8 +201,7 @@ def url_dedup(df: DataFrame, url_col: str = "url",
 
 
 def canonical_assignments(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id",
-                          case_fold: bool = True) -> DataFrame:
+                          id_col: str = "doc_id") -> DataFrame:
     """Per-row duplicate assignment keyed on the UNICODE-CANONICAL text
     (:func:`~.text.canonical_text` — width/confusable/whitespace fold,
     the text half of key canonicalization; :func:`canonical_url` is the
@@ -217,7 +216,7 @@ def canonical_assignments(df: DataFrame, text_col: str = "text",
     move, the fold itself is a map-side JVM projection."""
     from .text import canonical_text
 
-    key = F.md5(canonical_text(F.col(text_col), case_fold=case_fold))
+    key = F.md5(canonical_text(F.col(text_col)))
     base = df.select(F.col(id_col), key.alias("__ck"))
     grp = base.groupBy("__ck").agg(
         F.min(id_col).alias("canonical_id"),
@@ -227,8 +226,7 @@ def canonical_assignments(df: DataFrame, text_col: str = "text",
 
 
 def canonical_dedup(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    case_fold: bool = True) -> DataFrame:
+                    id_col: str = "doc_id") -> DataFrame:
     """Keep one (min-id) row per Unicode-canonical content — the
     transform twin of :func:`canonical_assignments`, same min-id
     semi-join shape as :func:`exact_dedup` so full rows never shuffle
@@ -236,8 +234,7 @@ def canonical_dedup(df: DataFrame, text_col: str = "text",
     from .text import canonical_text
 
     keep = (df.select(F.col(id_col),
-                      F.md5(canonical_text(F.col(text_col),
-                                           case_fold=case_fold))
+                      F.md5(canonical_text(F.col(text_col)))
                       .alias("__ck"))
             .groupBy("__ck").agg(F.min(id_col).alias(id_col))
             .select(id_col))
@@ -464,14 +461,11 @@ def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 # ---------------- tier 2: exact n-gram jaccard on candidate pairs ----------------
 
 def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                        n: int = 3, threshold: float = 0.5,
-                        max_shingle_doc_freq: int | None = None) -> DataFrame:
+                        n: int = 3, threshold: float = 0.5) -> DataFrame:
     """All pairs with word-``n``-gram Jaccard ≥ threshold.
 
     Plan shape (the part that must survive 100 TB):
-    explode shingles → (optionally drop ultra-common shingles — they only
-    generate join fan-out, and any pair above a real threshold still shares
-    rarer shingles) → self-join on shingle → pair-count = |∩| →
+    explode shingles → self-join on shingle → pair-count = |∩| →
     broadcast-join per-doc set sizes → jaccard = |∩| / (|A|+|B|−|∩|).
     Integer counts → bit-deterministic jaccard.
     """
@@ -481,10 +475,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     sh = shingle_table(
         df.repartition(df.sparkSession.sparkContext.defaultParallelism),
         text_col, id_col, n)
-    if max_shingle_doc_freq:
-        rare = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") <= max_shingle_doc_freq).select("shingle"))
-        sh = sh.join(rare, "shingle", "left_semi")
     sh = cache_pinned(sh)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
@@ -559,7 +549,6 @@ def _affine_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        n: int = 3, num_hashes: int = 64, seed: int = 42,
-                       parallelism: int | None = None,
                        hash_fn: str = "xxhash64") -> DataFrame:
     """k×min-hash signature per doc. Each shingle string is xxhash64'd
     ONCE; the k hash functions are affine transforms of that base hash
@@ -570,23 +559,18 @@ def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc
     once per hash function. All intermediates stay < 2^62, safe under
     ANSI arithmetic.
 
-    Input spreads via ``spread_narrow`` (or an explicit
-    ``parallelism`` repartition) — the expression is CPU-bound, and a
-    single-file parquet source would otherwise pin it to one core; an
-    already-wide corpus skips the shuffle.
+    Input spreads via ``spread_narrow`` — the expression is CPU-bound,
+    and a single-file parquet source would otherwise pin it to one core;
+    an already-wide corpus skips the shuffle.
 
     ``hash_fn``: ``"xxhash64"`` (default, fastest) or ``"md5"`` — the
     first 15 hex chars of md5 as a 60-bit integer, identical on any SQL
     engine, making the whole minhash pipeline ORACLE-CHECKABLE at the
     cost of the slower hash (the deterministic tier of
     ``minhash_dedup_pairs``)."""
-    if parallelism:
-        df = df.repartition(parallelism)
-    else:
-        df = spread_narrow(df)
     sig = minhash_signature_column(F.col(text_col), n, num_hashes, seed,
                                    hash_fn)
-    return df.select(F.col(id_col), sig.alias("signature"))
+    return spread_narrow(df).select(F.col(id_col), sig.alias("signature"))
 
 
 def minhash_signature_column(text: Column, n: int = 3,

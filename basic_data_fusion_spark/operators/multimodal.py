@@ -18,8 +18,9 @@ Scale notes:
   require it (feature extraction is map-only);
 - ``repartition_for_payloads`` sizes partitions by total payload bytes,
   not row count — 1000 × 10 MB images is 10 GB in one task otherwise;
-- Arrow batch size is the memory knob: rows_per_batch × payload must fit
-  the executor's Python worker.
+- Arrow batch size is the memory knob: each codec pins
+  ``maxRecordsPerBatch`` so that rows × payload fits the executor's
+  Python worker.
 """
 
 from __future__ import annotations
@@ -109,14 +110,12 @@ def repartition_for_payloads(df: DataFrame, data_col: str = "data",
 
 
 def decode_images(df: DataFrame, id_col: str = "media_id",
-                  data_col: str = "data",
-                  rows_per_batch: int = 64) -> DataFrame:
+                  data_col: str = "data") -> DataFrame:
     """Decode → (dims, channels, mean intensity). Real decode under PIL;
     deterministic fake otherwise (flagged by ``decode_ok``: 1 = real,
     0 = stand-in)."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows_per_batch))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import io
@@ -149,8 +148,7 @@ def decode_images(df: DataFrame, id_col: str = "media_id",
 
 
 def extract_features(df: DataFrame, id_col: str = "media_id",
-                     data_col: str = "data", dim: int = 16,
-                     rows_per_batch: int = 64) -> DataFrame:
+                     data_col: str = "data", dim: int = 16) -> DataFrame:
     """Content → dense feature vector (array<double>). The embedding
     model is a deterministic content-hash fake (the real model is a
     production swap-in); the batching/schema/shuffle contract is real —
@@ -160,8 +158,7 @@ def extract_features(df: DataFrame, id_col: str = "media_id",
         StructField("feature", ArrayType(DoubleType())),
     ])
     spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows_per_batch))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -318,15 +315,13 @@ def resize_images(df: DataFrame, width: int, height: int,
 
 
 def sample_frames(df: DataFrame, every_n: int = 10, frame_size: int = 1024,
-                  id_col: str = "media_id", data_col: str = "data",
-                  rows_per_batch: int = 16) -> DataFrame:
+                  id_col: str = "media_id", data_col: str = "data") -> DataFrame:
     """Video frame sampling: one output row per sampled frame (1→many
     via the pandas iterator). Without a real container parser the
     "frames" are fixed-stride byte slices — a deterministic stand-in
     that preserves the fan-out shape, schema, and memory profile."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows_per_batch))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -454,8 +449,7 @@ AUDIO_SCHEMA = StructType([
 
 
 def decode_audio(df: DataFrame, id_col: str = "media_id",
-                 data_col: str = "data",
-                 rows_per_batch: int = 64) -> DataFrame:
+                 data_col: str = "data") -> DataFrame:
     """Audio decode → (sample_rate, duration, RMS/peak level). The audio
     codecs (soundfile/librosa) are not in this container, so the decode
     is a DETERMINISTIC STAND-IN (content-hash derived, ``decode_ok=0``);
@@ -463,8 +457,7 @@ def decode_audio(df: DataFrame, id_col: str = "media_id",
     typed metadata out — is the real contract a codec drops into (swap
     the body of the per-row branch, keep the schema)."""
     spark = df.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(rows_per_batch))
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "64")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rates = [8000, 16000, 22050, 44100, 48000]

@@ -228,8 +228,7 @@ def avg_ranks_multi(df: DataFrame, value_cols: list[str],
 
 
 def global_ntile(df: DataFrame, order_keys: list[str], k: int,
-                 out_col: str = "bucket",
-                 n_partitions: int | None = None) -> DataFrame:
+                 out_col: str = "bucket") -> DataFrame:
     """ANSI ``NTILE(k)`` over a total order with no data-sized global
     window: bucket recomputed from the ``total_order_pos`` global rank
     with remainder-to-early-buckets semantics (the first ``n mod k``
@@ -237,7 +236,7 @@ def global_ntile(df: DataFrame, order_keys: list[str], k: int,
     integer-exactly (``(a − a%b)/b`` — an exact multiple divides exactly
     in doubles to 2^53).  Appends ``out_col``; all input columns pass
     through."""
-    d = total_order_pos(df, order_keys, "__r", n_partitions)
+    d = total_order_pos(df, order_keys, "__r")
     n_total = d.groupBy().agg(F.count(F.lit(1)).cast("long").alias("__n"))
     d = d.join(F.broadcast(n_total))
     idiv = lambda a, b: ((a - F.pmod(a, b)) / b).cast("long")

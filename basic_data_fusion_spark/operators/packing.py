@@ -132,8 +132,7 @@ def packing_efficiency_sweep(df: DataFrame, context_lengths: list[int],
 
 def pack_sequences_distributed(df: DataFrame, budget: int = 256,
                                text_col: str = "text",
-                               id_col: str = "doc_id",
-                               n_partitions: int | None = None) -> DataFrame:
+                               id_col: str = "doc_id") -> DataFrame:
     """``pack_sequences`` with the EXACT same contract — one global
     contiguous fill in ``id`` order, bit-identical (id, n_tokens,
     pack_id) — but the running token offset comes from
@@ -148,8 +147,7 @@ def pack_sequences_distributed(df: DataFrame, budget: int = 256,
 
     toks = F.coalesce(F.size(_clean_tokens(text_col)), F.lit(0)).cast("long")
     base = df.select(F.col(id_col), toks.alias("n_tokens"))
-    cum = global_running_sum(base, [id_col], "n_tokens", "__cum",
-                             n_partitions)
+    cum = global_running_sum(base, [id_col], "n_tokens", "__cum")
     staged = cum.withColumn("__off", F.col("__cum") - F.col("n_tokens"))
     pack = F.expr(f"__off div {int(budget)}").cast("long")
     return staged.select(F.col(id_col), "n_tokens", pack.alias("pack_id"))
@@ -183,8 +181,7 @@ def pack_sequences_sharded(df: DataFrame, budget: int = 256,
 
 def length_bucketed_batches(df: DataFrame, batch_size: int = 16,
                             text_col: str = "text",
-                            id_col: str = "doc_id",
-                            n_partitions: int | None = None) -> DataFrame:
+                            id_col: str = "doc_id") -> DataFrame:
     """Sorted (length-bucketed) batching report — the no-concat middle
     ground between naive arrival-order batching and ``pack_sequences``:
     documents sort by token count (id tie-break) and fill fixed-size
@@ -211,8 +208,7 @@ def length_bucketed_batches(df: DataFrame, batch_size: int = 16,
 
     toks = F.coalesce(F.size(_clean_tokens(text_col)), F.lit(0)).cast("long")
     base = df.select(F.col(id_col), toks.alias("n_tokens"))
-    ranked = total_order_pos(base, ["n_tokens", id_col], "__r",
-                             n_partitions)
+    ranked = total_order_pos(base, ["n_tokens", id_col], "__r")
     ranked = ranked.withColumn(
         "batch_id", F.expr(f"(__r - 1) div {int(batch_size)}").cast("long"))
     return (ranked.groupBy("batch_id").agg(

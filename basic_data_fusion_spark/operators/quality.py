@@ -165,19 +165,18 @@ def profiling_sections(df: DataFrame, numeric_cols: list[str] | None = None,
     return sections
 
 
-def profiling_report(df: DataFrame, sample_n: int = 5000, minimal: bool = True,
-                     seed: int = 42):
+def profiling_report(df: DataFrame, sample_n: int = 5000, seed: int = 42):
     """A12: ydata-profiling HTML report on a bounded Arrow-collected sample
     (explicitly a driver-side op, reference: pages/profiling.py:279-345).
     Falls back to the native ``profiling_sections`` DataFrames when
     ydata-profiling isn't installed — the report's headline content
-    without the library."""
+    without the library.  The report runs in ydata's minimal mode."""
     try:
         from ydata_profiling import ProfileReport
-    except Exception:
+    except ImportError:
         return profiling_sections(df, sample_n=min(sample_n, 1000), seed=seed)
     pdf = uniform_sample(df, sample_n, seed).toPandas()
-    return ProfileReport(pdf, minimal=minimal)
+    return ProfileReport(pdf, minimal=True)
 
 
 def benford_audit(df: DataFrame, value_col: str,

@@ -718,9 +718,7 @@ def interleave_mixture_gate_sharded(df: DataFrame,
 def interleave_order_distributed(df: DataFrame, weights: dict[str, float],
                                  source_col: str = "source",
                                  id_col: str = "doc_id",
-                                 default_weight: float = 1.0,
-                                 n_partitions: int | None = None
-                                 ) -> DataFrame:
+                                 default_weight: float = 1.0) -> DataFrame:
     """``interleave_order`` with the EXACT same contract — one total
     serve order, bit-identical output — but distributed: the global
     serve rank comes from ``ordering.total_order_pos`` (range shuffle +
@@ -742,15 +740,13 @@ def interleave_order_distributed(df: DataFrame, weights: dict[str, float],
         "__stride", F.col("rank_in_source").cast("double") / F.col("__w"))
     return (total_order_pos(ranked,
                             ["__stride", source_col, "rank_in_source"],
-                            "serve_pos", n_partitions)
+                            "serve_pos")
             .select(id_col, source_col, "rank_in_source", "serve_pos"))
 
 
 def curriculum_order_distributed(df: DataFrame, score_col: str,
                                  id_col: str = "doc_id",
-                                 n_stages: int = 4,
-                                 n_partitions: int | None = None
-                                 ) -> DataFrame:
+                                 n_stages: int = 4) -> DataFrame:
     """``curriculum_order`` with the EXACT same contract, distributed:
     both global windows (the NTILE stage assignment and the serve
     order) are replaced by ``ordering.total_order_pos`` ranks.  NTILE
@@ -766,7 +762,7 @@ def curriculum_order_distributed(df: DataFrame, score_col: str,
     k = int(n_stages)
     ranked = total_order_pos(
         df.select(F.col(id_col), F.col(score_col)),
-        [score_col, id_col], "__r", n_partitions)
+        [score_col, id_col], "__r")
     n_total = ranked.groupBy().agg(
         F.count(F.lit(1)).cast("long").alias("__n"))
     d = ranked.join(F.broadcast(n_total))
@@ -786,8 +782,7 @@ def curriculum_order_distributed(df: DataFrame, score_col: str,
     staged = d.select(
         F.col(id_col), F.col(score_col), stage.alias("stage"),
         F.md5(F.col(id_col).cast("string")).alias("__h"))
-    return (total_order_pos(staged, ["stage", "__h", id_col],
-                            "serve_pos", n_partitions)
+    return (total_order_pos(staged, ["stage", "__h", id_col], "serve_pos")
             .select(id_col, score_col, "stage", "serve_pos"))
 
 

@@ -232,8 +232,7 @@ def hyperplane_sketch(vec: Column, planes: int = 16, seed: int = 42,
 
 
 def train_centroids(df: DataFrame, k: int = 16, vec_col: str = "embedding",
-                    max_iter: int = 20, seed: int = 42,
-                    init_mode: str = "random") -> list[list[float]]:
+                    max_iter: int = 20, seed: int = 42) -> list[list[float]]:
     """Train the IVF coarse quantizer with distributed k-means
     (``pyspark.ml.clustering.KMeans``): each Lloyd iteration is a
     map-side partial-sum aggregation — no vector data ever concentrates
@@ -241,12 +240,11 @@ def train_centroids(df: DataFrame, k: int = 16, vec_col: str = "embedding",
     (a few KB) return to the driver and become the broadcast literals
     that ``ivf_index``/``ivf_topk`` fold into their plans.
 
-    ``init_mode='random'`` by default: a coarse quantizer only shapes
+    Seeding is ``initMode='random'``: a coarse quantizer only shapes
     candidate cells (the exact cosine re-check decides membership), so
     the extra k-means|| seeding passes buy nothing here — the FAISS
     coarse-quantizer practice; measured identical training cost on the
-    fixture corpus at ~40% less wall time. Pass ``'k-means||'`` when the
-    cells themselves are the product (e.g. standalone clustering)."""
+    fixture corpus at ~40% less wall time."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -273,7 +271,7 @@ def train_centroids(df: DataFrame, k: int = 16, vec_col: str = "embedding",
     if k_eff < 2:
         return [[float(x) for x in head["__v"]]]
     model = KMeans(k=k_eff, maxIter=max_iter, seed=seed,
-                   initMode=init_mode).fit(feats)
+                   initMode="random").fit(feats)
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
@@ -399,11 +397,14 @@ def _adc_table(vec: Column, codebooks: list[list[list[float]]],
 
 def ivf_index(df: DataFrame, centroids: list[list[float]],
               id_col: str = "vec_id", vec_col: str = "embedding",
-              metric: str = "cosine",
-              repartition_input: bool = True) -> DataFrame:
+              metric: str = "cosine") -> DataFrame:
     """Assign each vector to its nearest centroid cell (IVF coarse
     quantization). Centroids are driver-provided literals (train with
     ml.clustering.KMeans or any offline pass).
+
+    Assignment is CPU-bound (k cosines × dim per row), so a caller with
+    a narrow source spreads it first (``spread_narrow``, as
+    :func:`ivf_topk` does); a streaming micro-batch is indexed in place.
 
     The argmax materializes all k cosines into ONE array column and takes
     ``array_position(sims, array_max(sims))`` — each cosine is evaluated
@@ -428,14 +429,6 @@ def ivf_index(df: DataFrame, centroids: list[list[float]],
     scores, hib = _cell_scores(F.col(vec_col), centroids, metric)
     best = F.array_max(scores) if hib else F.array_min(scores)
     cell = (F.array_position(scores, best) - 1).cast("int")
-    # assignment is CPU-bound (k cosines × dim per row); a single-file
-    # test source would pin it to one core — same rationale as
-    # brute_force_topk / minhash_signatures. The spread is a FULL
-    # round-robin shuffle of the vectors: pass repartition_input=False
-    # when the source is already well-split (the at-scale default,
-    # where multi-file parquet parallelizes the scan for free).
-    if repartition_input:
-        df = spread_narrow(df)
     return df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
 
 
@@ -495,7 +488,6 @@ def ivf_index_two_level(df: DataFrame, centroids: list[list[float]],
                         id_col: str = "vec_id",
                         vec_col: str = "embedding",
                         metric: str = "cosine",
-                        repartition_input: bool = True,
                         seed: int = 7) -> DataFrame:
     """Hierarchical (two-level) IVF assignment — the O(√cells)-per-row
     scale path the flat scan degrades from: route each vector to its
@@ -507,8 +499,9 @@ def ivf_index_two_level(df: DataFrame, centroids: list[list[float]],
     would reintroduce an O(n²/256) term — the FAISS IMI/two-level
     rationale). Assignment is approximate at super-cell boundaries; the
     consumers re-check candidates with exact distances, so only recall
-    margins move. Same output schema as ``ivf_index``: (id, vec, cell)
-    with cell indices into the ORIGINAL centroid list."""
+    margins move. Same output schema and input contract as
+    ``ivf_index``: (id, vec, cell) with cell indices into the ORIGINAL
+    centroid list."""
     sup, children = _two_level_split(centroids, seed=seed, metric=metric)
     vec = F.col(vec_col)
     sup_scores, hib = _cell_scores(vec, sup, metric)
@@ -546,8 +539,6 @@ def ivf_index_two_level(df: DataFrame, centroids: list[list[float]],
     pos = F.array_position(local, local_best)
     cell = F.element_at(F.element_at(child_ids, sup_idx.cast("int")),
                         pos.cast("int")).cast("int")
-    if repartition_input:
-        df = spread_narrow(df)
     return df.select(F.col(id_col), F.col(vec_col), cell.alias("cell"))
 
 
@@ -569,7 +560,8 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, centroids: list[list[float]]
     # same bit-identity argument as brute_force_topk)
     self_dot = fixed_point_self_dot if deterministic else \
         (lambda v: dot(v, v))
-    indexed = (ivf_index(corpus, centroids, id_col, vec_col, metric=metric)
+    indexed = (ivf_index(spread_narrow(corpus), centroids, id_col, vec_col,
+                         metric=metric)
                .withColumn("__cc", self_dot(F.col(vec_col))))
     return ivf_topk_indexed(indexed, queries, centroids, k=k,
                             nprobe=nprobe, id_col=id_col, vec_col=vec_col,
@@ -708,7 +700,7 @@ def semantic_dedup(df: DataFrame, id_col: str = "vec_id",
                 if (not deterministic and len(centroids) >= 64)
                 else ivf_index)
     indexed = cache_pinned(
-        index_fn(df, centroids, id_col, vec_col, metric=metric)
+        index_fn(spread_narrow(df), centroids, id_col, vec_col, metric=metric)
         .withColumn("__norm", norm_expr))
     a = indexed.select("cell", F.col(id_col).alias("id_a"),
                        F.col(vec_col).alias("__va"), F.col("__norm").alias("__na"))
@@ -843,7 +835,6 @@ def pq_topk(corpus: DataFrame, queries: DataFrame,
             codebooks: list[list[list[float]]], k: int = 5,
             id_col: str = "vec_id", vec_col: str = "embedding",
             query_id_col: str = "query_id",
-            precomputed_codes: DataFrame | None = None,
             deterministic: bool = False) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: each query builds its m×ksub
     distance table once (a transform over the codebook literal), then
@@ -856,9 +847,7 @@ def pq_topk(corpus: DataFrame, queries: DataFrame,
     corpus side); re-rank the top candidates with exact distances when
     recall matters more than the 4·dim/m compression.
     """
-    codes_df = (precomputed_codes if precomputed_codes is not None
-                else pq_encode(corpus, codebooks, id_col, vec_col,
-                               deterministic))
+    codes_df = pq_encode(corpus, codebooks, id_col, vec_col, deterministic)
     q = (queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
          .withColumn("__dtab", _adc_table(F.col("__qvec"), codebooks,
                                           deterministic))

@@ -48,13 +48,13 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.size(pieces)
 
 
-def _lang_score_array(col: Column, langs: list[str],
-                      profiles: dict[str, list[str]]) -> Column:
+def _lang_score_array(col: Column, langs: list[str]) -> Column:
     """Per-language stopword-hit counts in ONE pass over the token array
     (len(langs)-wide accumulator). A per-profile filter over the tokens
     re-traverses them once per language — at corpus scale that
     multiplies the hot loop by the profile count."""
-    stop_arrays = [F.array(*[F.lit(w) for w in profiles[lang]]) for lang in langs]
+    stop_arrays = [F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
+                   for lang in langs]
     zero = F.array_repeat(F.lit(0), len(langs))
     return F.aggregate(
         tokens(col), zero,
@@ -64,14 +64,12 @@ def _lang_score_array(col: Column, langs: list[str],
             lambda a, hit: a + hit))
 
 
-def detect_language(col: Column, profiles: dict[str, list[str]] | None = None,
-                    min_hits: int = 1) -> Column:
-    """Argmax language with deterministic tie-break (lexicographic lang
-    code — first max in sorted order wins); NULL when no profile scores
-    ≥ min_hits."""
-    profiles = profiles or LANG_PROFILES
-    langs = sorted(profiles)
-    scores = _lang_score_array(col, langs, profiles)
+def detect_language(col: Column, min_hits: int = 1) -> Column:
+    """Argmax language over ``LANG_PROFILES`` with deterministic
+    tie-break (lexicographic lang code — first max in sorted order
+    wins); NULL when no profile scores ≥ min_hits."""
+    langs = sorted(LANG_PROFILES)
+    scores = _lang_score_array(col, langs)
     best = F.array_max(scores)
     idx = F.array_position(scores, best)  # 1-based, first max
     lang = F.element_at(F.array(*[F.lit(lang) for lang in langs]), idx.cast("int"))
@@ -324,15 +322,12 @@ def quality_score(df: DataFrame, text_col: str = "text",
                 .withColumn("keep", score >= F.lit(0.7))
 
 
-def fingerprint(col: Column, normalize: bool = True) -> Column:
+def fingerprint(col: Column) -> Column:
     """Content fingerprint: md5 of whitespace-normalized lowercased text.
     md5 is identical across engines — the exact-dedup join key."""
-    c = col
-    if normalize:
-        # collapse FIRST, then trim: trim() only strips spaces, so a
-        # trailing "\n" would survive trim-then-collapse as " "
-        c = F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-    return F.md5(c)
+    # collapse FIRST, then trim: trim() only strips spaces, so a
+    # trailing "\n" would survive trim-then-collapse as " "
+    return F.md5(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))))
 
 
 # ---------- Unicode canonicalization (dedup-key tier, r12) ----------
@@ -394,11 +389,11 @@ _CANON_MULTI: list[tuple[str, str]] = [
 _CANON_WS_PATTERN = "[ \t\n\r\f]+"
 
 
-def canonical_text(col: Column, case_fold: bool = True) -> Column:
+def canonical_text(col: Column) -> Column:
     """Canonical form of free text — the dedup-key normalization
     (see the tier comment above).  NULL propagates.  Chain order:
     translate folds/drops → ligature/ellipsis expansion → whitespace
-    collapse → trim → optional case fold (collapse BEFORE trim, the
+    collapse → trim → case fold (collapse BEFORE trim, the
     :func:`fingerprint` lesson: trim only strips spaces)."""
     src = "".join(_CANON_1TO1) + _CANON_DROP
     dst = "".join(_CANON_1TO1.values())
@@ -406,10 +401,10 @@ def canonical_text(col: Column, case_fold: bool = True) -> Column:
     for s, d in _CANON_MULTI:
         c = F.replace(c, F.lit(s), F.lit(d))
     c = F.trim(F.regexp_replace(c, _CANON_WS_PATTERN, " "))
-    return F.lower(c) if case_fold else c
+    return F.lower(c)
 
 
-def canonical_text_sql(expr: str, case_fold: bool = True) -> str:
+def canonical_text_sql(expr: str) -> str:
     """Render :func:`canonical_text` as ANSI SQL over ``expr`` — the
     oracle replay, generated from the SAME fold tables so the two
     engines cannot drift.  (DuckDB's regexp_replace needs the explicit
@@ -422,12 +417,11 @@ def canonical_text_sql(expr: str, case_fold: bool = True) -> str:
     for s, d in _CANON_MULTI:
         e = f"replace({e}, {q(s)}, {q(d)})"
     e = f"trim(regexp_replace({e}, {q(_CANON_WS_PATTERN)}, ' ', 'g'))"
-    return f"lower({e})" if case_fold else e
+    return f"lower({e})"
 
 
 def nfkc_text(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id",
-              case_fold: bool = True) -> DataFrame:
+              id_col: str = "doc_id") -> DataFrame:
     """Full NFKC normalization — the fidelity tier above
     :func:`canonical_text` for corpora where the JVM fold tables'
     subset isn't enough.  Returns ``(id, canon_text, changed)``.
@@ -436,7 +430,7 @@ def nfkc_text(df: DataFrame, text_col: str = "text",
     ``compression_ratio`` pattern): no JVM builtin speaks NFKC, and
     ``unicodedata`` is stdlib, deterministic for a given Unicode
     version, and vectorizes fine over Arrow batches.  ``casefold()``
-    (not ``lower()``) when folding — the Unicode-correct many-to-one
+    (not ``lower()``) folds case — the Unicode-correct many-to-one
     case map NFKC pipelines pair with."""
     from pyspark.sql.types import (
         BooleanType,
@@ -462,10 +456,8 @@ def nfkc_text(df: DataFrame, text_col: str = "text",
                 if t is None:
                     rows.append((mid, None, None))
                     continue
-                c = unicodedata.normalize("NFKC", t)
-                if case_fold:
-                    c = c.casefold()
-                c = " ".join(c.split())
+                c = " ".join(unicodedata.normalize("NFKC", t)
+                             .casefold().split())
                 rows.append((mid, c, c != t))
             yield pd.DataFrame(rows, columns=[id_col, "canon_text",
                                               "changed"])
@@ -501,21 +493,19 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_pii(col: Column, patterns: dict[str, str] | None = None) -> Column:
-    """Replace each PII match with its ``[TAG]``; application order is the
-    sorted tag order (deterministic)."""
-    patterns = patterns or PII_PATTERNS
+def redact_pii(col: Column) -> Column:
+    """Replace each ``PII_PATTERNS`` match with its ``[TAG]``; application
+    order is the sorted tag order (deterministic)."""
     out = col
-    for tag in sorted(patterns):
-        out = F.regexp_replace(out, patterns[tag], f"[{tag}]")
+    for tag in sorted(PII_PATTERNS):
+        out = F.regexp_replace(out, PII_PATTERNS[tag], f"[{tag}]")
     return out
 
 
-def pii_counts(col: Column, patterns: dict[str, str] | None = None) -> list[Column]:
-    """One count column per PII tag (``n_<tag>``)."""
-    patterns = patterns or PII_PATTERNS
-    return [F.size(F.regexp_extract_all(col, F.lit(patterns[tag]), 0)).alias(f"n_{tag.lower()}")
-            for tag in sorted(patterns)]
+def pii_counts(col: Column) -> list[Column]:
+    """One count column per ``PII_PATTERNS`` tag (``n_<tag>``)."""
+    return [F.size(F.regexp_extract_all(col, F.lit(PII_PATTERNS[tag]), 0))
+            .alias(f"n_{tag.lower()}") for tag in sorted(PII_PATTERNS)]
 
 
 def strip_high_df_tokens(df: DataFrame, text_col: str = "text",
@@ -628,8 +618,7 @@ def lm_surprisal(df: DataFrame, text_col: str = "text",
 
 
 def compression_ratio(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id", level: int = 6,
-                      rows_per_batch: int | None = None) -> DataFrame:
+                      id_col: str = "doc_id", level: int = 6) -> DataFrame:
     """Per-document zlib compression ratio — the entropy-proxy quality
     signal (Gopher, Rae et al. 2021 §A1.1 filters on it: highly
     compressible text is repetitive boilerplate, incompressible text is
@@ -640,14 +629,9 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
     and the signal is worth one vectorized Python pass. Ratio =
     compressed/raw bytes of UTF-8 text; NULL text → ratio NULL.
     Deterministic: zlib at a fixed level is stable across platforms for
-    identical input bytes.
-
-    ``rows_per_batch`` is None by default — text rows are small, so the
-    session's Arrow batch size is fine (unlike the multimodal codecs,
-    whose megabyte payloads need tiny batches). Passing a value sets
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` SESSION-WIDE (the
-    conf is read at execution time, so a set-then-restore would not
-    reach the executors) — callers own that tradeoff explicitly.
+    identical input bytes.  Text rows are small, so the session's Arrow
+    batch size serves (unlike the multimodal codecs, whose megabyte
+    payloads need tiny batches).
     """
     from pyspark.sql.types import (
         DoubleType,
@@ -656,10 +640,6 @@ def compression_ratio(df: DataFrame, text_col: str = "text",
         StructType,
     )
 
-    spark = df.sparkSession
-    if rows_per_batch is not None:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                       str(rows_per_batch))
     schema = StructType([
         StructField(id_col, LongType()),
         StructField("n_bytes", LongType()),

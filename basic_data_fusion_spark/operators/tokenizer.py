@@ -101,84 +101,9 @@ def bpe_train(df: DataFrame, n_merges: int, text_col: str = "text",
     return merges
 
 
-def bpe_train_batched(df: DataFrame, n_merges: int, text_col: str = "text",
-                      min_pair_count: int = 2, batch_size: int = 16,
-                      ) -> tuple[list[tuple[str, str, int]], int]:
-    """``bpe_train`` with the driver-round latency wall removed: learn
-    SEVERAL non-interacting merges per pair-count job (the standard
-    batched-BPE trick), provably producing the IDENTICAL merge sequence.
-    Returns (merges, n_rounds) — n_rounds is the number of pair-count
-    jobs, vs exactly ``n_merges`` jobs for the sequential trainer (a 32k
-    production vocab = 32k sequential jobs; batching divides that by the
-    accepted-batch size, typically ≥4× on natural text).
-
-    Exactness argument: candidates are scanned in the sequential
-    tie-break order (count desc, pair asc). A prefix is accepted while
-    each pair is symbol-disjoint from every earlier accepted pair AND
-    from their concatenations; the scan stops at the first conflict,
-    whose count becomes the round's ``bound``. Applying an accepted
-    merge only changes counts of pairs sharing its symbols (all ranked
-    at/after the first conflict ⇒ count ≤ bound, and they only decrease)
-    or pairs involving its new symbol (each occurrence implies an
-    occurrence of an old symbol-sharing pair ⇒ count ≤ bound). So after
-    truncating the accepted prefix to counts STRICTLY above the bound
-    (the head pair — the exact argmax — always stays), each accepted
-    pair is still the argmax at its sequential turn. Ties at the bound
-    are pushed to the next round rather than risked."""
-    words = (word_counts(df, text_col)
-             .select(_to_symbols(F.col("word")).alias("syms"), "n")
-             .localCheckpoint())
-    merges: list[tuple[str, str, int]] = []
-    rounds = 0
-    while len(merges) < n_merges:
-        k = max(2, int(batch_size) + 1)  # +1 lookahead slot for the bound
-        pairs = (words.select(
-            F.explode(F.when(
-                F.size("syms") >= 2,
-                F.transform(F.sequence(F.lit(1), (F.size("syms") - 1).cast("int")),
-                            lambda i: F.struct(
-                                F.element_at("syms", i).alias("left"),
-                                F.element_at("syms", (i + 1).cast("int")).alias("right"))))
-             .otherwise(F.array().cast("array<struct<left:string,right:string>>"))
-            ).alias("p"), "n")
-            .groupBy("p.left", "p.right").agg(F.sum("n").alias("c")))
-        cands = (pairs.orderBy(F.desc("c"), F.asc("left"), F.asc("right"))
-                 .limit(k).collect())
-        rounds += 1
-        if not cands or cands[0]["c"] < min_pair_count:
-            break
-        accepted: list[tuple[str, str, int]] = []
-        used: set[str] = set()
-        bound: int | None = None
-        complete = len(cands) < k  # the collected list is the whole table
-        for row in cands:
-            if row["c"] < min_pair_count:
-                break  # below-threshold tail can never be selected
-            if row["left"] in used or row["right"] in used:
-                bound = int(row["c"])
-                break
-            accepted.append((row["left"], row["right"], int(row["c"])))
-            used.add(row["left"])
-            used.add(row["right"])
-            used.add(row["left"] + row["right"])  # the symbol this merge creates
-        else:
-            if not complete:
-                # uncollected pairs may exist at ≤ the last collected count
-                bound = int(cands[-1]["c"])
-        if bound is not None:
-            accepted = [accepted[0]] + [m for m in accepted[1:] if m[2] > bound]
-        accepted = accepted[: n_merges - len(merges)]
-        merges.extend(accepted)
-        syms: Column = F.col("syms")
-        for left, right, _ in accepted:
-            syms = _merge_pair(syms, left, right)
-        words = words.select(syms.alias("syms"), "n").localCheckpoint()
-    return merges, rounds
-
-
 def bpe_train_local(df: DataFrame, n_merges: int, text_col: str = "text",
                     min_pair_count: int = 2, max_vocab: int = 2_000_000,
-                    ) -> tuple[list[tuple[str, str, int]], int]:
+                    ) -> list[tuple[str, str, int]]:
     """The production BPE-training shape (HuggingFace tokenizers /
     SentencePiece): ONE distributed corpus pass builds the (word, n)
     frequency table — the only part that scales with data volume — then
@@ -190,12 +115,11 @@ def bpe_train_local(df: DataFrame, n_merges: int, text_col: str = "text",
 
     Exact: same (count desc, pair asc) argmax and leftmost-nonoverlap
     rewrite as ``bpe_train`` — differential-tested to produce identical
-    merge sequences. Returns (merges, n_spark_rounds) with
-    ``n_spark_rounds == 0`` per-merge rounds by construction.
+    merge sequences, returned in the same [(left, right, count)] form.
 
     The collect is bounded by ``max_vocab`` distinct words (raises
-    rather than silently truncating — fall back to ``bpe_train_batched``
-    for adversarially unbounded vocabularies)."""
+    rather than silently truncating — fall back to ``bpe_train`` for
+    adversarially unbounded vocabularies)."""
     from collections import Counter, defaultdict
 
     rows = (word_counts(df, text_col)
@@ -204,7 +128,7 @@ def bpe_train_local(df: DataFrame, n_merges: int, text_col: str = "text",
     if len(rows) > max_vocab:
         raise ValueError(
             f"vocabulary exceeds max_vocab={max_vocab}; "
-            "use bpe_train_batched for unbounded vocabularies")
+            "use bpe_train for unbounded vocabularies")
     wc = {r["word"]: int(r["n"]) for r in rows}
     words = {w: tuple(list(w[:-1]) + [w[-1] + "</w>"]) for w in wc}
 
@@ -258,7 +182,7 @@ def bpe_train_local(df: DataFrame, n_merges: int, text_col: str = "text",
             for p in zip(new, new[1:]):
                 pair_counts[p] += n
                 pair_words[p].add(w)
-    return merges, 0
+    return merges
 
 
 def bpe_encode(df: DataFrame, merges: list[tuple[str, str, int]],

@@ -18,14 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def write_bucketed(df: DataFrame, table: str, key: str, buckets: int = 64,
-                   sort: bool = True, mode: str = "overwrite") -> None:
-    """Persist as a managed table bucketed (and optionally sorted) by
-    ``key``. Bucket count is a layout contract: join sides must agree
-    (or be a multiple under `spark.sql.bucketing.coalesceBucketsInJoin`)."""
-    w = df.write.mode(mode).bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.saveAsTable(table)
+                   mode: str = "overwrite") -> None:
+    """Persist as a managed table bucketed and sorted by ``key``. Bucket
+    count is a layout contract: join sides must agree (or be a multiple
+    under `spark.sql.bucketing.coalesceBucketsInJoin`)."""
+    df.write.mode(mode).bucketBy(buckets, key).sortBy(key).saveAsTable(table)
 
 
 def bucketed_join(spark: SparkSession, left_table: str, right_table: str,

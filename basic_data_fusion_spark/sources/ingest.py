@@ -152,29 +152,26 @@ def validate_csv_path(path: str, max_size_mb: int = MAX_SIZE_MB_DEFAULT,
 def ingest_csv(spark: SparkSession, path: str,
                primary_id: str | None = None, session_id: str | None = None,
                composite_id: str = "customID",
-               sanitize: bool = True,
-               max_size_mb: int = MAX_SIZE_MB_DEFAULT,
-               validate: bool = True) -> tuple[DataFrame, ValidationResult]:
+               max_size_mb: int = MAX_SIZE_MB_DEFAULT
+               ) -> tuple[DataFrame, ValidationResult]:
     """Validated, sanitized, composite-keyed CSV relation.
 
     reference: file_handling/csv_utils.py:145-227 (process_csv_file) +
     432-484 (composite-ID). The composite id is derived in the plan, not
     written back."""
-    result = (validate_csv_path(path, max_size_mb, spark=spark)
-              if validate else ValidationResult())
+    result = validate_csv_path(path, max_size_mb, spark=spark)
     if not result.ok:
         return None, result
 
     df = (spark.read.option("header", True).option("inferSchema", True)
           .csv(path))
-    if sanitize:
-        new_cols, mapping = sanitize_column_names(df.columns)
-        renamed = {o: s for o, s in mapping.items() if o != s}
-        if renamed:
-            df = df.toDF(*new_cols)
-            result.warnings.append(
-                f"Sanitized {len(renamed)} column name(s) in "
-                f"'{os.path.basename(path)}'")
+    new_cols, mapping = sanitize_column_names(df.columns)
+    renamed = {o: s for o, s in mapping.items() if o != s}
+    if renamed:
+        df = df.toDF(*new_cols)
+        result.warnings.append(
+            f"Sanitized {len(renamed)} column name(s) in "
+            f"'{os.path.basename(path)}'")
     if primary_id and session_id and primary_id in df.columns \
             and session_id in df.columns and composite_id not in df.columns:
         df = with_composite_id(df, primary_id, session_id, composite_id)

@@ -35,28 +35,25 @@ def empty_and_sparse_columns(df: DataFrame, sparse_threshold: float = 0.95
     return empty, sparse
 
 
-def prepare_export(df: DataFrame, sort_by: str | None = None,
-                   drop_empty: bool = True) -> tuple[DataFrame, dict]:
+def prepare_export(df: DataFrame,
+                   sort_by: str | None = None) -> tuple[DataFrame, dict]:
     """Sorted, empty-column-dropped export relation + an info dict
     (dropped/sparse columns). reference: analysis/export.py:340-398."""
-    info: dict = {"dropped_empty": [], "sparse_warned": []}
-    if drop_empty:
-        empty, sparse = empty_and_sparse_columns(df)
-        if empty:
-            df = df.drop(*empty)
-            info["dropped_empty"] = empty
-        info["sparse_warned"] = sparse
+    empty, sparse = empty_and_sparse_columns(df)
+    if empty:
+        df = df.drop(*empty)
+    info = {"dropped_empty": empty, "sparse_warned": sparse}
     if sort_by and sort_by in df.columns:
         df = df.orderBy(sort_by)
     return df, info
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False,
-              sort_by: str | None = None, drop_empty: bool = True) -> dict:
+              sort_by: str | None = None) -> dict:
     """Write the export CSV. Distributed multi-part by default;
     ``single_file`` coalesces to one partition (driver-download parity
     with the reference's one-CSV response)."""
-    out, info = prepare_export(df, sort_by=sort_by, drop_empty=drop_empty)
+    out, info = prepare_export(df, sort_by=sort_by)
     writer = (out.coalesce(1) if single_file else out)
     writer.write.mode("overwrite").option("header", True).csv(path)
     return info

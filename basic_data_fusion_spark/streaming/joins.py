@@ -26,8 +26,7 @@ def stream_interval_join(left: DataFrame, right: DataFrame,
                          left_on: str, right_on: str,
                          left_ts: str, right_ts: str,
                          lower_s: int, upper_s: int,
-                         watermark: str = "1 hour",
-                         strict_lower: bool = True) -> DataFrame:
+                         watermark: str = "1 hour") -> DataFrame:
     """INNER join pairs ``(l, r)`` with ``l.key == r.key`` and ``r.ts ∈
     (l.ts + lower_s, l.ts + upper_s]`` over two streams. Column names
     must be disjoint (same contract as the batch ``interval_join``)."""
@@ -37,9 +36,8 @@ def stream_interval_join(left: DataFrame, right: DataFrame,
             f"stream_interval_join needs disjoint column names: {sorted(overlap)}")
     l = left.withWatermark(left_ts, watermark)
     r = right.withWatermark(right_ts, watermark)
-    lo_op = ">" if strict_lower else ">="
     cond = (
         (F.col(left_on) == F.col(right_on))
-        & F.expr(f"{right_ts} {lo_op} {left_ts} + INTERVAL {int(lower_s)} SECONDS")
+        & F.expr(f"{right_ts} > {left_ts} + INTERVAL {int(lower_s)} SECONDS")
         & F.expr(f"{right_ts} <= {left_ts} + INTERVAL {int(upper_s)} SECONDS"))
     return l.join(r, cond, "inner")

@@ -10,9 +10,10 @@ labels, quantile sketches, IVF vector index):
 * **Layout.**  A store is a directory of ``run_id=R/batch_id=N``
   partitions.  Batch N of run R overwrites exactly its own directory,
   so a retried batch rewrites the same files instead of duplicating
-  rows.  ``R`` is the caller's ``run_id`` or is derived from the
-  checkpoint path (:func:`_derived_run_id`): stable across restarts of
-  one query and distinct across fresh checkpoints.  Batch ids restart
+  rows.  ``R`` is derived from the checkpoint path
+  (:func:`_derived_run_id`; :func:`cluster_label_sink` also takes an
+  explicit ``run_id``): stable across restarts of one query and
+  distinct across fresh checkpoints.  Batch ids restart
   at 0 per checkpoint, so without the run level a second run would
   overwrite the first run's batch 0.  The checkpoint records batch
   progress, so an AvailableNow restart resumes instead of reprocessing.
@@ -82,6 +83,7 @@ from ..operators.similarity import (
 )
 from ..operators.text import fingerprint
 from ..session import local_frame
+from ..sources.partitioning import spread_narrow
 
 
 def _derived_run_id(checkpoint: str) -> str:
@@ -167,13 +169,13 @@ def _assert_store_layout(spark: SparkSession, path: str) -> None:
             f"partition tree Spark cannot list")
 
 
-def _start(df: DataFrame, checkpoint: str, available_now: bool, run: str,
+def _start(df: DataFrame, checkpoint: str, run: str,
            stores: tuple[str, ...], write, compact_every: int | None,
            compact) -> StreamingQuery:
     """Check the layout of every store the sink writes, then start ``df``
-    through ``foreachBatch``: each batch runs ``write(batch_df,
-    batch_id)``, and every ``compact_every``-th batch then runs
-    ``compact(spark, (run, batch_id))``."""
+    through ``foreachBatch`` under an AvailableNow trigger: each batch
+    runs ``write(batch_df, batch_id)``, and every ``compact_every``-th
+    batch then runs ``compact(spark, (run, batch_id))``."""
     for store in stores:
         _assert_store_layout(df.sparkSession, store)
 
@@ -182,20 +184,17 @@ def _start(df: DataFrame, checkpoint: str, available_now: bool, run: str,
         if compact_every and (batch_id + 1) % int(compact_every) == 0:
             compact(batch_df.sparkSession, (run, batch_id))
 
-    writer = (df.writeStream.foreachBatch(batch_fn)
-              .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (df.writeStream.foreachBatch(batch_fn)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True).start())
 
 
-def exactly_once_parquet_sink(df: DataFrame, path: str, checkpoint: str,
-                              available_now: bool = True,
-                              run_id: str | None = None) -> StreamingQuery:
+def exactly_once_parquet_sink(df: DataFrame, path: str,
+                              checkpoint: str) -> StreamingQuery:
     """Write a streaming DataFrame to ``path``, one replay-idempotent
     ``run_id=R/batch_id=N`` directory per micro-batch."""
-    run = run_id or _derived_run_id(checkpoint)
-    return _start(df, checkpoint, available_now, run, (path,),
+    run = _derived_run_id(checkpoint)
+    return _start(df, checkpoint, run, (path,),
                   lambda b, i: _put(b, path, run, i), None, None)
 
 
@@ -208,8 +207,6 @@ def read_sink(spark: SparkSession, path: str) -> DataFrame:
 def index_backed_dedup_sink(df: DataFrame, out_path: str, index_path: str,
                             checkpoint: str, text_col: str = "text",
                             id_col: str = "doc_id",
-                            available_now: bool = True,
-                            run_id: str | None = None,
                             compact_every: int | None = None) -> StreamingQuery:
     """Streaming exact dedup with an UNBOUNDED horizon.  Each micro-batch
     anti-joins a persisted content-hash index, dedups within itself (the
@@ -223,7 +220,7 @@ def index_backed_dedup_sink(df: DataFrame, out_path: str, index_path: str,
     batch shuffles once on the hash; document bodies never shuffle.
     ``compact_every`` folds the index with :func:`compact_index_store`.
     """
-    run = run_id or _derived_run_id(checkpoint)
+    run = _derived_run_id(checkpoint)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -240,7 +237,7 @@ def index_backed_dedup_sink(df: DataFrame, out_path: str, index_path: str,
         _put(survivors.select("__h").distinct(), index_path, run, batch_id)
         survivors.unpersist()
 
-    return _start(df, checkpoint, available_now, run, (out_path, index_path),
+    return _start(df, checkpoint, run, (out_path, index_path),
                   write, compact_every,
                   lambda spark, keep: compact_index_store(spark, index_path,
                                                           keep))
@@ -249,8 +246,6 @@ def index_backed_dedup_sink(df: DataFrame, out_path: str, index_path: str,
 def quantile_sketch_sink(df: DataFrame, sketch_path: str, checkpoint: str,
                          part_col: str, value_col: str,
                          lo: float, hi: float, bins: int = 1024,
-                         available_now: bool = True,
-                         run_id: str | None = None,
                          compact_every: int | None = None) -> StreamingQuery:
     """Streaming side of the mergeable quantile tier
     (``aggregations.quantile_hist_sketch``).  Each micro-batch reduces to
@@ -266,7 +261,7 @@ def quantile_sketch_sink(df: DataFrame, sketch_path: str, checkpoint: str,
     duplicated one is not inert; provenance is what lets the readers
     fold crash duplicates exactly.  ``compact_every`` folds with
     :func:`compact_sketch_store`."""
-    run = run_id or _derived_run_id(checkpoint)
+    run = _derived_run_id(checkpoint)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         _put(quantile_hist_sketch(batch_df, part_col, value_col, lo, hi, bins)
@@ -274,7 +269,7 @@ def quantile_sketch_sink(df: DataFrame, sketch_path: str, checkpoint: str,
              .withColumn("src_batch", F.lit(int(batch_id)).cast("long")),
              sketch_path, run, batch_id)
 
-    return _start(df, checkpoint, available_now, run, (sketch_path,), write,
+    return _start(df, checkpoint, run, (sketch_path,), write,
                   compact_every,
                   lambda spark, keep: compact_sketch_store(spark, sketch_path,
                                                            keep))
@@ -362,8 +357,6 @@ def minhash_index_sink(df: DataFrame, out_path: str, index_path: str,
                        id_col: str = "doc_id", n: int = 3,
                        num_hashes: int = 64, bands: int = 16,
                        threshold: float = 0.8, seed: int = 42,
-                       available_now: bool = True,
-                       run_id: str | None = None,
                        compact_every: int | None = None) -> StreamingQuery:
     """Streaming FUZZY dedup with an unbounded horizon: the MinHash tier
     above :func:`index_backed_dedup_sink`'s exact tier.  Each micro-batch
@@ -376,7 +369,7 @@ def minhash_index_sink(df: DataFrame, out_path: str, index_path: str,
     ``index_path/bands``.  Only survivors are indexed: a dropped
     duplicate's canonical is already there.  ``compact_every`` folds both
     relations with :func:`compact_minhash_index`."""
-    run = run_id or _derived_run_id(checkpoint)
+    run = _derived_run_id(checkpoint)
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         sig = minhash_signatures(batch_df, text_col, id_col, n,
@@ -394,7 +387,7 @@ def minhash_index_sink(df: DataFrame, out_path: str, index_path: str,
         survivors.unpersist()
         sig.unpersist()
 
-    return _start(df, checkpoint, available_now, run,
+    return _start(df, checkpoint, run,
                   (out_path, f"{index_path}/bands", f"{index_path}/sigs"),
                   write, compact_every,
                   lambda spark, keep: compact_minhash_index(spark, index_path,
@@ -542,7 +535,6 @@ def cluster_label_sink(df: DataFrame, labels_path: str, index_path: str,
                        id_col: str = "doc_id", n: int = 3,
                        num_hashes: int = 64, bands: int = 16,
                        threshold: float = 0.8, seed: int = 42,
-                       available_now: bool = True,
                        run_id: str | None = None,
                        compact_every: int | None = None) -> StreamingQuery:
     """Streaming near-duplicate CLUSTER maintenance with an unbounded
@@ -614,20 +606,18 @@ def cluster_label_sink(df: DataFrame, labels_path: str, index_path: str,
         compact_cluster_labels(spark, labels_path, keep)
         compact_minhash_index(spark, index_path, keep)
 
-    return _start(df, checkpoint, available_now, run,
+    return _start(df, checkpoint, run,
                   (labels_path, f"{index_path}/bands", f"{index_path}/sigs"),
                   write, compact_every, compact)
 
 
 def _ivf_rows(df: DataFrame, centroids: list[list[float]], id_col: str,
-              vec_col: str, metric: str,
-              repartition_input: bool) -> DataFrame:
+              vec_col: str, metric: str) -> DataFrame:
     """``similarity.ivf_index`` rows plus the precomputed self-dot
     ``__cc`` of ``metric``'s tier, so probes skip the corpus norm pass."""
     self_dot = fixed_point_self_dot if metric == "fixed_cosine" else \
         (lambda v: dot(v, v))
-    return (ivf_index(df, centroids, id_col, vec_col, metric=metric,
-                      repartition_input=repartition_input)
+    return (ivf_index(df, centroids, id_col, vec_col, metric=metric)
             .withColumn("__cc", self_dot(F.col(vec_col))))
 
 
@@ -635,8 +625,6 @@ def vector_index_sink(df: DataFrame, index_path: str, checkpoint: str,
                       centroids: list[list[float]],
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       metric: str = "cosine",
-                      available_now: bool = True,
-                      run_id: str | None = None,
                       compact_every: int | None = None) -> StreamingQuery:
     """Streaming IVF vector-index maintenance.  Each micro-batch of
     embeddings is assigned to its cell against the driver-literal
@@ -653,11 +641,11 @@ def vector_index_sink(df: DataFrame, index_path: str, checkpoint: str,
     (:func:`retrain_vector_index`).  ``metric`` must match the probe's
     tier: ``"fixed_cosine"`` for the deterministic tier, ``"cosine"``
     for the fast one."""
-    run = run_id or _derived_run_id(checkpoint)
+    run = _derived_run_id(checkpoint)
     return _start(
-        df, checkpoint, available_now, run, (index_path,),
-        lambda b, i: _put(_ivf_rows(b, centroids, id_col, vec_col, metric,
-                                    False), index_path, run, i),
+        df, checkpoint, run, (index_path,),
+        lambda b, i: _put(_ivf_rows(b, centroids, id_col, vec_col, metric),
+                          index_path, run, i),
         compact_every,
         lambda spark, keep: compact_index_store(spark, index_path, keep))
 
@@ -678,8 +666,7 @@ def retrain_vector_index(spark: SparkSession, index_path: str,
                          id_col: str = "vec_id",
                          vec_col: str = "embedding",
                          metric: str = "cosine", max_iter: int = 20,
-                         seed: int = 42,
-                         run_id: str | None = None) -> list[list[float]]:
+                         seed: int = 42) -> list[list[float]]:
     """Centroid-drift remedy for a :func:`vector_index_sink` store, whose
     cells are fixed at first build, so on a drifting corpus cell balance
     and recall decay (``similarity.centroid_drift_report`` prices it).
@@ -697,8 +684,8 @@ def retrain_vector_index(spark: SparkSession, index_path: str,
               .select(id_col, vec_col))
     cents = train_centroids(corpus, k=k, vec_col=vec_col,
                             max_iter=max_iter, seed=seed)
-    _put(_ivf_rows(corpus, cents, id_col, vec_col, metric, True),
-         new_index_path, run_id or _derived_run_id(new_index_path), 0)
+    _put(_ivf_rows(spread_narrow(corpus), cents, id_col, vec_col, metric),
+         new_index_path, _derived_run_id(new_index_path), 0)
     return cents
 
 
@@ -713,8 +700,7 @@ def maybe_retrain_vector_index(spark: SparkSession, index_path: str,
                                vec_col: str = "embedding",
                                query_id_col: str = "query_id",
                                metric: str = "cosine",
-                               max_iter: int = 20, seed: int = 42,
-                               run_id: str | None = None,
+                               max_iter: int = 20, seed: int = 42
                                ) -> tuple[dict, list[list[float]] | None]:
     """Drift-triggered retrain: audit the accumulated store with
     ``similarity.centroid_drift_report`` and rebuild with
@@ -752,5 +738,5 @@ def maybe_retrain_vector_index(spark: SparkSession, index_path: str,
     cents = retrain_vector_index(
         spark, index_path, new_index_path, k=len(centroids),
         id_col=id_col, vec_col=vec_col, metric=metric,
-        max_iter=max_iter, seed=seed, run_id=run_id)
+        max_iter=max_iter, seed=seed)
     return decision, cents

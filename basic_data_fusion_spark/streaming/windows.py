@@ -12,8 +12,8 @@ provide the streaming entry points.
 Scale notes:
 - window aggs shuffle once on (window, *keys) — the grouping key is tiny;
 - watermarks bound streaming state: late rows beyond the watermark drop;
-- sums over doubles use fixed-point accumulation when determinism is
-  required (driver oracle hashes values bit-exactly).
+- sums over doubles use fixed-point accumulation (the oracle compares
+  values bit-exactly).
 """
 
 from __future__ import annotations
@@ -24,64 +24,49 @@ from pyspark.sql import functions as F
 from ..functions.scalars import fixed_point_sum
 
 
-def _agg_exprs(value_col: str | None, deterministic_sum: bool) -> list[Column]:
+def _window_agg(df: DataFrame, win: Column, keys: list[str] | None,
+                value_col: str | None, start: str, end: str) -> DataFrame:
+    """Count, fixed-point sum, min and max of ``value_col`` per
+    (window, *keys); the window struct becomes ``start``/``end``."""
+    keys = keys or []
     aggs = [F.count(F.lit(1)).alias("n_events")]
     if value_col:
-        total = (fixed_point_sum(F.col(value_col)) if deterministic_sum
-                 else F.sum(value_col))
-        aggs.append(total.alias(f"sum_{value_col}"))
-        aggs.append(F.min(value_col).alias(f"min_{value_col}"))
-        aggs.append(F.max(value_col).alias(f"max_{value_col}"))
-    return aggs
+        aggs += [fixed_point_sum(F.col(value_col)).alias(f"sum_{value_col}"),
+                 F.min(value_col).alias(f"min_{value_col}"),
+                 F.max(value_col).alias(f"max_{value_col}")]
+    out = df.groupBy(win.alias("win"), *keys).agg(*aggs)
+    return out.select(F.col("win.start").alias(start),
+                      F.col("win.end").alias(end),
+                      *keys,
+                      *[c for c in out.columns if c not in ("win", *keys)])
 
 
 def tumbling_window_agg(df: DataFrame, ts_col: str, duration: str,
                         keys: list[str] | None = None,
-                        value_col: str | None = "value",
-                        deterministic_sum: bool = True) -> DataFrame:
+                        value_col: str | None = "value") -> DataFrame:
     """Fixed (tumbling) window counts/sums, e.g. duration='1 day'.
     Works unchanged on a streaming DataFrame (add a watermark first)."""
-    keys = keys or []
-    win = F.window(ts_col, duration)
-    out = (df.groupBy(win.alias("win"), *keys)
-           .agg(*_agg_exprs(value_col, deterministic_sum)))
-    return out.select(F.col("win.start").alias("window_start"),
-                      F.col("win.end").alias("window_end"),
-                      *keys,
-                      *[c for c in out.columns if c not in ("win", *keys)])
+    return _window_agg(df, F.window(ts_col, duration), keys, value_col,
+                       "window_start", "window_end")
 
 
 def sliding_window_agg(df: DataFrame, ts_col: str, duration: str, slide: str,
                        keys: list[str] | None = None,
-                       value_col: str | None = "value",
-                       deterministic_sum: bool = True) -> DataFrame:
+                       value_col: str | None = "value") -> DataFrame:
     """Overlapping (sliding) windows: each event lands in duration/slide
     windows. Spark expands the row per window before the shuffle."""
-    keys = keys or []
-    win = F.window(ts_col, duration, slide)
-    out = (df.groupBy(win.alias("win"), *keys)
-           .agg(*_agg_exprs(value_col, deterministic_sum)))
-    return out.select(F.col("win.start").alias("window_start"),
-                      F.col("win.end").alias("window_end"),
-                      *keys,
-                      *[c for c in out.columns if c not in ("win", *keys)])
+    return _window_agg(df, F.window(ts_col, duration, slide), keys,
+                       value_col, "window_start", "window_end")
 
 
 def session_window_agg(df: DataFrame, ts_col: str, gap: str,
                        keys: list[str] | None = None,
-                       value_col: str | None = "value",
-                       deterministic_sum: bool = True) -> DataFrame:
+                       value_col: str | None = "value") -> DataFrame:
     """Gap-based session windows per key (session ends after ``gap`` of
     inactivity; window end = last event + gap). In streaming mode this is
     a stateful operator bounded by the watermark."""
-    keys = keys or []
-    win = F.session_window(ts_col, gap)
-    out = (df.groupBy(win.alias("win"), *keys)
-           .agg(*_agg_exprs(value_col, deterministic_sum)))
-    return out.select(F.col("win.start").alias("session_start"),
-                      F.col("win.end").alias("session_end"),
-                      *keys,
-                      *[c for c in out.columns if c not in ("win", *keys)])
+    return _window_agg(df, F.session_window(ts_col, gap), keys, value_col,
+                       "session_start", "session_end")
 
 
 def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:

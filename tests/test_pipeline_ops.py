@@ -649,14 +649,11 @@ def test_bpe_train_matches_reference_algorithm(spark):
 
 
 def test_bpe_trainer_tiers_identical_merges(spark):
-    """All three trainer tiers must learn the IDENTICAL merge sequence
-    (order and counts included). The local tier removes the per-merge
-    Spark-round latency wall entirely (0 rounds vs n_merges — far past
-    the ≥4× bar); the batched tier must also beat sequential rounds
-    while staying exact."""
+    """Both trainer tiers must learn the IDENTICAL merge sequence (order
+    and counts included). The local tier removes the per-merge
+    Spark-round latency wall entirely."""
     from basic_data_fusion_spark.operators.tokenizer import (
         bpe_train,
-        bpe_train_batched,
         bpe_train_local,
     )
 
@@ -664,21 +661,13 @@ def test_bpe_trainer_tiers_identical_merges(spark):
     n = 24
     seq = bpe_train(docs, n_merges=n)          # n_merges pair-count rounds
     assert len(seq) == n
-    local, lrounds = bpe_train_local(docs, n_merges=n)
-    assert local == seq
-    assert lrounds == 0                        # no per-merge cluster jobs
-    assert lrounds * 4 <= len(seq)
-    batched, rounds = bpe_train_batched(docs, n_merges=n, batch_size=16)
-    assert batched == seq
-    assert rounds < len(seq), f"{rounds} rounds for {len(seq)} merges"
-    # conflict-heavy tiny corpus: batching degrades gracefully, never
-    # diverges from the sequential sequence
+    assert bpe_train_local(docs, n_merges=n) == seq
+    # conflict-heavy tiny corpus: never diverges from the sequential
+    # sequence
     tiny = spark.createDataFrame(
         [(1, "ab ab ab abc abc bc bc bcd cd cd cd")],
         "doc_id long, text string")
-    assert bpe_train_batched(tiny, n_merges=6, batch_size=8)[0] == \
-        bpe_train(tiny, n_merges=6)
-    assert bpe_train_local(tiny, n_merges=6)[0] == bpe_train(tiny, n_merges=6)
+    assert bpe_train_local(tiny, n_merges=6) == bpe_train(tiny, n_merges=6)
 
 
 def test_unigram_trainer_distributed_matches_local(spark):

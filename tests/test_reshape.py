@@ -45,6 +45,22 @@ def test_enwiden_wide_shape_and_values(spark):
     assert got["S1"]["sex"] == "M" and got["S3"]["sex"] is None
 
 
+def test_enwiden_auto_split_matches_explicit_split(spark):
+    """``auto_split=True`` pivots the dynamic column and keeps the static
+    one: exactly the frame of ``split_static_dynamic``'s lists passed
+    explicitly."""
+    df = _long_df(spark)
+    auto = enwiden(df, pid="pid", session_col="session_num", order_col="ord",
+                   auto_split=True)
+    static, dynamic = split_static_dynamic(df, "pid", ["score", "sex"])
+    explicit = enwiden(df, pid="pid", session_col="session_num",
+                       order_col="ord", value_cols=dynamic, static_cols=static)
+    assert auto.columns == explicit.columns == \
+        ["pid", "score_BAS1", "score_BAS2", "score_BAS3", "sex"]
+    assert auto.schema == explicit.schema
+    assert sorted(auto.collect()) == sorted(explicit.collect())
+
+
 def test_enwiden_first_non_null_by_order(spark):
     # two rows for same (pid, session): first-by-order wins; nulls never win
     rows = [("S1", "1", 2, 99.0), ("S1", "1", 1, None), ("S1", "1", 3, 42.0)]

@@ -388,6 +388,36 @@ def test_catalog_reads_jsonl(spark, tmp_path):
     assert got == want  # doubles round-trip bit-exact through JSON repr
 
 
+def test_catalog_nanos_timestamp_file_and_directory_agree(spark, tmp_path):
+    """A parquet table with a TIMESTAMP(NANOS) column loads as the same
+    microsecond ``timestamp`` whether it is stored as one file or as a
+    directory of part files."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from basic_data_fusion_spark.catalog import Catalog
+
+    ts = [datetime.datetime(2024, 1, 2, 3, 4, 5, 678901),
+          datetime.datetime(1999, 12, 31, 23, 59, 59)]
+    table = pa.table({"id": pa.array([1, 2], pa.int64()),
+                      "ts": pa.array(ts, pa.timestamp("ns", tz="UTC"))})
+    (tmp_path / "file").mkdir()
+    pq.write_table(table, tmp_path / "file" / "t.parquet")
+    (tmp_path / "dir" / "t.parquet").mkdir(parents=True)
+    pq.write_table(table, tmp_path / "dir" / "t.parquet" / "part-0.parquet")
+
+    got = {}
+    for form in ("file", "dir"):
+        df = Catalog(spark, str(tmp_path / form), primary_id="id",
+                     hub_table="t").load("t")
+        got[form] = (df.dtypes, sorted(df.collect()))
+    assert got["file"][0] == [("id", "bigint"), ("ts", "timestamp")]
+    assert got["dir"] == got["file"]
+    assert [r.ts for r in got["dir"][1]] == ts  # rows sorted by id
+
+
 def test_catalog_sql_surface(spark):
     """register_views + sql(): raw ANSI SQL plans against the catalog's
     lazy views through the same Catalyst pipeline; view names pass the

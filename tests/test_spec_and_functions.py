@@ -278,6 +278,30 @@ def test_no_create_dataframe_outside_local_frame():
     assert offenders == []
 
 
+def _code_files():
+    """``(package dir, every .py file that may call into the package)``:
+    the package, the contracts, ``perfbench/``, ``scripts/``,
+    ``bench.py`` and the tests."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "basic_data_fusion_spark"
+    return pkg, [*pkg.rglob("*.py"), root / "__spark_entry__.py",
+                 root / "bench.py", *(root / "perfbench").rglob("*.py"),
+                 *(root / "scripts").rglob("*.py"),
+                 *(root / "tests").rglob("*.py")]
+
+
+def _call_name(call) -> str | None:
+    """The name a call site uses: ``f(...)`` and ``mod.f(...)`` both
+    give ``f``."""
+    import ast
+
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else \
+        f.attr if isinstance(f, ast.Attribute) else None
+
+
 def test_no_unreferenced_public_definitions():
     """Every top-level public ``def``/``class`` of the package is named in
     code somewhere — the package, the contracts, ``perfbench/``,
@@ -285,13 +309,8 @@ def test_no_unreferenced_public_definitions():
     comment does not count; a name held in a string constant (a registry
     key) does."""
     import ast
-    import pathlib
 
-    root = pathlib.Path(__file__).resolve().parent.parent
-    pkg = root / "basic_data_fusion_spark"
-    files = [*pkg.rglob("*.py"), root / "__spark_entry__.py",
-             root / "bench.py", *(root / "perfbench").rglob("*.py"),
-             *(root / "scripts").rglob("*.py"), *(root / "tests").rglob("*.py")]
+    pkg, files = _code_files()
     named = set()
     for path in files:
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
@@ -310,3 +329,45 @@ def test_no_unreferenced_public_definitions():
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
         and not node.name.startswith("_") and node.name not in named]
     assert unreferenced == []
+
+
+def test_no_unflipped_switches():
+    """Every ``True``/``False``-default parameter of a package ``def`` is
+    passed, by keyword or by position, at some call site in the code
+    files.  A switch no caller flips is a configuration nobody runs:
+    make it the default and delete the branch it guards.  Calls match by
+    name, as in :func:`test_no_unreferenced_public_definitions`; a
+    ``*args`` call passes no position and a ``**kwargs`` call no
+    keyword."""
+    import ast
+
+    pkg, files = _code_files()
+    keywords, positions = set(), {}
+    for path in files:
+        for call in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            name = _call_name(call) if isinstance(call, ast.Call) else None
+            if name is None:
+                continue
+            keywords |= {(name, k.arg) for k in call.keywords if k.arg}
+            if not any(isinstance(a, ast.Starred) for a in call.args):
+                positions[name] = max(positions.get(name, 0), len(call.args))
+    unflipped = []
+    for path in sorted(pkg.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            pos = fn.args.posonlyargs + fn.args.args
+            bound = 1 if pos and pos[0].arg in ("self", "cls") else 0
+            defaults = [*zip(pos[len(pos) - len(fn.args.defaults):],
+                             fn.args.defaults),
+                        *zip(fn.args.kwonlyargs, fn.args.kw_defaults)]
+            for arg, default in defaults:
+                if not (isinstance(default, ast.Constant)
+                        and isinstance(default.value, bool)):
+                    continue
+                by_position = (arg in pos and positions.get(fn.name, 0)
+                               > pos.index(arg) - bound)
+                if not by_position and (fn.name, arg.arg) not in keywords:
+                    unflipped.append(
+                        f"{path.relative_to(pkg)}:{fn.name}.{arg.arg}")
+    assert unflipped == []
