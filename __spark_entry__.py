@@ -8117,54 +8117,6 @@ FROM r
 """
 
 
-def q_interleave_order_distributed(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """Distributed-total-order interleave (NEW r7,
-    selection.interleave_order_distributed): the EXACT single-stream
-    contract — one global serve order, same weights, same oracle as
-    ``interleave_order`` — but the global rank comes from
-    ordering.total_order_pos (range shuffle + map-side local ids +
-    broadcast per-partition offsets), so no data-sized relation moves
-    through one task."""
-    from basic_data_fusion_spark.operators.selection import (
-        interleave_order_distributed,
-    )
-
-    docs = _catalog(spark, sf_dir).load("documents")
-    return interleave_order_distributed(docs, {"src0": 3.0, "src1": 2.0})
-
-
-def q_curriculum_order_distributed(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """Distributed-total-order curriculum (NEW r7,
-    selection.curriculum_order_distributed): same contract and oracle
-    as ``curriculum_order`` (NTILE stages easy→hard + global serve
-    position) with both global windows replaced by total_order_pos
-    ranks and the NTILE bucket recomputed integer-exactly from the
-    global rank."""
-    from basic_data_fusion_spark.operators.selection import (
-        curriculum_order_distributed,
-    )
-
-    docs = _catalog(spark, sf_dir).load("documents")
-    return curriculum_order_distributed(docs, "n_chars", n_stages=4)
-
-
-def q_pack_sequences_distributed(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """Distributed contiguous-fill packing (NEW r7,
-    packing.pack_sequences_distributed): same contract and oracle as
-    ``pack_sequences`` — one global running token offset in id order —
-    with the prefix sum computed by ordering.global_running_sum
-    instead of a partition-less window."""
-    from basic_data_fusion_spark.operators.packing import (
-        pack_sequences_distributed,
-    )
-
-    docs = _catalog(spark, sf_dir).load("documents")
-    return pack_sequences_distributed(docs, budget=256)
-
-
 def q_length_bucketed_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sorted-batching report (NEW r8,
     packing.length_bucketed_batches): docs sort by (token count, id),
@@ -9248,9 +9200,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interleave_gate_sharded": q_interleave_gate_sharded,
         "curriculum_order_sharded": q_curriculum_order_sharded,
         "pack_sequences_sharded": q_pack_sequences_sharded,
-        "interleave_order_distributed": q_interleave_order_distributed,
-        "curriculum_order_distributed": q_curriculum_order_distributed,
-        "pack_sequences_distributed": q_pack_sequences_distributed,
         "incremental_clusters": q_incremental_clusters,
         # ---- round-8 additions ----
         "incremental_clusters_banded": q_incremental_clusters_banded,
@@ -9431,9 +9380,6 @@ def oracle_sql() -> dict[str, str]:
         # the distributed twins keep the single-stream contract EXACTLY,
         # so they verify against the same oracle SQL — that identity is
         # the point (same total order, no partition-less window)
-        "interleave_order_distributed": _INTERLEAVE_ORDER_ORACLE,
-        "curriculum_order_distributed": _CURRICULUM_ORACLE,
-        "pack_sequences_distributed": _PACK_ORACLE,
         "incremental_clusters": _incremental_clusters_oracle(),
         "incremental_clusters_banded": _incremental_clusters_banded_oracle(),
         "length_bucketed_batches": _LENGTH_BUCKETED_ORACLE,

@@ -5,8 +5,7 @@ Replaces the reference's per-file pandas metadata layer
 100-row dtype samples, FIFO cache) with a Spark-native catalog:
 
 - one directory scan registers every table (S1),
-- schemas come from the Parquet footer / one CSV inference pass (S2/S3),
-- distinct value lists are capped, ordered scans (S5/S6).
+- schemas come from the Parquet footer / one CSV inference pass (S2/S3).
 
 Merge-structure detection (reference: data_handling/merge_strategy.py:24-115)
 is generalized: a dataset is *longitudinal* when the hub table carries the
@@ -20,7 +19,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,9 +89,6 @@ class TableInfo:
     dtypes: dict[str, str]
     is_dimension: bool = False  # small table → broadcast-join candidate
 
-    def numeric_columns(self) -> list[str]:
-        return [c for c in self.columns if is_numeric_dtype(self.dtypes[c])]
-
 
 class Catalog:
     """Registry of named tables over a data directory (parquet or csv).
@@ -102,10 +97,6 @@ class Catalog:
     At 100 TB the registry maps to external-catalog tables; nothing here
     assumes data fits anywhere.
     """
-
-    # Tables under this row-count estimate get a broadcast hint in joins.
-    DIMENSION_ROW_THRESHOLD = 10_000_000
-    DISTINCT_CAP = 1000  # reference: analysis/statistics.py:82-85
 
     def __init__(self, spark: SparkSession, data_dir: str, fmt: str | None = None,
                  primary_id: str = "ursi", session_id: str = "session_num",
@@ -195,21 +186,6 @@ class Catalog:
             self._info_cache[name] = ti
         return ti
 
-    # ---------------- distinct values (S5/S6) ----------------
-    def distinct_values(self, table: str, column: str, cap: int | None = None) -> list:
-        cap = cap or self.DISTINCT_CAP
-        df = self.load(table)
-        rows = (df.select(column).where(F.col(column).isNotNull())
-                  .distinct().orderBy(column).limit(cap).collect())
-        return [r[0] for r in rows]
-
-    def distinct_sessions(self) -> list:
-        """Ordered distinct sessions from the hub (reference: metadata.py:547-613)."""
-        mk = self.merge_keys()
-        if not mk.is_longitudinal:
-            return []
-        return self.distinct_values(self.hub_table, mk.session_id)
-
     # ---------------- merge-structure detection ----------------
     def merge_keys(self) -> MergeKeys:
         """Cross-sectional vs longitudinal (reference: merge_strategy.py:79-115):
@@ -240,10 +216,6 @@ class Catalog:
             if cand in lowered:
                 return lowered[cand]
         raise ValueError(f"no id column found in hub table; columns={sorted(cols)}")
-
-    # ---------------- utility ----------------
-    def union_all(self, dfs: list[DataFrame]) -> DataFrame:
-        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
     # ---------------- SQL surface ----------------
     def register_views(self, prefix: str = "") -> list[str]:

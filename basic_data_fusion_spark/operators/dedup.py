@@ -1340,17 +1340,23 @@ def simhash64(col: Column, n: int = 2) -> Column:
     ONE pass over the shingle array with a 64-wide vote accumulator
     (``aggregate`` + ``zip_with``) — the naive 64-independent-aggregates
     formulation re-traverses the array per bit and is ~50× slower."""
-    grams = word_shingles(col, n)
-    hashes = F.transform(grams, lambda s: F.xxhash64(s))
-    masks = F.array(*[F.lit(_signed_mask(b)).cast("long") for b in range(64)])
-    zero64 = F.array_repeat(F.lit(0), 64)
+    hashes = F.transform(word_shingles(col, n), lambda s: F.xxhash64(s))
+    return _simhash_fold(hashes, [_signed_mask(b) for b in range(64)])
+
+
+def _simhash_fold(hashes: Column, masks: list[int]) -> Column:
+    """The SimHash vote fold shared by both tiers: per mask bit, the sum
+    of ±1 votes over ``hashes``; the result ORs the masks whose vote is
+    positive."""
+    m_arr = F.array(*[F.lit(m).cast("long") for m in masks])
+    zero = F.array_repeat(F.lit(0), len(masks))
     votes = F.aggregate(
-        hashes, zero64,
+        hashes, zero,
         lambda acc, h: F.zip_with(
             acc,
-            F.transform(masks, lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)),
+            F.transform(m_arr, lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)),
             lambda a, v: a + v))
-    bits = F.zip_with(votes, masks,
+    bits = F.zip_with(votes, m_arr,
                       lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")))
     return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc + x)
 
@@ -1592,22 +1598,10 @@ def simhash60_det(col: Column, n: int = 2) -> Column:
     xxhash64 ``simhash64`` stays the fast 64-bit tier). Same one-pass
     60-wide vote fold; all masks positive (no signed-bit two's-complement
     special case)."""
-    grams = word_shingles(col, n)
     hashes = F.transform(
-        grams,
+        word_shingles(col, n),
         lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(60)])
-    zero = F.array_repeat(F.lit(0), 60)
-    votes = F.aggregate(
-        hashes, zero,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.transform(masks, lambda m: F.when(h.bitwiseAND(m) != 0, 1)
-                        .otherwise(-1)),
-            lambda a, v: a + v))
-    bits = F.zip_with(votes, masks,
-                      lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")))
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda acc, x: acc + x)
+    return _simhash_fold(hashes, [1 << b for b in range(60)])
 
 
 def simhash_near_dups_det(df: DataFrame, text_col: str = "text",

@@ -1,14 +1,9 @@
 """Distributed total order: exact global ranks and running sums with no
 data-sized relation through a single task.
 
-The single-stream serve-order operators (``selection.interleave_order``,
-``selection.curriculum_order``, ``packing.pack_sequences``) materialize a
-total order with a partition-less window — correct, engine-portable, and
-a single-partition sort at the extreme.  The sharded tier changes the
-contract (per-shard positions).  This module keeps the EXACT
-single-stream contract and distributes it: the classic two-pass
-zipWithIndex/prefix-sum decomposition, expressed entirely in DataFrame
-operators.
+In place of a partition-less window (a single-partition sort at the
+extreme): the classic two-pass zipWithIndex/prefix-sum decomposition,
+expressed entirely in DataFrame operators.
 
 ``total_order_pos`` (global rank):
 

@@ -9,9 +9,10 @@ DataFrame expressions with deterministic, oracle-checkable output.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .selection import serve_shard
 from .text import tokens
 
 
@@ -46,8 +47,8 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 64,
 
 
 def pack_sequences(df: DataFrame, budget: int = 256,
-                   text_col: str = "text", id_col: str = "doc_id",
-                   bucket_col=None) -> DataFrame:
+                   text_col: str = "text",
+                   id_col: str = "doc_id") -> DataFrame:
     """Assign documents to fixed-token-budget training packs:
     ``(id, n_tokens, pack_id)``. Contiguous-fill semantics: docs are
     taken in ``id`` order and a doc belongs to the pack its STARTING
@@ -59,31 +60,32 @@ def pack_sequences(df: DataFrame, budget: int = 256,
     The running sum is a window over a global order — a single-partition
     sort at the extreme. That is fine up to ~billions of rows of (id,
     count) pairs (the window sees two longs per doc, never text); beyond
-    that use ``pack_sequences_sharded`` (md5 serve shards via
-    ``bucket_col`` — tested, plan-guarded) or pass your own
-    ``bucket_col``: packing then runs per bucket in parallel and
-    ``pack_id`` is unique via (bucket, local_pack) composition."""
+    that use ``pack_sequences_sharded``, which packs each md5 serve
+    shard in parallel (tested, plan-guarded)."""
+    return _pack(df, budget, text_col, id_col, None)
+
+
+def _pack(df: DataFrame, budget: int, text_col: str, id_col: str,
+          shard: Column | None) -> DataFrame:
+    """Contiguous fill over one stream (``shard`` None), or within each
+    serve shard with ``pack_id = 'shard_localpack'``."""
+    keys = [] if shard is None else ["shard"]
     toks = F.coalesce(F.size(_clean_tokens(text_col)), F.lit(0)).cast("long")
     base = df.select(F.col(id_col), toks.alias("n_tokens"),
-                     *([F.col(bucket_col)] if bucket_col else []))
-    if bucket_col:
-        w = Window.partitionBy(bucket_col).orderBy(id_col) \
-                  .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    else:
-        w = Window.orderBy(id_col) \
-                  .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+                     *([] if shard is None else [shard.alias("shard")]))
+    w = (Window.partitionBy(*keys).orderBy(id_col)
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     offset = F.sum("n_tokens").over(w) - F.col("n_tokens")
     # long `div` long — exact integer division with no 2^53 double
     # bound; offsets are total token counts, which exceed 2^53 well
     # before a window would anyway
     staged = base.withColumn("__off", offset)
-    local_pack = F.expr(f"__off div {int(budget)}").cast("long")
-    if bucket_col:
-        pack = F.concat_ws("_", F.col(bucket_col).cast("string"),
-                           local_pack.cast("string"))
-    else:
-        pack = local_pack
-    return staged.select(F.col(id_col), "n_tokens", pack.alias("pack_id"))
+    pack = F.expr(f"__off div {int(budget)}").cast("long")
+    if shard is not None:
+        pack = F.concat_ws("_", F.col("shard").cast("string"),
+                           pack.cast("string"))
+    return staged.select(F.col(id_col), "n_tokens", *keys,
+                         pack.alias("pack_id"))
 
 
 def packing_efficiency_sweep(df: DataFrame, context_lengths: list[int],
@@ -130,29 +132,6 @@ def packing_efficiency_sweep(df: DataFrame, context_lengths: list[int],
         .orderBy("ctx"))
 
 
-def pack_sequences_distributed(df: DataFrame, budget: int = 256,
-                               text_col: str = "text",
-                               id_col: str = "doc_id") -> DataFrame:
-    """``pack_sequences`` with the EXACT same contract — one global
-    contiguous fill in ``id`` order, bit-identical (id, n_tokens,
-    pack_id) — but the running token offset comes from
-    ``ordering.global_running_sum`` (range shuffle + per-partition
-    prefix sums + broadcast offsets) instead of a partition-less
-    window, so no data-sized relation moves through one task.  Same
-    oracle SQL as the single-stream tier (equivalence-tested).  The
-    offset and pack arithmetic stays in longs end to end (long sums,
-    long `div`), so the distributed path is bit-deterministic with no
-    2^53 double-exactness bound."""
-    from .ordering import global_running_sum
-
-    toks = F.coalesce(F.size(_clean_tokens(text_col)), F.lit(0)).cast("long")
-    base = df.select(F.col(id_col), toks.alias("n_tokens"))
-    cum = global_running_sum(base, [id_col], "n_tokens", "__cum")
-    staged = cum.withColumn("__off", F.col("__cum") - F.col("n_tokens"))
-    pack = F.expr(f"__off div {int(budget)}").cast("long")
-    return staged.select(F.col(id_col), "n_tokens", pack.alias("pack_id"))
-
-
 def pack_sequences_sharded(df: DataFrame, budget: int = 256,
                            n_shards: int = 16,
                            text_col: str = "text",
@@ -160,23 +139,13 @@ def pack_sequences_sharded(df: DataFrame, budget: int = 256,
     """``pack_sequences`` with NO global window — the tested 100 TB
     path: documents route to md5 serve shards (``selection.serve_shard``
     — length-independent, so shard fill rates match the corpus) and the
-    contiguous-fill running sum is per-shard (``bucket_col`` machinery),
-    giving globally-unique ``pack_id = 'shard_localpack'``.  The window
-    partitions by shard, so no (id, count) relation moves through one
-    task; restricted to one shard the packing is exactly
-    ``pack_sequences`` of that shard's documents.
-    Returns (id, n_tokens, shard, pack_id)."""
-    from .selection import serve_shard
-
-    sharded = df.withColumn("__shard",
-                            serve_shard(F.col(id_col), n_shards))
-    packed = pack_sequences(sharded, budget, text_col, id_col,
-                            bucket_col="__shard")
-    # pack_sequences projects the bucket away; re-derive it (same
-    # deterministic md5 expression, map-side, no extra shuffle)
-    return packed.select(
-        F.col(id_col), "n_tokens",
-        serve_shard(F.col(id_col), n_shards).alias("shard"), "pack_id")
+    contiguous-fill running sum is per-shard, giving globally-unique
+    ``pack_id = 'shard_localpack'``.  The window partitions by shard, so
+    no (id, count) relation moves through one task; restricted to one
+    shard the packing is exactly ``pack_sequences`` of that shard's
+    documents.  Returns (id, n_tokens, shard, pack_id)."""
+    return _pack(df, budget, text_col, id_col,
+                 serve_shard(F.col(id_col), n_shards))
 
 
 def length_bucketed_batches(df: DataFrame, batch_size: int = 16,

@@ -468,17 +468,7 @@ def curriculum_order(df: DataFrame, score_col: str, id_col: str = "doc_id",
     md5 serve shards so no global sort exists (tested, plan-guarded).
     Returns (id, score, stage, serve_pos).
     """
-    w_stage = Window.orderBy(F.col(score_col).asc(), F.col(id_col).asc())
-    h = F.md5(F.col(id_col).cast("string"))
-    staged = df.select(
-        F.col(id_col), F.col(score_col),
-        F.ntile(n_stages).over(w_stage).alias("stage"),
-        h.alias("__h"))
-    w_serve = Window.orderBy(F.col("stage").asc(), F.col("__h").asc(),
-                             F.col(id_col).asc())
-    return (staged
-            .withColumn("serve_pos", F.row_number().over(w_serve).cast("long"))
-            .select(id_col, score_col, "stage", "serve_pos"))
+    return _curriculum(df, score_col, id_col, n_stages, None)
 
 
 def corpus_composition(df: DataFrame, source_col: str = "source",
@@ -530,19 +520,8 @@ def interleave_order(df: DataFrame, weights: dict[str, float],
     rank_in_source, serve_pos). Reference analogue: none (serving
     extension).
     """
-    w_expr = _source_weight(weights, source_col, default_weight)
-    h = F.md5(F.col(id_col).cast("string"))
-    w_src = Window.partitionBy(source_col).orderBy(h.asc(), F.col(id_col).asc())
-    ranked = df.select(
-        F.col(id_col), F.col(source_col),
-        F.row_number().over(w_src).cast("long").alias("rank_in_source"),
-        w_expr.alias("__w"))
-    stride = F.col("rank_in_source").cast("double") / F.col("__w")
-    w_serve = Window.orderBy(stride.asc(), F.col(source_col).asc(),
-                             F.col("rank_in_source").asc())
-    return (ranked
-            .withColumn("serve_pos", F.row_number().over(w_serve).cast("long"))
-            .select(id_col, source_col, "rank_in_source", "serve_pos"))
+    return _interleave(df, weights, source_col, id_col, default_weight,
+                       None)
 
 
 def interleave_mixture_gate(df: DataFrame, weights: dict[str, float],
@@ -564,36 +543,14 @@ def interleave_mixture_gate(df: DataFrame, weights: dict[str, float],
     sources absent from the prefix still get a (zero-share, failing)
     row. All joins are broadcasts of source-cardinality relations.
     """
-    serve = interleave_order(df, weights, source_col, id_col,
-                             default_weight)
-    w_expr = _source_weight(weights, source_col, default_weight)
-    sources = (serve.groupBy(source_col)
-               .agg(F.count(F.lit(1)).cast("long").alias("n_source"))
-               .withColumn("__w", w_expr))
-    totals = sources.agg(F.sum("__w").alias("__sum_w"),
-                         F.sum("n_source").alias("__n"))
-    k = F.ceil(F.col("__n") * F.lit(float(prefix_frac))).cast("long")
-    prefix = (serve.crossJoin(F.broadcast(totals))
-              .filter(F.col("serve_pos") <= k)
-              .groupBy(source_col)
-              .agg(F.count(F.lit(1)).cast("long").alias("n_prefix")))
-    out = (sources.join(prefix, source_col, "left")
-           .crossJoin(F.broadcast(totals)))
-    n_prefix = F.coalesce(F.col("n_prefix"), F.lit(0)).cast("long")
-    k_out = F.ceil(F.col("__n") * F.lit(float(prefix_frac))).cast("long")
-    target = F.col("__w") / F.col("__sum_w")
-    share = n_prefix.cast("double") / k_out
-    return (out.select(
-        F.col(source_col), F.col("n_source"),
-        n_prefix.alias("n_prefix"),
-        k_out.alias("prefix_len"),
-        target.alias("target_share"),
-        share.alias("prefix_share"),
-        (F.abs(share - target) <= F.lit(float(band))).alias("within_band"))
-        .orderBy(source_col))
+    return _mixture_gate(df, weights, source_col, id_col, prefix_frac,
+                         band, default_weight, None)
 
 
-# ---------------- sharded serve-order tier (the 100 TB path) ----------------
+# ---------------- serve orders: one body per algorithm ----------------
+# Each body serves one stream when ``shard`` is None; given a shard-id
+# Column it runs the same algorithm within every serve shard (the shard
+# leads every partition and grouping key and is output as ``shard``).
 
 def _source_weight(weights: dict[str, float], source_col: str,
                    default_weight: float) -> Column:
@@ -618,17 +575,94 @@ def serve_shard(col: Column, n_shards: int) -> Column:
         .cast("long"), F.lit(int(n_shards))).cast("int")
 
 
+def _interleave(df: DataFrame, weights: dict[str, float], source_col: str,
+                id_col: str, default_weight: float,
+                shard: Column | None) -> DataFrame:
+    keys = [] if shard is None else ["shard"]
+    ranked = df.select(
+        F.col(id_col), F.col(source_col),
+        *([] if shard is None else [shard.alias("shard")]),
+        F.md5(F.col(id_col).cast("string")).alias("__h"),
+        _source_weight(weights, source_col, default_weight).alias("__w"))
+    w_src = (Window.partitionBy(*keys, source_col)
+             .orderBy(F.col("__h").asc(), F.col(id_col).asc()))
+    ranked = ranked.withColumn(
+        "rank_in_source", F.row_number().over(w_src).cast("long"))
+    stride = F.col("rank_in_source").cast("double") / F.col("__w")
+    w_serve = (Window.partitionBy(*keys)
+               .orderBy(stride.asc(), F.col(source_col).asc(),
+                        F.col("rank_in_source").asc()))
+    return (ranked
+            .withColumn("serve_pos",
+                        F.row_number().over(w_serve).cast("long"))
+            .select(id_col, source_col, *keys, "rank_in_source",
+                    "serve_pos"))
+
+
+def _mixture_gate(df: DataFrame, weights: dict[str, float],
+                  source_col: str, id_col: str, prefix_frac: float,
+                  band: float, default_weight: float,
+                  shard: Column | None) -> DataFrame:
+    keys = [] if shard is None else ["shard"]
+    serve = _interleave(df, weights, source_col, id_col, default_weight,
+                        shard)
+    sources = (serve.groupBy(*keys, source_col)
+               .agg(F.count(F.lit(1)).cast("long").alias("n_source"))
+               .withColumn("__w", _source_weight(weights, source_col,
+                                                 default_weight)))
+    totals = (sources.groupBy(*keys)
+              .agg(F.sum("__w").alias("__sum_w"),
+                   F.sum("n_source").alias("__n")))
+    # one stream has a one-row totals relation: joined with no key
+    on = keys or None
+    k = F.ceil(F.col("__n") * F.lit(float(prefix_frac))).cast("long")
+    prefix = (serve.join(F.broadcast(totals), on)
+              .filter(F.col("serve_pos") <= k)
+              .groupBy(*keys, source_col)
+              .agg(F.count(F.lit(1)).cast("long").alias("n_prefix")))
+    out = (sources.join(prefix, [*keys, source_col], "left")
+           .join(F.broadcast(totals), on))
+    n_prefix = F.coalesce(F.col("n_prefix"), F.lit(0)).cast("long")
+    target = F.col("__w") / F.col("__sum_w")
+    share = n_prefix.cast("double") / k
+    return (out.select(
+        *keys, F.col(source_col), F.col("n_source"),
+        n_prefix.alias("n_prefix"),
+        k.alias("prefix_len"),
+        target.alias("target_share"),
+        share.alias("prefix_share"),
+        (F.abs(share - target) <= F.lit(float(band))).alias("within_band"))
+        .orderBy(*keys, source_col))
+
+
+def _curriculum(df: DataFrame, score_col: str, id_col: str, n_stages: int,
+                shard: Column | None) -> DataFrame:
+    keys = [] if shard is None else ["shard"]
+    w_stage = (Window.partitionBy(*keys)
+               .orderBy(F.col(score_col).asc(), F.col(id_col).asc()))
+    staged = (df.select(F.col(id_col), F.col(score_col),
+                        *([] if shard is None else [shard.alias("shard")]),
+                        F.md5(F.col(id_col).cast("string")).alias("__h"))
+              .withColumn("stage", F.ntile(n_stages).over(w_stage)))
+    w_serve = (Window.partitionBy(*keys)
+               .orderBy(F.col("stage").asc(), F.col("__h").asc(),
+                        F.col(id_col).asc()))
+    return (staged
+            .withColumn("serve_pos",
+                        F.row_number().over(w_serve).cast("long"))
+            .select(id_col, score_col, *keys, "stage", "serve_pos"))
+
+
 def interleave_order_sharded(df: DataFrame, weights: dict[str, float],
                              n_shards: int = 16,
                              source_col: str = "source",
                              id_col: str = "doc_id",
                              default_weight: float = 1.0) -> DataFrame:
     """``interleave_order`` with NO global window — the tested 100 TB
-    path the single-stream tier's docstring previously only described:
-    documents route to ``n_shards`` serve shards by an md5 hash of the
-    id (source-independent, so every shard sees the same mixture in
-    expectation), and the stride-scheduling interleave runs WITHIN each
-    shard (``serve_pos`` is per-shard; training serves shard files
+    path: documents route to ``n_shards`` serve shards by an md5 hash
+    of the id (source-independent, so every shard sees the same mixture
+    in expectation), and the stride-scheduling interleave runs WITHIN
+    each shard (``serve_pos`` is per-shard; training serves shard files
     round-robin or in parallel, the standard sharded-manifest layout).
 
     Both windows carry a partition key — per-source rank partitions by
@@ -640,25 +674,8 @@ def interleave_order_sharded(df: DataFrame, weights: dict[str, float],
     by ``interleave_mixture_gate_sharded``.
     Returns (id, source, shard, rank_in_source, serve_pos).
     """
-    w_expr = _source_weight(weights, source_col, default_weight)
-    h = F.md5(F.col(id_col).cast("string"))
-    ranked = df.select(
-        F.col(id_col), F.col(source_col),
-        serve_shard(F.col(id_col), n_shards).alias("shard"),
-        h.alias("__h"), w_expr.alias("__w"))
-    w_src = (Window.partitionBy("shard", source_col)
-             .orderBy(F.col("__h").asc(), F.col(id_col).asc()))
-    ranked = ranked.withColumn(
-        "rank_in_source", F.row_number().over(w_src).cast("long"))
-    stride = F.col("rank_in_source").cast("double") / F.col("__w")
-    w_serve = (Window.partitionBy("shard")
-               .orderBy(stride.asc(), F.col(source_col).asc(),
-                        F.col("rank_in_source").asc()))
-    return (ranked
-            .withColumn("serve_pos",
-                        F.row_number().over(w_serve).cast("long"))
-            .select(id_col, source_col, "shard", "rank_in_source",
-                    "serve_pos"))
+    return _interleave(df, weights, source_col, id_col, default_weight,
+                       serve_shard(F.col(id_col), n_shards))
 
 
 def interleave_mixture_gate_sharded(df: DataFrame,
@@ -685,105 +702,9 @@ def interleave_mixture_gate_sharded(df: DataFrame,
     Returns (shard, source, n_source, n_prefix, prefix_len,
     target_share, prefix_share, within_band).
     """
-    serve = interleave_order_sharded(df, weights, n_shards, source_col,
-                                     id_col, default_weight)
-    w_expr = _source_weight(weights, source_col, default_weight)
-    sources = (serve.groupBy("shard", source_col)
-               .agg(F.count(F.lit(1)).cast("long").alias("n_source"))
-               .withColumn("__w", w_expr))
-    totals = (sources.groupBy("shard")
-              .agg(F.sum("__w").alias("__sum_w"),
-                   F.sum("n_source").alias("__n")))
-    k = F.ceil(F.col("__n") * F.lit(float(prefix_frac))).cast("long")
-    prefix = (serve.join(F.broadcast(totals), "shard")
-              .filter(F.col("serve_pos") <= k)
-              .groupBy("shard", source_col)
-              .agg(F.count(F.lit(1)).cast("long").alias("n_prefix")))
-    out = (sources.join(prefix, ["shard", source_col], "left")
-           .join(F.broadcast(totals), "shard"))
-    n_prefix = F.coalesce(F.col("n_prefix"), F.lit(0)).cast("long")
-    k_out = F.ceil(F.col("__n") * F.lit(float(prefix_frac))).cast("long")
-    target = F.col("__w") / F.col("__sum_w")
-    share = n_prefix.cast("double") / k_out
-    return (out.select(
-        F.col("shard"), F.col(source_col), F.col("n_source"),
-        n_prefix.alias("n_prefix"),
-        k_out.alias("prefix_len"),
-        target.alias("target_share"),
-        share.alias("prefix_share"),
-        (F.abs(share - target) <= F.lit(float(band))).alias("within_band"))
-        .orderBy("shard", source_col))
-
-
-def interleave_order_distributed(df: DataFrame, weights: dict[str, float],
-                                 source_col: str = "source",
-                                 id_col: str = "doc_id",
-                                 default_weight: float = 1.0) -> DataFrame:
-    """``interleave_order`` with the EXACT same contract — one total
-    serve order, bit-identical output — but distributed: the global
-    serve rank comes from ``ordering.total_order_pos`` (range shuffle +
-    map-side local ranks + broadcast per-partition offsets) instead of
-    a partition-less window, so no data-sized relation moves through
-    one task.  Where the sharded tier changes the contract (per-shard
-    positions), this tier keeps it: same oracle SQL, same hashes as
-    ``interleave_order`` (equivalence-tested).  Returns (id, source,
-    rank_in_source, serve_pos)."""
-    from .ordering import total_order_pos
-
-    w_expr = _source_weight(weights, source_col, default_weight)
-    h = F.md5(F.col(id_col).cast("string"))
-    w_src = Window.partitionBy(source_col).orderBy(h.asc(), F.col(id_col).asc())
-    ranked = df.select(
-        F.col(id_col), F.col(source_col), w_expr.alias("__w"),
-        F.row_number().over(w_src).cast("long").alias("rank_in_source"))
-    ranked = ranked.withColumn(
-        "__stride", F.col("rank_in_source").cast("double") / F.col("__w"))
-    return (total_order_pos(ranked,
-                            ["__stride", source_col, "rank_in_source"],
-                            "serve_pos")
-            .select(id_col, source_col, "rank_in_source", "serve_pos"))
-
-
-def curriculum_order_distributed(df: DataFrame, score_col: str,
-                                 id_col: str = "doc_id",
-                                 n_stages: int = 4) -> DataFrame:
-    """``curriculum_order`` with the EXACT same contract, distributed:
-    both global windows (the NTILE stage assignment and the serve
-    order) are replaced by ``ordering.total_order_pos`` ranks.  NTILE
-    is recomputed from the global rank with ANSI
-    remainder-to-early-buckets semantics: with n rows and k stages the
-    first ``n mod k`` stages hold ``floor(n/k)+1`` rows, the rest
-    ``floor(n/k)`` (equivalence-tested against NTILE across n < k,
-    n % k != 0, and exact-multiple shapes).  Returns
-    (id, score, stage, serve_pos), bit-identical to the single-stream
-    tier — same oracle SQL."""
-    from .ordering import total_order_pos
-
-    k = int(n_stages)
-    ranked = total_order_pos(
-        df.select(F.col(id_col), F.col(score_col)),
-        [score_col, id_col], "__r")
-    n_total = ranked.groupBy().agg(
-        F.count(F.lit(1)).cast("long").alias("__n"))
-    d = ranked.join(F.broadcast(n_total))
-    # integer-exact floor division: a - a%b is an exact multiple, and
-    # dividing exact-multiple longs is exact in double up to 2^53
-    idiv = lambda a, b: ((a - F.pmod(a, b)) / b).cast("long")
-    big = F.col("__n") % k                      # stages holding one extra
-    size_small = idiv(F.col("__n"), F.lit(k))
-    size_big = size_small + 1
-    in_big = F.col("__r") <= big * size_big
-    stage = (F.when(
-        in_big, idiv(F.col("__r") - 1, size_big)
-    ).otherwise(
-        big + idiv(F.col("__r") - big * size_big - 1,
-                   F.greatest(size_small, F.lit(1)))
-    ).cast("int") + F.lit(1))
-    staged = d.select(
-        F.col(id_col), F.col(score_col), stage.alias("stage"),
-        F.md5(F.col(id_col).cast("string")).alias("__h"))
-    return (total_order_pos(staged, ["stage", "__h", id_col], "serve_pos")
-            .select(id_col, score_col, "stage", "serve_pos"))
+    return _mixture_gate(df, weights, source_col, id_col, prefix_frac,
+                         band, default_weight,
+                         serve_shard(F.col(id_col), n_shards))
 
 
 def curriculum_order_sharded(df: DataFrame, score_col: str,
@@ -797,17 +718,5 @@ def curriculum_order_sharded(df: DataFrame, score_col: str,
     per-shard.  Every window partitions by shard; restricted to one
     shard the output is exactly ``curriculum_order`` of that shard's
     documents.  Returns (id, score, shard, stage, serve_pos)."""
-    sh = serve_shard(F.col(id_col), n_shards)
-    h = F.md5(F.col(id_col).cast("string"))
-    w_stage = (Window.partitionBy("shard")
-               .orderBy(F.col(score_col).asc(), F.col(id_col).asc()))
-    staged = (df.select(F.col(id_col), F.col(score_col),
-                        sh.alias("shard"), h.alias("__h"))
-              .withColumn("stage", F.ntile(n_stages).over(w_stage)))
-    w_serve = (Window.partitionBy("shard")
-               .orderBy(F.col("stage").asc(), F.col("__h").asc(),
-                        F.col(id_col).asc()))
-    return (staged
-            .withColumn("serve_pos",
-                        F.row_number().over(w_serve).cast("long"))
-            .select(id_col, score_col, "shard", "stage", "serve_pos"))
+    return _curriculum(df, score_col, id_col, n_stages,
+                       serve_shard(F.col(id_col), n_shards))

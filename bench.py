@@ -169,9 +169,6 @@ HEADLINE += [
     "interleave_gate_sharded",       # per-shard prefix mixture gate
     "curriculum_order_sharded",      # per-shard curriculum stages + order
     "pack_sequences_sharded",        # per-shard contiguous-fill packing
-    "interleave_order_distributed",  # exact global order, prefix-sum ranks
-    "curriculum_order_distributed",  # exact NTILE curriculum, no global window
-    "pack_sequences_distributed",    # exact global fill, distributed prefix sum
     "incremental_clusters",          # batch merge into standing labels, no re-pair
 
     # new in round 8 (absent from BENCH_r07 and earlier)

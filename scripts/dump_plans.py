@@ -227,17 +227,6 @@ PICK_NOTES = {
                               "fill window partitions by the md5 "
                               "shard, pack ids compose as "
                               "shard_localpack.",
-    "interleave_order_distributed": "EXACT single-stream contract: "
-                                    "range shuffle + monotonic local "
-                                    "ids + broadcast per-partition "
-                                    "offsets; the only global window "
-                                    "rides the <=n_partitions count "
-                                    "relation.",
-    "pack_sequences_distributed": "Distributed prefix sum: per-"
-                                  "partition totals as broadcast "
-                                  "offsets + a partition-keyed local "
-                                  "running-sum window — bit-identical "
-                                  "to the single-stream fill.",
     "ks_acctbal_segments": "Merged ECDF as per-distinct-value counts "
                            "+ ONE distributed prefix-sum pass (both "
                            "group counters share the range shuffle); "

@@ -1092,13 +1092,6 @@ def test_pack_sequences_contiguous_fill(spark):
     # offsets: 0, 3, 5, 9 → packs 0, 0, 1, 2
     assert got == {1: 0, 2: 0, 3: 1, 4: 2}
 
-    bucketed = docs.withColumn("b", (F.col("doc_id") % 2).cast("int"))
-    gb = {r["doc_id"]: r["pack_id"]
-          for r in pack_sequences(bucketed, budget=4, bucket_col="b").collect()}
-    # bucket 1: docs 1,3 offsets 0,3 → packs 1_0; doc3 starts at 3 < 4 → 1_0
-    assert gb[1] == "1_0" and gb[3] == "1_0"
-    assert gb[2] == "0_0" and gb[4] == "0_0"
-
 
 def test_cross_corpus_overlap_detects_leak(spark):
     leak = "the quick brown fox jumps over the lazy dog tonight"
@@ -3209,43 +3202,24 @@ def test_total_order_primitives(spark):
     assert runs == expect
 
 
-def test_distributed_serve_twins_match_single_stream(spark):
-    """The distributed-total-order twins are bit-identical to their
-    single-stream tiers — same contract, no partition-less window over
-    the data.  Covers NTILE remainder shapes (n % k != 0, n < k) and
-    the pack running-sum boundary."""
-    from basic_data_fusion_spark.operators.packing import (
-        pack_sequences,
-        pack_sequences_distributed,
-    )
-    from basic_data_fusion_spark.operators.selection import (
-        curriculum_order,
-        curriculum_order_distributed,
-        interleave_order,
-        interleave_order_distributed,
-    )
+def test_global_ntile_matches_ntile(spark):
+    """ordering.global_ntile is bit-identical to ``F.ntile`` over the
+    same total order, across NTILE remainder shapes: n % k != 0,
+    n < k, exact multiples and a single row."""
+    from pyspark.sql import Window
 
-    rows = [(i, f"src{i % 3}", "word " * (5 + i % 7)) for i in range(123)]
-    df = (spark.createDataFrame(rows,
-                                "doc_id long, source string, text string")
-          .withColumn("n_chars", F.length("text")))
-    w = {"src0": 3.0, "src1": 2.0}
-    assert (sorted(map(tuple, interleave_order(df, w).collect()))
-            == sorted(map(tuple,
-                          interleave_order_distributed(df, w).collect())))
+    from basic_data_fusion_spark.operators.ordering import global_ntile
+
     for n, k in [(123, 4), (3, 5), (8, 4), (10, 4), (1, 4)]:
-        sub = df.limit(n)
-        assert (sorted(map(tuple,
-                           curriculum_order(sub, "n_chars",
-                                            n_stages=k).collect()))
-                == sorted(map(tuple,
-                              curriculum_order_distributed(
-                                  sub, "n_chars", n_stages=k).collect()))), \
-            f"curriculum n={n} k={k}"
-    assert (sorted(map(tuple, pack_sequences(df, budget=32).collect()))
-            == sorted(map(tuple,
-                          pack_sequences_distributed(df,
-                                                     budget=32).collect())))
+        rows = [(i * 37 % 11, i) for i in range(n)]  # tied scores
+        df = spark.createDataFrame(rows, "score long, id long")
+        got = {r["id"]: r["b"]
+               for r in global_ntile(df, ["score", "id"], k, "b").collect()}
+        w = Window.orderBy("score", "id")
+        exp = {r["id"]: r["b"]
+               for r in df.select("id", F.ntile(k).over(w).alias("b"))
+               .collect()}
+        assert got == exp, f"ntile n={n} k={k}"
 
 
 def test_interleave_gate_sharded_mirror(spark):
@@ -3297,7 +3271,7 @@ def test_interleave_gate_sharded_mirror(spark):
 def test_ordering_tier_degenerate_inputs(spark):
     """Empty and single-row relations through the distributed
     total-order machinery: offsets over an empty count relation must
-    not throw, ntile of one row is bucket 1, and the serve twins of an
+    not throw, ntile of one row is bucket 1, and both packers of an
     empty corpus are empty with the contract schema."""
     from basic_data_fusion_spark.operators.ordering import (
         global_ntile,
@@ -3305,7 +3279,8 @@ def test_ordering_tier_degenerate_inputs(spark):
         total_order_pos,
     )
     from basic_data_fusion_spark.operators.packing import (
-        pack_sequences_distributed,
+        pack_sequences,
+        pack_sequences_sharded,
     )
 
     empty = spark.createDataFrame([], "k long, v long")
@@ -3318,8 +3293,11 @@ def test_ordering_tier_degenerate_inputs(spark):
     assert global_ntile(one, ["k"], 4, "b").first()["b"] == 1
     assert global_running_sum(one, ["k"], "v", "rs").first()["rs"] == 3
     edocs = spark.createDataFrame([], "doc_id long, text string")
-    out = pack_sequences_distributed(edocs, budget=16)
+    out = pack_sequences(edocs, budget=16)
     assert out.columns == ["doc_id", "n_tokens", "pack_id"]
+    assert out.count() == 0
+    out = pack_sequences_sharded(edocs, budget=16, n_shards=4)
+    assert out.columns == ["doc_id", "n_tokens", "shard", "pack_id"]
     assert out.count() == 0
 
 

@@ -71,10 +71,13 @@ PINNED = [
     "semantic_dedup_det",
     "interleave_order_sharded",
     "pack_sequences_sharded",
-    "interleave_order_distributed",
-    "curriculum_order_distributed",
-    "pack_sequences_distributed",
     "incremental_clusters",
+    # the distributed total-order machine (ordering.py): range shuffle +
+    # local ranks + broadcast per-partition offsets, with the only
+    # global window over the offsets relation — total_order_pos and
+    # global_ntile each keep a pinned plan
+    "length_bucketed_batches",
+    "acctbal_deciles",
     # r11: the new fuzzy-gate threshold sweep (~2 s at sf0.1 — the
     # expensive-tier bar) — the pin freezes the broadcast-probe shape
     # (eval side broadcast at BOTH joins, explode on links only)

@@ -467,16 +467,14 @@ def test_interleave_gate_broadcast_totals(spark):
 
 
 def test_distributed_serve_no_data_sized_global_window(spark):
-    """The distributed-total-order twins keep the single-stream
-    contract but must never move a data-sized relation through one
-    task: any partition-less Window in their executed plans is allowed
-    ONLY over the per-partition offsets relation (it mentions the
-    __pid/__cnt/__tot bookkeeping columns and sits above a ≤
-    n_partitions-row aggregate).  Also: no Python/Arrow operators, and
-    the offsets side must broadcast."""
-    for name in ("interleave_order_distributed",
-                 "curriculum_order_distributed",
-                 "pack_sequences_distributed"):
+    """Contracts built on the distributed total-order machine
+    (``ordering.total_order_pos`` and ``global_ntile``) must never move
+    a data-sized relation through one task: any partition-less Window
+    in their executed plans is allowed ONLY over the per-partition
+    offsets relation (it mentions the __pid/__cnt/__tot bookkeeping
+    columns and sits above a ≤ n_partitions-row aggregate).  Also: no
+    Python/Arrow operators, and the offsets side must broadcast."""
+    for name in ("length_bucketed_batches", "acctbal_deciles"):
         df = entrymod.queries()[name](spark, SF0001)
         df.collect()  # materialize the checkpointed range shuffle
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -513,9 +511,8 @@ def test_sharded_serve_no_global_window(spark):
 
 
 # Queries whose data-sized global window is the CONTRACT, not an
-# accident: the single-stream serve tiers (sharded + distributed twins
-# exist for all of them) and the det-SQL verification tier whose rank
-# windows are shared-dialect SQL by design.
+# accident: the single-stream serve tiers (each has a sharded tier with
+# no global window).
 _GLOBAL_WINDOW_WHITELIST = {
     "interleave_order", "interleave_gate", "curriculum_order",
     "pack_sequences",          # serve-order contracts; tiers ship beside

@@ -303,11 +303,11 @@ def _call_name(call) -> str | None:
 
 
 def test_no_unreferenced_public_definitions():
-    """Every top-level public ``def``/``class`` of the package is named in
-    code somewhere — the package, the contracts, ``perfbench/``,
-    ``scripts/``, ``bench.py`` or the tests.  A mention in a docstring or
-    comment does not count; a name held in a string constant (a registry
-    key) does."""
+    """Every top-level public ``def``/``class`` of the package, and every
+    public method of a top-level class, is named in code somewhere — the
+    package, the contracts, ``perfbench/``, ``scripts/``, ``bench.py`` or
+    the tests.  A mention in a docstring or comment does not count; a
+    name held in a string constant (a registry key) does."""
     import ast
 
     pkg, files = _code_files()
@@ -322,12 +322,15 @@ def test_no_unreferenced_public_definitions():
                 named.add(node.name.rsplit(".", 1)[-1])
             elif isinstance(node, ast.Constant) and isinstance(node.value, str):
                 named.add(node.value)
-    unreferenced = [
-        f"{path.relative_to(pkg)}:{node.name}"
-        for path in sorted(pkg.rglob("*.py"))
-        for node in ast.parse(path.read_text()).body
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
-        and not node.name.startswith("_") and node.name not in named]
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    unreferenced = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            methods = node.body if isinstance(node, ast.ClassDef) else []
+            unreferenced += [
+                f"{path.relative_to(pkg)}:{d.name}" for d in [node, *methods]
+                if isinstance(d, defs) and not d.name.startswith("_")
+                and d.name not in named]
     assert unreferenced == []
 
 
