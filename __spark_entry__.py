@@ -230,6 +230,16 @@ def _summary_stacked(spark: SparkSession, sf_dir: str):
     return stacked, names
 
 
+def _summary_counts(spark: SparkSession, sf_dir: str):
+    """(counts, names): the A5 summary melt reduced to pinned
+    per-distinct-value ``(__cid, __v, __c)`` counts."""
+    from basic_data_fusion_spark.caching import cache_pinned
+
+    stacked, names = _summary_stacked(spark, sf_dir)
+    return cache_pinned(stacked.groupBy("__cid", "__v")
+                        .agg(F.count(F.lit(1)).alias("__c"))), names
+
+
 def q_column_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 deterministic tier: per-column n / missing / mean / median /
     min / max for customer+lineitem numerics.  Mean via fixed-point
@@ -243,8 +253,9 @@ def q_column_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation).  Now ONE lazy plan does everything: the stacked melt
     reduces to per-distinct-value counts (pinned — distinct-values-
     sized, the same relation the machine shuffles anyway), the
-    quantile machine enters at the counts level
-    (exact_quantiles_counts), and n/mean/min/max derive from the SAME
+    quantile pass enters at the counts level
+    (exact_quantiles_counts, which finishes on the driver when the
+    counts are small), and n/mean/min/max derive from the SAME
     counts: n = Σc, min/max over distinct values, and the fixed-point
     mean numerator Σ c·half_up(v·1e6) — an exact integer sum equal
     term-for-term to the per-row Σ half_up(v·1e6), feeding the
@@ -261,21 +272,18 @@ def q_column_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreachable here; a caller summarizing nullable columns should
     pre-filter them or extend the tier with a names-literal left
     join."""
-    from basic_data_fusion_spark.caching import cache_pinned
     from basic_data_fusion_spark.functions.scalars import half_up_long
     from basic_data_fusion_spark.operators.aggregations import (
         exact_quantiles_counts,
     )
 
-    stacked, names = _summary_stacked(spark, sf_dir)
+    counts, names = _summary_counts(spark, sf_dir)
     tots = None
     for table, _cols in _SUMMARY_TABLES:
         t = (_catalog(spark, sf_dir).load(table)
              .agg(F.count(F.lit(1)).alias("__total"))
              .select(F.lit(table).alias("__tbl"), "__total"))
         tots = t if tots is None else tots.unionByName(t)
-    counts = cache_pinned(stacked.groupBy("__cid", "__v")
-                          .agg(F.count(F.lit(1)).alias("__c")))
     med = (exact_quantiles_counts(counts, [0.5])
            .select(F.col("column").alias("__cid"),
                    F.round("value", 4).alias("median")))
@@ -9065,7 +9073,13 @@ def internal_plan_frames() -> dict[str, Callable[[SparkSession, str],
     LocalTableScan — a vacuous pin).  Each entry returns the pre-execution
     rank/aggregate frame (``stats.correlation_aggregate``) whose plan
     contains the distributed midrank pipeline the pin exists to protect
-    (e.g. a data-sized global window reappearing)."""
+    (e.g. a data-sized global window reappearing).  The same holds for
+    the exact-quantile prefix-sum machine: the pinned sf0.001 counts
+    finish on the driver, so the machine's plan is pinned over the
+    ``column_summary`` counts directly."""
+    from basic_data_fusion_spark.operators.aggregations import (
+        _quantile_machine,
+    )
     from basic_data_fusion_spark.operators.stats import (
         correlation_aggregate,
     )
@@ -9081,9 +9095,14 @@ def internal_plan_frames() -> dict[str, Callable[[SparkSession, str],
             li, ["l_quantity", "l_extendedprice", "l_discount"],
             method="spearman")
 
+    def column_summary_machine(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+        return _quantile_machine(_summary_counts(spark, sf_dir)[0], [0.5])
+
     return {
         "spearman_corr__rank_aggregate": spearman_corr_agg,
         "spearman_matrix__rank_aggregate": spearman_matrix_agg,
+        "column_summary__quantile_machine": column_summary_machine,
     }
 
 

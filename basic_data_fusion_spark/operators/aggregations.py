@@ -18,6 +18,10 @@ from pyspark.sql.window import Window
 
 from ..session import local_frame
 
+# exact_quantiles_counts finishes on the driver at or below this many
+# distinct (__cid, __v) rows; measured crossover in its docstring
+_DRIVER_FINISH_ROWS = 200_000
+
 
 def count_distinct_keys(df: DataFrame, key: str, approx: bool = False,
                         rsd: float = 0.05) -> DataFrame:
@@ -138,7 +142,11 @@ def exact_quantiles(df: DataFrame, columns: list[str],
     a broadcast non-equi join and interpolates
     ``v_lo + frac·(v_hi − v_lo)`` (``frac = 0`` short-circuits to
     ``v_lo`` exactly).  Every shuffle is distinct-values-sized or
-    smaller; NULLs are excluded per column, mirroring the aggregate."""
+    smaller; NULLs are excluded per column, mirroring the aggregate.
+    A counts relation of at most 200,000 distinct values skips the
+    prefix sum and finishes on the driver through one bounded collect,
+    with bit-identical values (bound and measured timings in
+    :func:`exact_quantiles_counts`)."""
     if not columns or not ps:
         raise ValueError("columns and ps must be non-empty")
     stacked = (df.select(F.explode(F.array(*[
@@ -159,7 +167,8 @@ def exact_quantiles_stacked(stacked: DataFrame, ps: list[float]) -> DataFrame:
     are bit-identical to per-table runs: the cumulative rank subtracts
     the preceding columns' mass, so each column's bracketing ranks and
     interpolation see exactly its own values regardless of what else
-    shares the pass."""
+    shares the pass.  Small counts finish on the driver, as in
+    :func:`exact_quantiles_counts`."""
     if not ps:
         raise ValueError("ps must be non-empty")
     counts = (stacked.groupBy("__cid", "__v")
@@ -174,9 +183,117 @@ def exact_quantiles_counts(counts: DataFrame, ps: list[float]) -> DataFrame:
     summary tier derives its n/mean/min/max aggregates from the same
     relation, so pinning it and entering here makes the whole summary
     one corpus scan).  Identical arithmetic to the stacked form — the
-    stacked form now just counts and delegates."""
+    stacked form now just counts and delegates.  ``ps`` must lie in
+    [0, 1], as for the ``percentile`` aggregate.
+
+    Driver finish: the counts relation is distinct-values-sized, and
+    when it holds at most ``_DRIVER_FINISH_ROWS`` rows (200,000) it is
+    collected through Arrow and the quantile table is computed on the
+    driver by one sorted sweep (:func:`_driver_quantiles`), returned as
+    a ``LocalRelation``.  Above the bound the distributed prefix-sum
+    machine (:func:`_quantile_machine`) runs unchanged.  The collect is
+    bounded because a corpus-scale distinct-value relation must not
+    pass through one process: ``limit(bound + 1)`` is both the size
+    probe and the collect, so the driver holds at most bound + 1 rows
+    (a few MB).  A counts relation that is not already persisted is
+    local-checkpointed first, so the probe and the machine read one
+    materialization and the melt + aggregate upstream runs once.
+
+    Measured (SCALE.md "Exact quantiles: the flat floor"; pinned counts
+    from the sf0.1 ``column_summary`` melt, 4 columns, 3 quantiles,
+    ``local[4]``, best of 3 in a warm session; the 1.2M and 2.4M rows
+    replicate the melt under shifted column ids):
+
+    ===========  ==========  ===========
+    counts rows  driver (s)  machine (s)
+    ===========  ==========  ===========
+    9,917        0.15        1.60
+    49,985       0.14        1.52
+    199,896      0.29        1.71
+    598,058      0.78        2.38
+    1,196,116    1.72        4.26
+    2,392,232    3.18        7.91
+    ===========  ==========  ===========
+
+    On one host the two finishes never cross: the machine carries a
+    ~1.5 s flat floor (range sampling, checkpoint, offsets job, extra
+    stage boundaries) and no lower per-row cost.  What the machine buys
+    is executor parallelism and no driver-sized buffer, so the bound
+    sits below any crossover and caps what one process holds: it sends
+    sf0.001/sf0.01 to the driver and leaves the sf0.1
+    ``column_summary`` counts (598,058 rows) on the machine.
+
+    Both finishes give bit-identical rows: integer cumulative ranks,
+    ``pos = 1 + double(n−1)·p``, ``lo = ⌊pos⌋``, ``hi = ⌈pos⌉``,
+    ``frac = pos − lo``, ``v_lo`` when ``frac = 0`` and
+    ``v_lo + frac·(v_hi − v_lo)`` otherwise, with Spark's double order
+    (NaN last).  Duplicate ``p`` values give one row."""
     if not ps:
         raise ValueError("ps must be non-empty")
+    if not all(0.0 <= p <= 1.0 for p in ps):
+        raise ValueError(f"ps must lie in [0, 1], got {ps}")
+    if not counts.is_cached:
+        counts = counts.localCheckpoint(eager=False)
+    head = counts.limit(_DRIVER_FINISH_ROWS + 1).toArrow()
+    if head.num_rows > _DRIVER_FINISH_ROWS:
+        return _quantile_machine(counts, ps)
+    return _driver_quantiles(counts, head, ps)
+
+
+def _driver_quantiles(counts: DataFrame, head, ps: list[float]) -> DataFrame:
+    """The machine's quantile table computed from the collected counts
+    ``head`` (a ``pyarrow.Table``): one sort by ``(__cid, __v)``, one
+    int64 cumulative sum across all columns, and per (column, p) a
+    ``searchsorted`` of the column's block start plus ``lo``/``hi``
+    into it — the machine's global prefix sum minus the preceding
+    columns' mass, with the same double arithmetic."""
+    import numpy as np
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("column", counts.schema["__cid"].dataType),
+        T.StructField("p", T.DoubleType()),
+        T.StructField("n_non_null", T.LongType()),
+        T.StructField("value", T.DoubleType())])
+    # the machine's inner join on __cid drops NULL labels; Arrow sorts
+    # NaN after every other double, as Spark does
+    t = (head.filter(pc.is_valid(head["__cid"]))
+         .sort_by([("__cid", "ascending"), ("__v", "ascending")]))
+    if t.num_rows == 0:
+        return local_frame(counts.sparkSession, [], schema)
+    cid = t["__cid"].combine_chunks()
+    v = t["__v"].to_numpy()
+    c = t["__c"].to_numpy().astype(np.int64)
+    cum = np.cumsum(c)
+    first = np.ones(t.num_rows, dtype=bool)
+    first[1:] = pc.not_equal(cid[1:], cid[:-1]).to_numpy(
+        zero_copy_only=False)
+    starts = np.flatnonzero(first)
+    ends = np.append(starts[1:], t.num_rows) - 1
+    block = cum[starts] - c[starts]  # the preceding columns' mass
+    n = cum[ends] - block
+    # duplicate p give one row, and −0.0 is 0.0, as the machine's
+    # (__cid, p) grouping normalizes it
+    pu = np.unique(np.asarray(ps, dtype=np.float64) + 0.0)
+    pos = 1.0 + (n - 1).astype(np.float64)[:, None] * pu[None, :]
+    lo = np.floor(pos).astype(np.int64)
+    hi = np.ceil(pos).astype(np.int64)
+    frac = pos - lo.astype(np.float64)
+    v_lo = v[np.searchsorted(cum, block[:, None] + lo, side="left")]
+    v_hi = v[np.searchsorted(cum, block[:, None] + hi, side="left")]
+    with np.errstate(invalid="ignore"):
+        value = np.where(frac == 0.0, v_lo, v_lo + frac * (v_hi - v_lo))
+    rows = [(label, float(pu[j]), int(n[i]), float(value[i, j]))
+            for i, label in enumerate(cid.take(starts).to_pylist())
+            for j in range(len(pu))]
+    return local_frame(counts.sparkSession, rows, schema)
+
+
+def _quantile_machine(counts: DataFrame, ps: list[float]) -> DataFrame:
+    """The distributed finish of :func:`exact_quantiles_counts`: one
+    prefix sum over the ``(__cid, __v)`` total order, then a broadcast
+    bracketing-rank join per requested quantile."""
     from .ordering import global_running_sum
 
     cum = global_running_sum(counts, ["__cid", "__v"], "__c",

@@ -70,11 +70,6 @@ DECODED_SCHEMA = StructType([
     StructField("decode_ok", IntegerType()),
 ])
 
-FEATURE_SCHEMA = StructType([
-    StructField("media_id", LongType()),
-    StructField("feature", ArrayType(DoubleType())),
-])
-
 FRAME_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("frame_index", IntegerType()),

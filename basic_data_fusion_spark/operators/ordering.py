@@ -72,6 +72,15 @@ def total_order_pos(df: DataFrame, order_keys: list[str],
     ``out_col``; every other column passes through.  No partition-less
     window touches the data: the only global window runs over the
     per-partition count relation (≤ ``n_partitions`` rows)."""
+    return _total_order_pos(df, order_keys, out_col, n_partitions, None)
+
+
+def _total_order_pos(df: DataFrame, order_keys: list[str], out_col: str,
+                     n_partitions: int | None,
+                     total_col: str | None) -> DataFrame:
+    """:func:`total_order_pos`; a ``total_col`` also appends the row
+    count of ``df``, summed over the per-partition counts by the same
+    offsets window, so a caller that needs n reads no second pass."""
     n = _n_partitions(df, n_partitions)
     keys = [F.col(k) for k in order_keys]
     # Lazy localCheckpoint: the count branch and the data branch both
@@ -90,7 +99,10 @@ def total_order_pos(df: DataFrame, order_keys: list[str],
              .rowsBetween(Window.unboundedPreceding, -1))
     offsets = counts.select(
         "__pid",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"))
+        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__off"),
+        *([F.sum("__cnt").over(w_off.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing))
+           .alias(total_col)] if total_col else []))
     local = F.col("__mid").bitwiseAND(F.lit(_LOCAL_MASK))
     return (d.join(F.broadcast(offsets), "__pid")
             .withColumn(out_col,
@@ -231,9 +243,7 @@ def global_ntile(df: DataFrame, order_keys: list[str], k: int,
     integer-exactly (``(a − a%b)/b`` — an exact multiple divides exactly
     in doubles to 2^53).  Appends ``out_col``; all input columns pass
     through."""
-    d = total_order_pos(df, order_keys, "__r")
-    n_total = d.groupBy().agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    d = d.join(F.broadcast(n_total))
+    d = _total_order_pos(df, order_keys, "__r", None, "__n")
     idiv = lambda a, b: ((a - F.pmod(a, b)) / b).cast("long")
     big = F.col("__n") % k
     size_small = idiv(F.col("__n"), F.lit(k))

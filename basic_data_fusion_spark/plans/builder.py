@@ -14,9 +14,12 @@ Scale design (100 TB notes):
 - **Count path** (A1) rewrites ``LEFT JOIN + null-rejecting WHERE`` into
   per-spoke LEFT SEMI joins on pre-filtered spokes: identical distinct-key
   semantics (every predicate the spec can express — BETWEEN/IN/= — is
-  null-rejecting), but no row fan-out and no wide shuffle. Unfiltered
-  spoke tables cannot change the count and are skipped entirely
-  (join-set minimization, reference: query/callbacks/export.py:75-87).
+  null-rejecting), but no row fan-out and no wide shuffle. The spoke side
+  is not deduplicated: a semi join emits each hub row at most once
+  however many spoke rows match, so a spoke-key dedup would only add an
+  aggregate and an exchange. Unfiltered spoke tables cannot change the
+  count and are skipped entirely (join-set minimization, reference:
+  query/callbacks/export.py:75-87).
 - Nothing is collected; callers choose the action.
 """
 
@@ -172,7 +175,7 @@ class PlanBuilder:
             hk, sk = self._join_keys(t)
             spoke = self.catalog.load(t)
             spoke = spoke.filter(reduce(and_, [self.behavioral_predicate(bf) for bf in bfs]))
-            spoke = spoke.select(sk).dropDuplicates([sk])
+            spoke = spoke.select(sk)
             if self.catalog.info(t).is_dimension:
                 spoke = F.broadcast(spoke)
             hub = hub.join(spoke, F.col(f"{HUB_ALIAS}.{hk}") == spoke[sk], "left_semi")

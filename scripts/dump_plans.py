@@ -12,8 +12,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 PICK_NOTES = {
     "flagship_merge": "PushedFilters reach the scan; dimension sides broadcast; "
                       "LEFT joins rewritten to INNER by null-rejecting predicates.",
-    "participant_count": "Spoke predicates become LeftSemi joins (no fan-out); "
-                         "partial aggregation before the single exchange.",
+    "participant_count": "Spoke predicates become LeftSemi joins (no fan-out) "
+                         "on the spoke as filtered, with no key dedup; the "
+                         "only hash exchange is the distinct count's.",
     "pricing_summary": "One shuffle: partial HashAggregate -> Exchange -> final "
                        "HashAggregate, all inside codegen spans.",
     "asof_latest_order": "Union + ONE Exchange feeding the Window; top-1 dedupe "
@@ -233,7 +234,8 @@ PICK_NOTES = {
                            "no data-sized global window.",
     "acctbal_deciles": "NTILE from the distributed global rank "
                        "(integer-exact remainder-to-early-buckets); "
-                       "no single-partition gather.",
+                       "n rides the offsets window; no single-partition "
+                       "gather.",
     "canonical_dedup": "Unicode fold is ONE map-side translate/replace "
                        "projection; only (id, md5) pairs shuffle for "
                        "the group + hash-keyed join back — bodies "

@@ -42,8 +42,16 @@ def test_flagship_pushdown_pruning_broadcast(spark):
 
 def test_participant_count_semi_join_single_distinct_exchange(spark):
     df = entrymod.queries()["participant_count"](spark, SF0001)
-    plan = _final_plan(df)
+    plan = _final_plan(df).split("== Initial Plan ==")[0]
     assert "LeftSemi" in plan, "spoke filters must become semi-joins (no fan-out)"
+    # a semi join emits each hub row at most once, so nothing below it
+    # aggregates (no spoke-key dedup on the build side), and the only
+    # hash exchange is the distinct count's own
+    lines = plan.splitlines()
+    semi = next(i for i, line in enumerate(lines) if "LeftSemi" in line)
+    assert not any("HashAggregate" in line for line in lines[semi + 1:]), \
+        "the semi join's build side must not be deduplicated"
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
 
 
 def test_text_pipeline_stays_jvm_side(spark):

@@ -303,18 +303,21 @@ def _call_name(call) -> str | None:
 
 
 def test_no_unreferenced_public_definitions():
-    """Every top-level public ``def``/``class`` of the package, and every
-    public method of a top-level class, is named in code somewhere — the
-    package, the contracts, ``perfbench/``, ``scripts/``, ``bench.py`` or
-    the tests.  A mention in a docstring or comment does not count; a
-    name held in a string constant (a registry key) does."""
+    """Every top-level public ``def``/``class``/assignment of the
+    package, and every public method of a top-level class, is named in
+    code somewhere — the package, the contracts, ``perfbench/``,
+    ``scripts/``, ``bench.py`` or the tests.  A mention in a docstring or
+    comment does not count, and neither does the assignment itself; a
+    name held in a string constant (a registry key) does.  Dunders such
+    as ``__version__`` start with an underscore and are exempt."""
     import ast
 
     pkg, files = _code_files()
     named = set()
     for path in files:
         for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
-            if isinstance(node, ast.Name):
+            if isinstance(node, ast.Name) and not isinstance(node.ctx,
+                                                             ast.Store):
                 named.add(node.id)
             elif isinstance(node, ast.Attribute):
                 named.add(node.attr)
@@ -327,10 +330,16 @@ def test_no_unreferenced_public_definitions():
     for path in sorted(pkg.rglob("*.py")):
         for node in ast.parse(path.read_text()).body:
             methods = node.body if isinstance(node, ast.ClassDef) else []
-            unreferenced += [
-                f"{path.relative_to(pkg)}:{d.name}" for d in [node, *methods]
-                if isinstance(d, defs) and not d.name.startswith("_")
-                and d.name not in named]
+            names = [d.name for d in [node, *methods] if isinstance(d, defs)]
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                names += [n.id for t in targets for n in ast.walk(t)
+                          if isinstance(n, ast.Name)]
+            unreferenced += [f"{path.relative_to(pkg)}:{name}"
+                             for name in names
+                             if not name.startswith("_")
+                             and name not in named]
     assert unreferenced == []
 
 

@@ -12,7 +12,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from basic_data_fusion_spark.operators import quality, stats
+from basic_data_fusion_spark.operators import aggregations, quality, stats
 
 RNG = np.random.default_rng(7)
 
@@ -785,12 +785,24 @@ def test_kendall_tau_grouped_lowcard_bitwise_parity(spark):
     assert "solo" not in got
 
 
-def test_exact_quantiles_distributed_matches_percentile(spark):
-    """exact_quantiles (melt → value counts → ONE distributed prefix
-    sum → bracketing-rank interpolation) must reproduce the
-    percentile() aggregate — including NULL exclusion, duplicate-heavy
-    columns, odd/even counts and interpolated fractions — without the
-    aggregate's data-sized merge buffer."""
+# _DRIVER_FINISH_ROWS per finish: the default bound keeps sf0.001 on the
+# driver, a bound of 0 sends any non-empty input to the machine
+_FINISHES = {"driver": aggregations._DRIVER_FINISH_ROWS, "machine": 0}
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_exact_quantiles_distributed_matches_percentile(spark, monkeypatch):
+    """exact_quantiles (melt → value counts → the driver finish, or ONE
+    distributed prefix sum → bracketing-rank interpolation) must
+    reproduce the percentile() aggregate on both finishes — including
+    NULL exclusion, duplicate-heavy columns, odd/even counts and
+    interpolated fractions — without the aggregate's data-sized merge
+    buffer."""
+    from pyspark.sql import functions as F
+
     from basic_data_fusion_spark.operators.aggregations import (
         exact_quantiles,
     )
@@ -798,45 +810,41 @@ def test_exact_quantiles_distributed_matches_percentile(spark):
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     ps = [0.1, 0.25, 0.5, 0.75, 0.9]
-    got = {(r["column"], r["p"]): (r["n_non_null"], r["value"])
-           for r in exact_quantiles(li, cols, ps).collect()}
-    from pyspark.sql import functions as F
-
     exp_row = li.agg(*[
         F.expr(f"percentile({c}, {p})").alias(f"{c}__{i}")
         for c in cols for i, p in enumerate(ps)],
         *[F.count(F.col(c).cast("double")).alias(f"n__{c}")
           for c in cols]).first()
-    for c in cols:
-        for i, p in enumerate(ps):
-            n, v = got[(c, p)]
-            assert n == exp_row[f"n__{c}"]
-            assert v == pytest.approx(exp_row[f"{c}__{i}"],
-                                      rel=0, abs=1e-9), (c, p)
-
     # planted edges: NULLs, duplicates, odd and even counts
     rows = [(1.0, 10.0), (2.0, None), (2.0, 20.0), (3.0, 30.0),
             (None, 40.0), (100.0, None)]
     df = spark.createDataFrame(rows, "a double, b double")
-    got = {(r["column"], r["p"]): r["value"]
-           for r in exact_quantiles(df, ["a", "b"], [0.5]).collect()}
-    assert got[("a", 0.5)] == 2.0          # n=5 odd → middle value
-    assert got[("b", 0.5)] == 25.0         # n=4 even → mean of middles
+    for finish, bound in _FINISHES.items():
+        monkeypatch.setattr(aggregations, "_DRIVER_FINISH_ROWS", bound)
+        got = {(r["column"], r["p"]): (r["n_non_null"], r["value"])
+               for r in exact_quantiles(li, cols, ps).collect()}
+        for c in cols:
+            for i, p in enumerate(ps):
+                n, v = got[(c, p)]
+                assert n == exp_row[f"n__{c}"]
+                assert v == pytest.approx(exp_row[f"{c}__{i}"],
+                                          rel=0, abs=1e-9), (finish, c, p)
+        got = {(r["column"], r["p"]): r["value"]
+               for r in exact_quantiles(df, ["a", "b"], [0.5]).collect()}
+        assert got[("a", 0.5)] == 2.0          # n=5 odd → middle value
+        assert got[("b", 0.5)] == 25.0         # n=4 even → mean of middles
+        # no data-sized single-node structure: the plan holds no
+        # percentile aggregate on either finish
+        assert "percentile(" not in _plan(exact_quantiles(li, cols, [0.5]))
 
-    # no data-sized single-node structure: the plan's only windows run
-    # over range-partitioned locals / the partition-count totals
-    plan = (exact_quantiles(li, cols, [0.5])
-            ._jdf.queryExecution().optimizedPlan().toString())
-    assert "percentile(" not in plan
 
-
-def test_exact_quantiles_stacked_fusion_bit_identical(spark):
+def test_exact_quantiles_stacked_fusion_bit_identical(spark, monkeypatch):
     """exact_quantiles_stacked (r13 fusion): two tables' melts unioned
-    under table-qualified __cid labels through ONE prefix-sum machine
+    under table-qualified __cid labels through ONE quantile pass
     must return bit-identical values to separate per-table
-    exact_quantiles runs — the per-column cumulative rank subtracts
-    the preceding columns' mass, so sharing the pass cannot move any
-    bracketing rank or interpolation."""
+    exact_quantiles runs on both finishes — the per-column cumulative
+    rank subtracts the preceding columns' mass, so sharing the pass
+    cannot move any bracketing rank or interpolation."""
     from pyspark.sql import functions as F
 
     from basic_data_fusion_spark.operators.aggregations import (
@@ -858,13 +866,102 @@ def test_exact_quantiles_stacked_fusion_bit_identical(spark):
 
     stacked = melt(cust, "customer", ["c_acctbal"]).unionByName(
         melt(li, "lineitem", ["l_quantity", "l_extendedprice"]))
-    fused = {(r["column"], r["p"]): (r["n_non_null"], r["value"])
-             for r in exact_quantiles_stacked(stacked, ps).collect()}
-    solo = {}
-    for df, table, cols in ((cust, "customer", ["c_acctbal"]),
-                            (li, "lineitem",
-                             ["l_quantity", "l_extendedprice"])):
-        for r in exact_quantiles(df, cols, ps).collect():
-            solo[(f"{table}.{r['column']}", r["p"])] = (r["n_non_null"],
-                                                        r["value"])
-    assert fused == solo  # exact float equality, not approx
+    for finish, bound in _FINISHES.items():
+        monkeypatch.setattr(aggregations, "_DRIVER_FINISH_ROWS", bound)
+        fused = {(r["column"], r["p"]): (r["n_non_null"], r["value"])
+                 for r in exact_quantiles_stacked(stacked, ps).collect()}
+        solo = {}
+        for df, table, cols in ((cust, "customer", ["c_acctbal"]),
+                                (li, "lineitem",
+                                 ["l_quantity", "l_extendedprice"])):
+            for r in exact_quantiles(df, cols, ps).collect():
+                solo[(f"{table}.{r['column']}", r["p"])] = (r["n_non_null"],
+                                                            r["value"])
+        assert fused == solo, finish  # exact float equality, not approx
+
+
+def _quantile_rows(df) -> list:
+    """Rows in output order, values as their IEEE bytes (NaN == NaN)."""
+    import struct
+
+    return [(r["column"], r["p"], r["n_non_null"],
+             struct.pack(">d", r["value"])) for r in df.collect()]
+
+
+def test_exact_quantiles_driver_finish_matches_machine(spark, monkeypatch):
+    """The driver finish reproduces the prefix-sum machine bit for bit
+    on planted edges: NaN (sorts last, the largest value), ±inf,
+    −0.0 beside 0.0, NULLs, an all-equal column, a one-row column,
+    p ∈ {0, 1}, duplicate p, and string and int ``__cid`` labels."""
+    from pyspark.sql import functions as F
+
+    from basic_data_fusion_spark.operators.aggregations import (
+        exact_quantiles,
+        exact_quantiles_stacked,
+    )
+
+    nan, inf = float("nan"), float("inf")
+    rows = [(1.0, nan, 5.0, 7.0, -0.0),
+            (nan, -0.0, 5.0, None, 0.0),
+            (2.0, 0.0, 5.0, None, 1.5),
+            (inf, None, 5.0, None, -inf),
+            (-inf, 3.0, 5.0, None, inf),
+            (None, 0.0, 5.0, None, 2.5),
+            (2.0, -0.0, 5.0, None, nan)]
+    df = spark.createDataFrame(rows, "a double, b double, c double, "
+                                     "d double, e double")
+    cols = ["a", "b", "c", "d", "e"]
+    ps = [1.0, 0.0, 0.5, 0.25, 0.5, 0.9, 0.333, 0.75]
+    stacked = df.select(F.posexplode(F.array(*cols)).alias("__cid", "__v")) \
+        .where(F.col("__v").isNotNull())
+    driver = (_quantile_rows(exact_quantiles(df, cols, ps)),
+              _quantile_rows(exact_quantiles_stacked(stacked, ps)))
+    monkeypatch.setattr(aggregations, "_DRIVER_FINISH_ROWS", 0)
+    machine = (_quantile_rows(exact_quantiles(df, cols, ps)),
+               _quantile_rows(exact_quantiles_stacked(stacked, ps)))
+    assert driver == machine
+    assert len(driver[0]) == len(cols) * 7  # duplicate p give one row
+    assert {r[0] for r in driver[1]} == set(range(len(cols)))
+    with pytest.raises(ValueError):
+        exact_quantiles(df, cols, [1.5])
+
+
+def test_exact_quantiles_driver_bound(spark, monkeypatch):
+    """A counts relation of exactly ``_DRIVER_FINISH_ROWS`` distinct
+    rows finishes on the driver (a LocalRelation leaf); one row more
+    runs the machine; both return the same rows."""
+    df = spark.range(120).selectExpr("CAST(id % 50 AS DOUBLE) AS x",
+                                     "CAST(id % 7 AS DOUBLE) AS y")
+    ps = [0.1, 0.5, 0.75]
+    monkeypatch.setattr(aggregations, "_DRIVER_FINISH_ROWS", 57)
+    at = aggregations.exact_quantiles(df, ["x", "y"], ps)
+    assert "LocalRelation" in _plan(at)
+    monkeypatch.setattr(aggregations, "_DRIVER_FINISH_ROWS", 56)
+    above = aggregations.exact_quantiles(df, ["x", "y"], ps)
+    assert "LocalRelation" not in _plan(above)
+    assert _quantile_rows(at) == _quantile_rows(above)
+
+
+def test_exact_quantiles_machine_runs_upstream_once(spark, monkeypatch):
+    """On the machine path the size probe and the machine read one
+    materialization of the counts: the melt + aggregate upstream runs
+    once, counted by an accumulator on every input row it reads."""
+    from pyspark.sql import functions as F
+
+    from basic_data_fusion_spark.operators.aggregations import (
+        exact_quantiles,
+    )
+
+    monkeypatch.setattr(aggregations, "_DRIVER_FINISH_ROWS", 0)
+    seen = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        seen.add(1)
+        return x
+
+    df = (spark.range(300).repartition(3)
+          .select(F.udf(tap, "double")(
+              (F.col("id") % 40).cast("double")).alias("x")))
+    rows = exact_quantiles(df, ["x"], [0.25, 0.5]).collect()
+    assert [r["value"] for r in rows] == [9.0, 18.0]
+    assert seen.value == 300
