@@ -84,6 +84,24 @@ def normalize_session_label(raw) -> str:
     return re.sub(r"[^0-9A-Za-z_]", "_", s).upper()
 
 
+def let(value: Column, body) -> Column:
+    """``body(v)`` with ``value`` evaluated ONCE per row and bound to the
+    lambda variable ``v``.
+
+    Catalyst has no common-subexpression elimination inside lambda
+    bodies: a row expression captured by a ``transform``/``filter``/
+    ``aggregate`` lambda is re-evaluated for every element, so a
+    tokenizing ``split`` captured by a per-shingle lambda costs
+    O(tokens²) per row.  Binding the value as the variable of a
+    one-element ``transform`` keeps the helper a pure Column (usable in
+    one streaming projection) while the body only reads the bound
+    variable::
+
+        element_at(transform(array(value), v -> body(v)), 1)
+    """
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def half_up_long(col: Column) -> Column:
     """``ROUND(x, 0)`` (half-away-from-zero) cast to BIGINT, as plain IEEE
     arithmetic on the EXACT fractional part.

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import cache_pinned
+from ..functions.scalars import let
 from ..session import local_frame
 from ..sources.partitioning import spread_narrow
 from .text import fingerprint, tokens
@@ -73,12 +74,15 @@ def collapse_repeated_lines(df: DataFrame, text_col: str = "text",
     and RefinedWeb §3.3 apply line rules of this family)."""
     ls = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
     # F.filter's index lambda is 0-based; element_at is 1-based, so
-    # element_at(ls, i) IS the previous element of the 0-based i-th.
-    # The i==0 guard must be an explicit WHEN branch: element_at(ls, 0)
+    # element_at(l, i) IS the previous element of the 0-based i-th.
+    # The i==0 guard must be an explicit WHEN branch: element_at(l, 0)
     # is a runtime error, and a boolean Or makes no evaluation-order
-    # promise (r11 advisory) — CASE does.
-    kept = F.filter(ls, lambda x, i: F.when(i == F.lit(0), F.lit(True))
-                    .otherwise(x != F.element_at(ls, i)))
+    # promise (r11 advisory) — CASE does.  The lines are bound once
+    # (``let``): captured as ``ls`` the lambda would re-split the
+    # document for every line.
+    kept = let(ls, lambda l: F.filter(
+        l, lambda x, i: F.when(i == F.lit(0), F.lit(True))
+        .otherwise(x != F.element_at(l, i))))
     return df.select(
         F.col(id_col),
         F.array_join(kept, "\n").alias("clean_text"),
@@ -443,12 +447,16 @@ def memorization_risk_report(df: DataFrame, text_col: str = "text",
 
 def word_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-gram set per document (empty/short docs → whole-doc
-    shingle so they can still exact-match)."""
-    t = tokens(col)
-    size = F.size(t)
-    idx = F.sequence(F.lit(1), F.greatest(size - n + 1, F.lit(1)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(t, i, n)))
-    return F.array_distinct(grams)
+    shingle so they can still exact-match).
+
+    The token array is bound ONCE per row (``let``) and the per-shingle
+    lambda slices the bound variable.  Captured as a row expression
+    instead, ``split(lower(trim(text)))`` re-ran for every shingle —
+    Catalyst does no CSE inside lambda bodies — so a document cost
+    O(tokens²) (SCALE.md "Lambda bodies: bind, don't capture")."""
+    return F.array_distinct(let(tokens(col), lambda t: F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size(t) - n + 1, F.lit(1))),
+        lambda i: F.concat_ws(" ", F.slice(t, i, n)))))
 
 
 def shingle_table(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -577,11 +585,22 @@ def minhash_signature_column(text: Column, n: int = 3,
                              num_hashes: int = 64, seed: int = 42,
                              hash_fn: str = "xxhash64") -> Column:
     """The signature EXPRESSION behind :func:`minhash_signatures` — a
-    pure Column so single-projection consumers (the stateless streaming
-    gate, which must compute shingles AND the signature of the same row
-    in ONE select — a second frame would be a stream-stream join) share
-    the exact fold the frame API uses."""
-    grams = word_shingles(text, n)
+    pure Column: ``word_shingles`` then :func:`_signature_of_shingles`.
+
+    A caller that already holds the shingle set (the pinned ``sets`` of
+    :func:`minhash_dedup_pairs` and :func:`lsh_config_sweep`, the
+    streaming gate's projection) signs that column with
+    ``_signature_of_shingles`` instead, so each document is tokenized
+    and shingled once — calling this as well would shingle it a second
+    time."""
+    return _signature_of_shingles(word_shingles(text, n), num_hashes,
+                                  seed, hash_fn)
+
+
+def _signature_of_shingles(grams: Column, num_hashes: int, seed: int,
+                           hash_fn: str) -> Column:
+    """k×min-hash fold of a shingle-set column (see
+    :func:`minhash_signatures` for the hash family)."""
     p = F.lit(MERSENNE31).cast("long")
     if hash_fn == "md5":
         base = F.transform(
@@ -702,10 +721,12 @@ def minhash_dedup_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
     sets = cache_pinned(sets)
     # deterministic tier: md5-derived base hash + raw-string band
     # buckets — every key reproducible in plain SQL, so the WHOLE
-    # candidate pipeline (not just the verified output) oracle-checks
+    # candidate pipeline (not just the verified output) oracle-checks.
+    # The signature signs the pinned shingle sets: no second shingling
+    # pass and no second spread of the text.
     hash_fn = "md5" if deterministic else "xxhash64"
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed,
-                             hash_fn=hash_fn)
+    sig = sets.select(F.col(id_col), _signature_of_shingles(
+        F.col("shingles"), num_hashes, seed, hash_fn).alias("signature"))
     cands = lsh_candidate_pairs(sig, id_col, bands, num_hashes=num_hashes,
                                 hash_buckets=not deterministic)
     a = sets.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
@@ -755,9 +776,15 @@ def lsh_config_sweep(df: DataFrame, bands_options=(4, 8, 16, 32),
         if num_hashes % b != 0:
             raise ValueError(f"bands={b} does not divide {num_hashes}")
     hash_fn = "md5" if deterministic else "xxhash64"
-    sig = minhash_signatures(df, text_col, id_col, n, num_hashes, seed,
-                             hash_fn=hash_fn)
-    sig = cache_pinned(sig)
+    # the pinned shingle sets feed the signature AND both sides of the
+    # verification join (minhash_dedup_pairs pins the identical
+    # relation for the same reason): the text is spread and shingled once
+    sets = cache_pinned(
+        df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        .select(F.col(id_col),
+                word_shingles(F.col(text_col), n).alias("__sh")))
+    sig = cache_pinned(sets.select(F.col(id_col), _signature_of_shingles(
+        F.col("__sh"), num_hashes, seed, hash_fn).alias("signature")))
     cands = None
     for b in opts:
         c = (lsh_candidate_pairs(sig, id_col, bands=b,
@@ -766,12 +793,6 @@ def lsh_config_sweep(df: DataFrame, bands_options=(4, 8, 16, 32),
              .select(F.lit(b).alias("bands"), "id_a", "id_b"))
         cands = c if cands is None else cands.unionByName(c)
     cands = cands.localCheckpoint(eager=False)  # feeds distinct + rollup
-    # feeds BOTH sides of the verification join (minhash_dedup_pairs
-    # pins the identical relation for the same reason)
-    sets = cache_pinned(
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-        .select(F.col(id_col),
-                word_shingles(F.col(text_col), n).alias("__sh")))
     a = sets.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
     bb = sets.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
     n_common = F.size(F.array_intersect("sh_a", "sh_b"))

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..caching import cache_pinned
-from ..functions.scalars import half_up_long
+from ..functions.scalars import half_up_long, let
 from ..sources.partitioning import spread_narrow
 
 # Minimal stopword profiles for the n-gram/stopword language heuristic.
@@ -470,17 +470,21 @@ def rolling_hash_fingerprint(col: Column, window: int = 3) -> Column:
     """Order-sensitive rolling fingerprint: xxhash64 of each token
     ``window``-shingle, combined with a polynomial accumulator — detects
     reordered-content near-dups that a set-based fingerprint misses.
-    Engine-specific hash (xxhash64) → not oracle-comparable by design."""
-    t = tokens(col)
-    n = F.size(t)
-    idx = F.sequence(F.lit(1), F.greatest(n - window + 1, F.lit(1)))
-    shingle_hashes = F.transform(
-        idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(t, i, window))))
+    Engine-specific hash (xxhash64) → not oracle-comparable by design.
+    The token array is bound once (``let``), as in ``word_shingles``."""
     # Mersenne-prime modulus small enough that acc*31 + pmod(h) never
     # overflows a long under ANSI arithmetic (acc < 2^31 → product < 2^36).
     mod = F.lit(2147483647).cast("long")  # 2^31 - 1
-    return F.aggregate(shingle_hashes, F.lit(0).cast("long"),
-                       lambda acc, h: F.pmod(acc * F.lit(31) + F.pmod(h, mod), mod))
+
+    def fold(t: Column) -> Column:
+        idx = F.sequence(F.lit(1), F.greatest(F.size(t) - window + 1, F.lit(1)))
+        shingle_hashes = F.transform(
+            idx, lambda i: F.xxhash64(F.concat_ws(" ", F.slice(t, i, window))))
+        return F.aggregate(
+            shingle_hashes, F.lit(0).cast("long"),
+            lambda acc, h: F.pmod(acc * F.lit(31) + F.pmod(h, mod), mod))
+
+    return let(tokens(col), fold)
 
 
 # PII / URL scrubbing — standard pretraining-corpus hygiene. Patterns are
@@ -998,13 +1002,14 @@ def winnow_overlap_pairs(df: DataFrame, text_col: str = "text",
                .groupBy("fp")
                .agg(F.sort_array(F.collect_set(F.col(id_col)))
                     .alias("__ids")))
-    ids = F.col("__ids")
-    pair_expr = F.flatten(F.transform(
+    # the id array is bound once (``let``): the inner bound reads the
+    # variable's size, not a row expression per outer element
+    pair_expr = let(F.col("__ids"), lambda ids: F.flatten(F.transform(
         F.sequence(F.lit(1), F.size(ids) - 1),
         lambda i: F.transform(
             F.sequence(i + 1, F.size(ids)),
             lambda j: F.struct(F.element_at(ids, i).alias("id_a"),
-                               F.element_at(ids, j).alias("id_b")))))
+                               F.element_at(ids, j).alias("id_b"))))))
     small_pairs = (grouped.select(F.explode(pair_expr).alias("__p"))
                    .select("__p.id_a", "__p.id_b"))
     # big path: distributed expansion — the self-join streams a hot

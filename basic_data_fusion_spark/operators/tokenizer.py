@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalars import let
 from .text import tokens
 
 
@@ -33,12 +34,13 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _to_symbols(word: Column) -> Column:
     """Initial symbol sequence: characters, with the word-end marker on
-    the final character (the classic BPE alphabet)."""
-    chars = F.split(word, "")
-    n = F.size(chars)
-    return F.transform(
+    the final character (the classic BPE alphabet).  The character
+    array is bound once (``let``) so the last-index test reads its size
+    instead of re-splitting the word per character."""
+    return let(F.split(word, ""), lambda chars: F.transform(
         chars,
-        lambda c, i: F.when(i == n - 1, F.concat(c, F.lit("</w>"))).otherwise(c))
+        lambda c, i: F.when(i == F.size(chars) - 1,
+                            F.concat(c, F.lit("</w>"))).otherwise(c)))
 
 
 def _merge_pair(symbols: Column, left: str, right: str) -> Column:

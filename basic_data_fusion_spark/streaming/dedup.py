@@ -196,10 +196,10 @@ def streaming_fuzzy_decontaminate(df: DataFrame, held_out: DataFrame,
 
     1. Stream-static broadcast joins only: the eval side's exploded
        (band, bucket) keys and its (shingles, bucket-array) relation
-       are batch-built and broadcast; the stream side is one
-       projection (shingles + signature + bucket array in a single
-       select — a second frame over the source would be a
-       stream-stream join) followed by a 16-way posexplode.
+       are batch-built and broadcast; the stream side is projections
+       of the one source frame (shingles, then the signature of that
+       column, then the bucket array — a second frame over the source
+       would be a stream-stream join) followed by a 16-way posexplode.
     2. The batch tier dedups multi-band candidate collisions with
        ``distinct()`` — a stateful operator on a stream.  Here the
        dedup is STATELESS: both rows of a candidate carry their full
@@ -219,20 +219,22 @@ def streaming_fuzzy_decontaminate(df: DataFrame, held_out: DataFrame,
     from pyspark.sql import functions as F
 
     from basic_data_fusion_spark.operators.dedup import (
+        _signature_of_shingles,
         minhash_bucket_array,
-        minhash_signature_column,
         word_shingles,
     )
 
     hash_fn = "md5" if deterministic else "xxhash64"
     hb = not deterministic
-    sig = minhash_signature_column(F.col(text_col), n, num_hashes, seed,
-                                   hash_fn)
 
     def prepared(rel: DataFrame, out_id: str, sh: str, bk: str) -> DataFrame:
+        # the signature signs the projected shingle column, so each row
+        # is tokenized and shingled once (chained projections of the
+        # same frame — still no second stream)
         return (rel.select(F.col(id_col).alias(out_id),
-                           word_shingles(F.col(text_col), n).alias(sh),
-                           sig.alias("signature"))
+                           word_shingles(F.col(text_col), n).alias(sh))
+                .withColumn("signature", _signature_of_shingles(
+                    F.col(sh), num_hashes, seed, hash_fn))
                 .withColumn(bk, minhash_bucket_array(bands, num_hashes, hb))
                 .drop("signature"))
 
@@ -244,14 +246,19 @@ def streaming_fuzzy_decontaminate(df: DataFrame, held_out: DataFrame,
     # ~2 s/batch on the 24-batch sf0.1 gate run (SCALE.md r10).
     from basic_data_fusion_spark.caching import cache_pinned
 
+    # posexplode_OUTER: a bucket array always holds ``bands`` keys, so
+    # the rows are the same, but an inner explode of a column makes
+    # Catalyst infer ``size(bk) > 0`` and push it below the projection,
+    # inlining the whole shingle + signature pipeline once per
+    # signature element into a filter on the scan
     ev = prepared(held_out, "matched_id", "__sh_e", "__bk_e")
     ev_x = F.broadcast(cache_pinned(ev.select(
         "matched_id", "__sh_e", "__bk_e",
-        F.posexplode("__bk_e").alias("__band", "__bucket"))))
+        F.posexplode_outer("__bk_e").alias("__band", "__bucket"))))
 
     s_x = (prepared(df, id_col, "__sh_s", "__bk_s")
            .select(id_col, "__sh_s", "__bk_s",
-                   F.posexplode("__bk_s").alias("__band", "__bucket")))
+                   F.posexplode_outer("__bk_s").alias("__band", "__bucket")))
 
     # stateless candidate dedup: keep only the FIRST matching band of
     # each (doc, eval) pair — computable per row from the two arrays

@@ -20,8 +20,9 @@ PICK_NOTES = {
     "asof_latest_order": "Union + ONE Exchange feeding the Window; top-1 dedupe "
                          "collapses to WindowGroupLimit.",
     "minhash_dedup": "Banded LSH relation persisted (InMemoryTableScan on both "
-                     "join sides); shuffle keys are (band,bucket) / id pairs, "
-                     "never text.",
+                     "join sides) and signed from the pinned shingle sets, so "
+                     "the text is spread and shingled once; shuffle keys are "
+                     "(band,bucket) / id pairs, never text.",
     "corpus_curation": "One content-hash exchange for dedup; every later stage "
                        "is a JVM projection (no BatchEvalPython anywhere).",
     "late_shipment_priority": "EXISTS as LeftSemi: equi term is the shuffle key, "

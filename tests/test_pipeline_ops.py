@@ -3,6 +3,8 @@ plus recall checks against exhaustive tiers on the sf0.001 documents."""
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -1695,6 +1697,64 @@ def test_banded_composite_split_equals_operator_calls(docs):
     assert split_old == op_old
     assert split_new == op_cross | op_within
     assert split_new, "fixture must exercise the merge path"
+
+
+def _ref_word_shingles(doc: str | None, n: int) -> list[str]:
+    """word_shingles in plain Python: lower, strip SPACES only (Spark's
+    trim), split on ASCII whitespace runs keeping empty fields (Java's
+    ``split(regex, -1)``), slide an n-window, dedup in first-seen order;
+    a short or NULL document is one whole-doc shingle."""
+    toks = ([] if doc is None
+            else re.split(r"[ \t\n\x0b\f\r]+", doc.lower().strip(" ")))
+    grams = [" ".join(toks[i:i + n])
+             for i in range(max(len(toks) - n + 1, 1))]
+    return list(dict.fromkeys(grams))
+
+
+def test_word_shingles_matches_python_reference(spark):
+    """The bound-token-array kernel equals the Python reference on the
+    edge cases: NULL, empty, whitespace-only, a leading tab or newline
+    (trim strips spaces only, so split keeps a leading empty token),
+    1-2 tokens, repeated tokens and mixed whitespace."""
+    texts = [None, "", "   ", " \t ", "\tfoo bar baz", "\nfoo bar",
+             "one", "one two", "a a a a a", "x y x y x y",
+             "The  Quick\tbrown\n\nfox jumps OVER the lazy dog ",
+             "  padded words here  ", "trailing tab\t"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    for n in (1, 2, 3, 5):
+        got = {r["doc_id"]: r["sh"] for r in df.select(
+            "doc_id", dedup.word_shingles(F.col("text"), n).alias("sh"))
+            .collect()}
+        for i, t in enumerate(texts):
+            assert got[i] == _ref_word_shingles(t, n), (n, t)
+
+
+@pytest.mark.parametrize("deterministic", [False, True])
+def test_minhash_dedup_pairs_equals_operator_chain(docs, deterministic):
+    """minhash_dedup_pairs signs its pinned shingle sets; its rows equal
+    the chain built from the public pieces — minhash_signatures over the
+    text, lsh_candidate_pairs, exact verification — on both tiers."""
+    hash_fn = "md5" if deterministic else "xxhash64"
+    sig = dedup.minhash_signatures(docs, "text", "doc_id", 3, 64, 42,
+                                   hash_fn=hash_fn)
+    cands = dedup.lsh_candidate_pairs(sig, "doc_id", bands=16,
+                                      num_hashes=64,
+                                      hash_buckets=not deterministic)
+    sets = docs.select("doc_id",
+                       dedup.word_shingles(F.col("text"), 3).alias("sh"))
+    a = sets.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sets.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
+    n_common = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = (n_common.cast("double")
+           / (F.size("sh_a") + F.size("sh_b") - n_common))
+    want = sorted(tuple(r) for r in
+                  cands.join(a, "id_a").join(b, "id_b")
+                  .select("id_a", "id_b", jac.alias("jaccard"))
+                  .filter(F.col("jaccard") >= 0.5).collect())
+    got = sorted(tuple(r) for r in dedup.minhash_dedup_pairs(
+        docs, threshold=0.5, deterministic=deterministic).collect())
+    assert want and got == want
 
 
 def test_minhash_det_tier_equals_exact(docs):

@@ -119,11 +119,38 @@ PINNED_INTERNAL = [
 ]
 
 
-def normalize_plan(plan: str) -> str:
-    # final (post-AQE) plan only
-    plan = plan.split("== Initial Plan ==")[0]
-    out = []
+_INITIAL = "+- == Initial Plan =="
+
+
+def _final_plan_lines(plan: str) -> list[str]:
+    """The plan's lines without any AQE ``Initial Plan`` section.
+
+    An adaptive plan that has run renders its ``Final Plan`` and then its
+    ``Initial Plan`` as two children; a cached relation materialized
+    while the query was built nests such a pair inside the outer tree.
+    Each ``Initial Plan`` marker and the lines below it (indented past
+    the marker, with nothing but tree rails before it) are dropped; the
+    outer tree resumes at the first line that draws a node left of the
+    marker."""
+    out: list[str] = []
+    col = None
     for line in plan.splitlines():
+        if col is not None:
+            if len(line) > col and not line[:col + 1].strip(" :|"):
+                continue
+            col = None
+        at = line.find(_INITIAL)
+        if at >= 0 and not line[:at].strip(" :|"):
+            col = at
+            continue
+        out.append(line)
+    return out
+
+
+def normalize_plan(plan: str) -> str:
+    # final (post-AQE) plans only
+    out = []
+    for line in _final_plan_lines(plan):
         line = line.rstrip()
         line = re.sub(r"#\d+", "#N", line)                  # expr ids
         line = re.sub(r"plan_id=\d+", "plan_id=N", line)

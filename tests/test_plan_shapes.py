@@ -585,3 +585,60 @@ def test_no_accidental_data_sized_global_window(spark):
         f"data-sized global windows outside the whitelist: {offenders} — "
         f"use ordering.total_order_pos / global_running_sum / avg_ranks / "
         f"global_ntile, or whitelist with justification")
+
+
+def _distinct_physical_nodes(spark, df) -> list:
+    """Every node of the pre-execution physical plan once, descending
+    through adaptive wrappers and cached relations (``innerChildren``):
+    a cached relation read by several scans is one object, counted once."""
+    identity = spark._jvm.System.identityHashCode
+    seen, out = set(), []
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if identity(node) in seen:
+            continue
+        seen.add(identity(node))
+        out.append(node)
+        if node.nodeName() == "AdaptiveSparkPlan":
+            stack.append(node.executedPlan())
+            continue
+        for seq in (node.children(), node.innerChildren()):
+            stack.extend(seq.apply(i) for i in range(seq.size()))
+    return out
+
+
+def test_minhash_dedup_pairs_spreads_text_once(spark):
+    """The signature signs the pinned shingle sets, so the document text
+    crosses ONE round-robin exchange (a separate signature pass spread
+    and shingled it a second time)."""
+    from basic_data_fusion_spark.operators.dedup import minhash_dedup_pairs
+
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    spreads = [n for n in _distinct_physical_nodes(
+                   spark, minhash_dedup_pairs(docs, threshold=0.5))
+               if n.nodeName() == "Exchange"
+               and "RoundRobinPartitioning" in n.outputPartitioning().toString()
+               and "documents.parquet" in n.toString()]
+    assert len(spreads) == 1
+
+
+def test_fuzzy_gate_tokenizes_each_side_once(spark):
+    """The streaming fuzzy gate projects the shingles, then the signature
+    OF that column, and no inferred ``size(bucket array) > 0`` filter
+    inlines the pipeline below the projection: one ``split(`` per side
+    (held-out and stream)."""
+    from pyspark.sql import functions as F
+
+    from basic_data_fusion_spark.streaming.dedup import \
+        streaming_fuzzy_decontaminate
+
+    docs = spark.read.parquet(f"{SF0001}/documents.parquet")
+    gate = streaming_fuzzy_decontaminate(
+        docs, docs.filter(F.col("doc_id") % 7 == 0))
+    splits = 0
+    for node in _distinct_physical_nodes(spark, gate):
+        exprs = node.expressions()
+        splits += sum(exprs.apply(i).toString().count("split(")
+                      for i in range(exprs.size()))
+    assert splits == 2
