@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..caching import cache_pinned
 from ..session import local_frame
 
 # exact_quantiles_counts finishes on the driver at or below this many
@@ -465,8 +466,9 @@ def filtering_report(base_df: DataFrame, key: str,
 
     The reference re-reads every CSV per step (N+1 full scans × 5
     queries); here the joined base relation is cached once and each step
-    is a handful of aggregates over the cached plan."""
-    base_df = base_df.cache()
+    is a handful of aggregates over the cached plan (pinned, so
+    ``caching.release_cached`` frees it)."""
+    base_df = cache_pinned(base_df)
     impact = filter_impact_report(base_df, key, steps)
     breakdowns: dict[str, dict] = {
         "baseline": demographics_breakdown(base_df, key, age_col, sex_col, session_col)}

@@ -1680,13 +1680,13 @@ def source_overlap(df: DataFrame, source_col: str = "source",
     elif granularity == "shingle":
         toks = F.filter(tokens(F.coalesce(F.col(text_col), F.lit(""))),
                         lambda x: x != "")
-        base = (df.select(src, toks.alias("__t"))
-                .where(F.size("__t") >= n))
-        sh = F.transform(
-            F.sequence(F.lit(1), F.size("__t") - n + 1),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("__t"), i,
-                                                     F.lit(n)))))
-        keyed = base.select("__src", F.explode(sh).alias("__h"))
+        # tokens bound once; a doc with fewer than n tokens yields NULL,
+        # which the explode drops (a ``size >= n`` filter would be pushed
+        # below the projection and tokenize every document twice)
+        sh = let(toks, lambda t: F.when(F.size(t) >= n, F.transform(
+            F.sequence(F.lit(1), F.size(t) - n + 1),
+            lambda i: F.md5(F.concat_ws(" ", F.slice(t, i, F.lit(n)))))))
+        keyed = df.select(src, F.explode(sh).alias("__h"))
     else:
         raise ValueError(f"unknown granularity {granularity!r}")
     hashes = keyed.distinct()

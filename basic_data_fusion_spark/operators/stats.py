@@ -438,7 +438,8 @@ def kendall_tau_sample(df: DataFrame, col_a: str, col_b: str, max_n: int = 5000,
     tau-b (concordant/discordant pair counts with tie correction, O(n²)
     on the ≤``max_n`` sample) gives the identical statistic — the scipy
     gate is an optimization here, not a capability boundary."""
-    pdf = _bounded_sample(df.select(col_a, col_b).na.drop(), max_n, seed).toPandas()
+    pdf = uniform_sample(df.select(col_a, col_b).na.drop(), max_n,
+                         seed).toArrow().to_pandas()
     if _scipy_stats is not None:
         tau, _ = _scipy_stats.kendalltau(pdf[col_a], pdf[col_b])
         return float(tau)
@@ -486,13 +487,6 @@ def kendall_tau_sample(df: DataFrame, col_a: str, col_b: str, max_n: int = 5000,
     con_minus_dis = tot - n_a - n_b + n_ab - 2 * dis
     denom = math.sqrt(float(tot - n_a)) * math.sqrt(float(tot - n_b))
     return con_minus_dis / denom if denom else float("nan")
-
-
-def _bounded_sample(df: DataFrame, max_n: int, seed: int) -> DataFrame:
-    n = df.count()
-    if n <= max_n:
-        return df
-    return df.sample(fraction=min(1.0, 1.05 * max_n / n), seed=seed).limit(max_n)
 
 
 # ---------------- T1: OLS simple regression ----------------
@@ -615,8 +609,7 @@ def normality_tests(df: DataFrame, column: str, max_n: int = 5000, seed: int = 4
     ALWAYS (pure closed-form, n ≥ 8); Shapiro-Wilk (3≤n≤5000) and
     Anderson-Darling (n≥8) are scipy extras — present when the library
     is, omitted (not an error) when it isn't."""
-    vals = [r[0] for r in _bounded_sample(
-        df.select(F.col(column).cast("double")).na.drop(), max_n, seed).collect()]
+    vals = _sample_values(df, column, max_n, seed)
     out: dict = {"n": len(vals)}
     if len(vals) >= 8:
         k2, p = dagostino_k2(vals)
@@ -643,8 +636,7 @@ def kde_curve(df: DataFrame, column: str, bandwidth: str | float = "scott",
     _require_scipy()
     import numpy as np
 
-    vals = np.array([r[0] for r in _bounded_sample(
-        df.select(F.col(column).cast("double")).na.drop(), max_n, seed).collect()])
+    vals = _sample_values(df, column, max_n, seed)
     if len(vals) < 2:
         return [], []
     bw = bandwidth if isinstance(bandwidth, str) else bandwidth
@@ -782,6 +774,14 @@ def uniform_sample(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
     driver merge — no standalone count job, no full sort). The previous
     fraction-based form ran an eager df.count() per profiling sample."""
     return df.orderBy(F.rand(seed)).limit(n)
+
+
+def _sample_values(df: DataFrame, column: str, max_n: int, seed: int):
+    """``column`` as doubles, NULL/NaN dropped, ``uniform_sample``'d to at
+    most ``max_n`` values and collected through Arrow as a numpy array."""
+    sample = uniform_sample(df.select(F.col(column).cast("double").alias("v"))
+                            .na.drop(), max_n, seed)
+    return sample.toArrow().column(0).to_numpy()
 
 
 def grouped_normality(df: DataFrame, group_col: str, value_col: str,

@@ -913,32 +913,36 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     # cluster before the md5-heavy hashing; a corpus already wider than
     # the parallelism skips the repartition, so no text shuffle at scale
     df = spread_narrow(df)
-    base = (df.select(F.col(id_col), toks.alias("__t"))
-            .where(F.size("__t") >= k))
-    t = F.col("__t")
-    m_expr = (F.size(t) - k + 1).cast("int")
-    hs_expr = F.transform(
-        F.sequence(F.lit(1), m_expr),
-        lambda i: F.conv(F.substring(
-            F.md5(F.concat_ws(" ", F.slice(t, i, F.lit(k)))), 1, 8),
-            16, 10).cast("long"))
-    # materialize the hash array behind a projection boundary: window
+
+    def shingle_hashes(t):
+        return F.when(F.size(t) >= k, F.transform(
+            F.sequence(F.lit(1), F.size(t) - k + 1),
+            lambda i: F.conv(F.substring(
+                F.md5(F.concat_ws(" ", F.slice(t, i, F.lit(k)))), 1, 8),
+                16, 10).cast("long")))
+
+    # tokens bound once (``let``); a doc with fewer than k tokens hashes
+    # to NULL, which the explode below drops (a ``size >= k`` filter would
+    # be pushed below this projection and tokenize every document twice).
+    # The hash array materializes behind the projection boundary: window
     # slices below would otherwise RE-EVALUATE the whole md5 array per
     # window (no common-subexpression elimination inside lambdas) —
     # O(m²) hashing, measured 124 s vs ~2 s at sf0.1
-    hashed = base.select(F.col(id_col), hs_expr.alias("__hs"),
-                         m_expr.alias("__m"))
-    hs, m = F.col("__hs"), F.col("__m")
-    numw = F.greatest(m - w + 1, F.lit(1))
+    hashed = df.select(F.col(id_col), let(toks, shingle_hashes).alias("__hs"))
+    hs = F.col("__hs")
 
-    def pick(j):
-        s = F.slice(hs, j, F.least(F.lit(w), m - j + 1))
-        mn = F.array_min(s)
-        rel = F.size(s) + 1 - F.array_position(F.reverse(s), mn)
-        return F.struct((j + rel - 1).cast("int").alias("pos"),
-                        mn.alias("fp"))
+    def windows(m):
+        def pick(j):
+            s = F.slice(hs, j, F.least(F.lit(w), m - j + 1))
+            mn = F.array_min(s)
+            rel = F.size(s) + 1 - F.array_position(F.reverse(s), mn)
+            return F.struct((j + rel - 1).cast("int").alias("pos"),
+                            mn.alias("fp"))
 
-    wins = F.array_distinct(F.transform(F.sequence(F.lit(1), numw), pick))
+        numw = F.greatest(m - w + 1, F.lit(1))
+        return F.array_distinct(F.transform(F.sequence(F.lit(1), numw), pick))
+
+    wins = F.when(hs.isNotNull(), let(F.size(hs), windows))
     return (hashed.select(F.col(id_col), F.explode(wins).alias("__sel"))
             .select(id_col, F.col("__sel.pos").alias("pos"),
                     F.col("__sel.fp").alias("fp")))

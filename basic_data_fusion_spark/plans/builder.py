@@ -20,6 +20,18 @@ Scale design (100 TB notes):
   aggregate and an exchange. Unfiltered spoke tables cannot change the
   count and are skipped entirely (join-set minimization, reference:
   query/callbacks/export.py:75-87).
+- **The merged row-set is pinned** (reference: the EP2 merge runs once
+  into ``merged-dataframe-store`` and the report pages reuse it).
+  :meth:`PlanBuilder.dataframe` registers the joined, filtered,
+  projected relation with :func:`caching.cache_pinned`; it stays lazy,
+  the first action fills the cache and every later action reads the
+  in-memory scan. A report page runs several aggregates on one cohort,
+  and without the pin each re-ran the hub scan, the broadcast jobs of
+  the filtered hub and the dimension spokes, the spoke scan and the
+  join — and recompiled its generated code, because Spark writes the
+  filter's double literals into it. A consumer that makes one pass pays
+  for building the cache; the cohort is freed by ``release_cached``.
+  ``preview`` and ``count_distinct_df`` read no pinned data.
 - Nothing is collected; callers choose the action.
 """
 
@@ -31,6 +43,7 @@ from operator import and_
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import cache_pinned
 from ..catalog import Catalog
 from ..functions.scalars import coerce_bool_value, site_whole_word_match
 from .spec import BehavioralFilter, QuerySpec
@@ -149,9 +162,22 @@ class PlanBuilder:
                 add(t, c)
         return cols
 
-    def dataframe(self) -> DataFrame:
-        """The flagship merged row-set (reference EP2)."""
+    def _merged(self) -> DataFrame:
         return self.filtered().select(*self.projection())
+
+    def dataframe(self) -> DataFrame:
+        """The flagship merged row-set (reference EP2), pinned on first use.
+
+        The relation is registered with ``caching.cache_pinned`` and is
+        still lazy: the first action fills the cache, later actions read
+        ``InMemoryTableScan`` — no second hub or spoke scan, no broadcast
+        job, and generated code that holds none of the filter's literals.
+        The cache keeps the lineage, so evicted or lost blocks are
+        recomputed. A single-pass consumer (one write, one collect) pays
+        for building the cache; ``caching.release_cached()`` unpersists
+        the cohort. Two calls with one spec share one cache entry (Spark
+        matches the plans)."""
+        return cache_pinned(self._merged())
 
     # ---------------- count plan (A1), semi-join rewrite ----------------
     def count_distinct_df(self) -> DataFrame:
@@ -185,5 +211,8 @@ class PlanBuilder:
         return self.count_distinct_df().first()["n_participants"]
 
     def preview(self, n: int = 50) -> DataFrame:
-        """Bounded preview (reference: core/config.py:80 max_display_rows)."""
-        return self.dataframe().limit(n)
+        """Bounded preview (reference: core/config.py:80 max_display_rows).
+        Not pinned: LIMIT stops the scan early, where a cache fills whole
+        partitions. When this spec's cohort is already pinned, Spark's
+        cache manager substitutes the cache anyway."""
+        return self._merged().limit(n)

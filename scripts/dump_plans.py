@@ -10,7 +10,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PICK_NOTES = {
-    "flagship_merge": "PushedFilters reach the scan; dimension sides broadcast; "
+    "flagship_merge": "Pinned on first use: the action reads InMemoryTableScan, "
+                      "and the cached relation's plan keeps the join: "
+                      "PushedFilters reach the scan; dimension sides broadcast; "
                       "LEFT joins rewritten to INNER by null-rejecting predicates.",
     "participant_count": "Spoke predicates become LeftSemi joins (no fan-out) "
                          "on the spoke as filtered, with no key dedup; the "
@@ -91,15 +93,18 @@ PICK_NOTES = {
                                 "Python evaluator.",
     "winnow_fingerprints": "Shingle-hash array materializes ONCE per row "
                            "behind a projection boundary (lambda bodies "
-                           "get no CSE — inline reuse was O(m²) md5); the "
-                           "only explode is the winnowed selection.",
+                           "get no CSE — inline reuse was O(m²) md5) from "
+                           "tokens bound once (no size filter pushed "
+                           "below it); the only explode is the winnowed "
+                           "selection.",
     "mutual_info_priority_status": "Fact table reduces to R×C cells in "
                                    "the FIRST aggregation; marginals, "
                                    "totals and libm terms are all "
                                    "dimension-sized.",
     "source_overlap": "Corpus reduces to distinct (source, shingle-hash) "
-                      "rows; the pair join shuffles hashes only; "
-                      "per-source totals broadcast.",
+                      "rows, tokenizing each document once; the pair "
+                      "join shuffles hashes only; per-source totals "
+                      "broadcast.",
     "grouped_ols_events": "ONE aggregation of fixed-point sufficient "
                           "statistics; fits are pure projections over "
                           "the grouped row.",

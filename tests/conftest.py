@@ -38,3 +38,21 @@ def duckdb_con(sf_dir: str):
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+def jobs_run(spark, fn):
+    """``(fn(), status-store records of every Spark job fn ran)``: fn runs
+    under a fresh job group, and the listener bus is drained before the
+    group's jobs are read."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    return out, [store.job(j) for j in sc.statusTracker().getJobIdsForGroup(group)]

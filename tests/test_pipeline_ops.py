@@ -201,6 +201,24 @@ def test_filtering_report_composite(spark):
     assert segs <= {"AUTOMOBILE", "BUILDING"}
 
 
+def test_filtering_report_pins_its_base(spark):
+    """The report's cached base relation is registered with the caching
+    module, so ``release_cached`` frees it."""
+    from basic_data_fusion_spark.caching import pinned_count, release_cached
+    from basic_data_fusion_spark.operators.aggregations import filtering_report
+    from tests.conftest import SF0001
+
+    release_cached()
+    cust = spark.read.parquet(f"{SF0001}/customer.parquet")
+    rep = filtering_report(cust, "c_custkey",
+                           [("segment", F.col("c_mktsegment") == "BUILDING")])
+    assert pinned_count() == 1
+    rep["impact"].collect()
+    assert cust.storageLevel.useMemory
+    assert release_cached() == 1
+    assert not cust.storageLevel.useMemory and pinned_count() == 0
+
+
 def test_line_dedup_corpus_boilerplate(spark):
     """A line in ≥2 distinct docs is removed everywhere (even its
     within-doc repeats); within-doc-only repetition and blank lines
@@ -2568,6 +2586,36 @@ def test_cache_pinned_lifecycle(spark):
     released = release_cached()
     assert released >= 2 and pinned_count() == 0
     assert spark.sparkContext._jsc.getPersistentRDDs().size() <= jvm_rdds
+
+
+def test_flagship_cohort_pinned_once(spark):
+    """``PlanBuilder.dataframe()`` pins the merged cohort: after the first
+    action a second aggregate reads the cache (no broadcast job, at most
+    a map and a result job); two calls with one spec share one cache
+    entry; ``release_cached`` unpersists it."""
+    import __spark_entry__ as entrymod
+    from basic_data_fusion_spark.caching import release_cached
+    from tests.conftest import SF0001, jobs_run
+
+    release_cached()
+    spark.catalog.clearCache()
+    jvm_rdds = spark.sparkContext._jsc.getPersistentRDDs().size()
+    df = entrymod.queries()["flagship_merge"](spark, SF0001)
+    _, first = jobs_run(spark, lambda: df.agg(F.count("*")).collect())
+    _, second = jobs_run(spark, lambda: df.agg(F.max("o_totalprice")).collect())
+
+    def broadcasts(jobs):
+        return [j for j in jobs if "broadcast exchange"
+                in str(j.jobTags().mkString("|"))]
+
+    assert broadcasts(first), "the first action builds the cohort"
+    assert not broadcasts(second) and len(second) <= 2
+    again = entrymod.queries()["flagship_merge"](spark, SF0001)
+    assert again.count() == df.count()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == jvm_rdds + 1
+    assert release_cached() == 2
+    assert not df.storageLevel.useMemory
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == jvm_rdds
 
 
 def test_ann_recall_guards(spark):

@@ -11,6 +11,7 @@ import pytest
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF0001
+from tests.test_plan_golden import _final_plan_lines
 
 
 @pytest.fixture(autouse=True)
@@ -27,6 +28,13 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _final_only(plan: str) -> str:
+    """``plan`` without its AQE ``Initial Plan`` sections: the outer one
+    and each one nested under a materialized cached relation, whose
+    final plan stays (the golden pins' normalization)."""
+    return "\n".join(_final_plan_lines(plan))
+
+
 def test_flagship_pushdown_pruning_broadcast(spark):
     df = entrymod.queries()["flagship_merge"](spark, SF0001)
     plan = _final_plan(df)
@@ -40,9 +48,31 @@ def test_flagship_pushdown_pruning_broadcast(spark):
         assert "c_comment" not in m.group(1), "unprojected column read from disk"
 
 
+def test_flagship_cohort_pinned_keeps_pushdown(spark):
+    """The merged cohort is pinned: after one action a second action
+    reads ``InMemoryTableScan``, and the spec predicates still reach the
+    parquet scan inside the cached relation's plan. The preview of a
+    cohort that is not cached reads no cached relation (its LIMIT stops
+    the scan early)."""
+    from pyspark.sql import functions as F
+
+    builder = entrymod._builder(spark, SF0001)
+    preview = _final_only(_final_plan(builder.preview(5)))
+    assert "InMemoryRelation" not in preview
+    df = entrymod.queries()["flagship_merge"](spark, SF0001)
+    df.count()
+    plan = _final_only(_final_plan(df.agg(F.max("o_totalprice"))))
+    assert "InMemoryTableScan" in plan
+    cached = plan[plan.index("InMemoryRelation"):]
+    pushed = re.findall(r"PushedFilters: \[([^\]]+)\]", cached)
+    assert any("c_acctbal" in p for p in pushed), \
+        "spec predicates must reach the scan inside the cached plan"
+    assert any("o_orderstatus" in p for p in pushed)
+
+
 def test_participant_count_semi_join_single_distinct_exchange(spark):
     df = entrymod.queries()["participant_count"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert "LeftSemi" in plan, "spoke filters must become semi-joins (no fan-out)"
     # a semi join emits each hub row at most once, so nothing below it
     # aggregates (no spoke-key dedup on the build side), and the only
@@ -372,7 +402,7 @@ def test_hll_band_gate_single_aggregation(spark):
     (AdaptiveSparkPlan.toString appends the pre-AQE '== Initial Plan =='
     section — count operators in the final section only.)"""
     df = entrymod.queries()["hll_distinct_orders"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert plan.count("FileScan") == 1
     assert "Expand" in plan  # multi-column distinct planned in one pass
 
@@ -396,7 +426,7 @@ def test_dedup_impact_sweep_single_pair_scan(spark):
     against a threshold table on the pair side), totals arrive via
     broadcast, and nothing drops to Python."""
     df = entrymod.queries()["dedup_impact_sweep"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert "Generate explode" in plan, "thresholds must explode from a literal array"
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
@@ -409,7 +439,7 @@ def test_embedding_outliers_broadcast_and_slim_window(spark):
     (label, cosine, id) triples: the embedding array is projected away
     before the window exchange, so vectors never shuffle twice."""
     df = entrymod.queries()["embedding_outliers"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert "BroadcastHashJoin" in plan, "centroid join must broadcast"
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     m = re.search(r"Window \[[^\]]*\]", plan)
@@ -422,7 +452,7 @@ def test_curation_v3_semi_join_dedup_no_python(spark):
     (documents join a keep-set of ids, never shuffle by content), and
     the whole gate->dedup->interleave chain stays JVM-side."""
     df = entrymod.queries()["corpus_curation_v3"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert "LeftSemi" in plan, "dedup keep-set must apply as a semi-join"
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan
@@ -434,7 +464,7 @@ def test_decontam_window_sweep_broadcast_probe(spark):
     corpus, so that probe must be a broadcast join, and nothing drops
     to Python."""
     df = entrymod.queries()["decontam_window_sweep"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert "BroadcastHashJoin" in plan, "held-out keys must broadcast"
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "Generate explode" in plan
@@ -444,7 +474,7 @@ def test_shard_manifest_map_only_single_agg(spark):
     """The manifest is one map-only projection feeding one 16-group
     aggregation — a single fact scan, no join, no Python."""
     df = entrymod.queries()["shard_manifest"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert plan.count("FileScan") == 1
     assert "Join" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
@@ -455,7 +485,7 @@ def test_attribute_spans_df_cap_before_probe(spark):
     (a semi-join against the df-capped window set) and the per-query
     totals must broadcast — never a shuffled join keyed on totals."""
     df = entrymod.queries()["attribute_spans"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert re.search(r"Join.*LeftSemi", plan) or "LeftSemi" in plan, \
         "df cap must apply as a semi-join on window hashes"
     assert "BroadcastHashJoin" in plan, "query totals must broadcast"
@@ -468,7 +498,7 @@ def test_interleave_gate_broadcast_totals(spark):
     single-row totals as BroadcastNestedLoopJoin is the scalar idiom),
     with no Python anywhere."""
     df = entrymod.queries()["interleave_gate"](spark, SF0001)
-    plan = _final_plan(df).split("== Initial Plan ==")[0]
+    plan = _final_only(_final_plan(df))
     assert "Broadcast" in plan
     assert "CartesianProduct" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
@@ -486,7 +516,7 @@ def test_distributed_serve_no_data_sized_global_window(spark):
         df = entrymod.queries()[name](spark, SF0001)
         df.collect()  # materialize the checkpointed range shuffle
         plan = df._jdf.queryExecution().executedPlan().toString()
-        plan = plan.split("== Initial Plan ==")[0]
+        plan = _final_only(plan)
         windows = [ln for ln in plan.splitlines() if "Window [" in ln]
         assert windows, f"{name}: expected window nodes"
         for ln in windows:
@@ -509,7 +539,7 @@ def test_sharded_serve_no_global_window(spark):
     for name in ("interleave_order_sharded", "interleave_gate_sharded",
                  "curriculum_order_sharded", "pack_sequences_sharded"):
         df = entrymod.queries()[name](spark, SF0001)
-        plan = _final_plan(df).split("== Initial Plan ==")[0]
+        plan = _final_only(_final_plan(df))
         windows = [ln for ln in plan.splitlines() if "Window [" in ln]
         assert windows, f"{name}: expected window nodes in the plan"
         for ln in windows:
@@ -642,3 +672,22 @@ def test_fuzzy_gate_tokenizes_each_side_once(spark):
         splits += sum(exprs.apply(i).toString().count("split(")
                       for i in range(exprs.size()))
     assert splits == 2
+
+
+def test_shingle_overlaps_tokenize_each_scan_once(spark):
+    """``winnow_fingerprints`` (under ``winnow_overlap_pairs``) and the
+    shingle tier of ``source_overlap`` bind each document's tokens once:
+    no ``size(tokens) >= k`` filter is pushed below the projection to
+    split the text a second time, so every document scan feeds exactly
+    one ``split(``."""
+    for name in ("winnow_overlap_pairs", "source_overlap"):
+        df = entrymod.queries()[name](spark, SF0001)
+        nodes = _distinct_physical_nodes(spark, df)
+        scans = sum(1 for n in nodes if n.nodeName() == "Scan parquet "
+                    and "documents" in n.toString())
+        splits = 0
+        for node in nodes:
+            exprs = node.expressions()
+            splits += sum(exprs.apply(i).toString().count("split(")
+                          for i in range(exprs.size()))
+        assert scans >= 1 and splits == scans, (name, scans, splits)

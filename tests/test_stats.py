@@ -166,6 +166,21 @@ def test_scipy_gated_paths_raise_cleanly(num_df):
     assert stats.one_way_anova(df, "g", "x")["p_value"] is None
 
 
+def test_sampled_stats_draw_without_a_count(spark):
+    """``normality_tests`` samples with ``uniform_sample``: exactly
+    min(n, max_n) values, one job (a count, then a fractional sample and
+    a limit ran three), and the same sample for the same seed."""
+    from tests.conftest import SF0001, jobs_run
+
+    df = spark.read.parquet(f"{SF0001}/orders.parquet")
+    n = df.count()
+    nt, jobs = jobs_run(spark, lambda: stats.normality_tests(
+        df, "o_totalprice", max_n=500))
+    assert nt["n"] == 500 and len(jobs) == 1
+    assert stats.normality_tests(df, "o_totalprice", max_n=500) == nt
+    assert stats.normality_tests(df, "o_totalprice", max_n=10 * n)["n"] == n
+
+
 def test_dagostino_k2_semantics(spark):
     """Closed-form K² omnibus (no scipy): near-normal data passes, a
     hard-skewed sample fails decisively; grouped_normality populates the
